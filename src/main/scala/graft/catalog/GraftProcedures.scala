@@ -30,10 +30,12 @@ import graft.sources.GraftSource
  * catalog (the same warehouse mapping + LOCATION redirect as table
  * resolution), runs the library maintenance call, and returns a
  * one-row result (a driver-local scan — the outputs are counters and
- * snapshot ids, metadata-scale by construction). Compaction picks the
- * layout-preserving form automatically: a hive-partitioned snapshot
- * compacts per partition value, everything else into
- * size-targeted flat files.
+ * snapshot ids, metadata-scale by construction). `compact` and
+ * `zorder` are argument checkers over the one entry point
+ * [[graft.io.Manifest.compact]]: they resolve the layout (declared
+ * partitioning, else the snapshot's uniform hive layout), so a
+ * hive-partitioned table compacts per partition value (or clusters
+ * within it) and everything else into size-targeted flat files.
  */
 private[catalog] object GraftProcedures {
 
@@ -85,6 +87,60 @@ private[catalog] object GraftProcedures {
       }
   }
 
+  /** CALL compact / CALL zorder output: the new snapshot and the
+    * table's file count in it. */
+  private val CompactSchema = new StructType()
+    .add("snapshot", StringType).add("files", LongType)
+
+  private val DefaultTargetFileBytes = 128L * 1024 * 1024
+
+  /** `where_partition => 'k=v[,k2=v2]'`: the hive partitions a
+    * compaction is scoped to (empty = the whole table). */
+  private def wherePartition(args: InternalRow, i: Int): Map[String, String] =
+    if (args.isNullAt(i)) Map.empty
+    else {
+      val eq = args.getUTF8String(i).toString.split(',').toSeq
+        .map(_.trim).filter(_.nonEmpty)
+        .map { kv =>
+          val at = kv.indexOf('=')
+          require(at > 0, s"graft catalog: malformed where_partition " +
+            s"entry '$kv' (expected k=v)")
+          kv.substring(0, at).trim -> kv.substring(at + 1).trim
+        }.toMap
+      require(eq.nonEmpty,
+        "graft catalog: where_partition needs at least one k=v entry")
+      eq
+    }
+
+  /** The layout a compaction lands. DECLARED partitioning wins: a
+    * mixed-layout snapshot (e.g. a path append without partitionBy)
+    * must compact BACK to the declared layout, repairing the demotion,
+    * never finalizing it. Else the current snapshot's uniform layout. */
+  private def layoutOf(spark: SparkSession, dir: String,
+      declared: Seq[String]): Seq[String] =
+    if (declared.nonEmpty) declared
+    else GraftSource.uniformPartitionColsOf(spark, dir)
+
+  /** The shared body of CALL compact and CALL zorder: one
+    * [[Manifest.compact]] commit, reported as the new snapshot and the
+    * table's file count in it. */
+  private def compactTable(spark: SparkSession, dir: String, snap: String,
+      target: Long, clusterBy: Seq[String], where: Map[String, String],
+      partCols: Seq[String]): java.util.Iterator[Scan] = {
+    // Nil = no layout known here (flat or mixed): the core reads the
+    // rewritten files' own layout, so a scoped compaction of a mixed
+    // table still finds the hive tree of the files it matched
+    val res = Manifest.compact(spark, dir, snap, target, clusterBy, where,
+      Some(partCols).filter(_.nonEmpty))
+    require(res.committed.isDefined,
+      s"graft catalog: no files match where_partition " +
+        s"${where.map { case (k, v) => s"$k=$v" }.mkString(",")}")
+    spark.catalog.refreshByPath(dir)
+    val files = Manifest.history(spark, dir).find(_.snapshot == snap).get
+      .files.size.toLong
+    result(CompactSchema, UTF8String.fromString(snap), files)
+  }
+
   def all(cat: GraftCatalog): Map[String, UnboundProcedure] = Map(
     "compact" -> new TableProcedure(cat, "compact",
       "compact the current snapshot (layout-preserving) into a new commit") {
@@ -98,57 +154,28 @@ private[catalog] object GraftProcedures {
         // hive partitions, carrying every other file by reference —
         // the daily hot-partition maintenance move
         inDefault("where_partition", StringType, "null"))
-      override val outSchema = new StructType()
-        .add("snapshot", StringType).add("files", LongType)
+      override val outSchema = CompactSchema
       override def run(spark: SparkSession, dir: String,
           declaredPartCols: Seq[String],
           args: InternalRow): java.util.Iterator[Scan] = {
-        val snap = s"compact${System.currentTimeMillis()}"
         val target = args.getLong(1)
         require(target == -1L || target > 0,
           s"graft catalog: target_file_bytes must be positive, got $target")
-        val whereEq: Option[Map[String, String]] =
-          if (args.isNullAt(2)) None
-          else Some(args.getUTF8String(2).toString.split(',').toSeq
-            .map(_.trim).filter(_.nonEmpty)
-            .map { kv =>
-              val i = kv.indexOf('=')
-              require(i > 0, s"graft catalog: malformed where_partition " +
-                s"entry '$kv' (expected k=v)")
-              kv.substring(0, i).trim -> kv.substring(i + 1).trim
-            }.toMap)
-        whereEq.foreach(m => require(m.nonEmpty,
-          "graft catalog: where_partition needs at least one k=v entry"))
-        // DECLARED partitioning wins (a mixed-layout snapshot — e.g. a
-        // path append without partitionBy — must compact BACK to the
-        // declared layout, repairing the demotion, never finalizing it)
-        val partCols =
-          if (declaredPartCols.nonEmpty) declaredPartCols
-          else GraftSource.uniformPartitionColsOf(spark, dir)
-        val files = whereEq match {
-          case Some(eq) =>
-            require(target == -1L,
-              "graft catalog: where_partition compaction writes one file " +
-                "per matched partition value; target_file_bytes is not " +
-                "configurable on this form")
-            val res = Manifest.compactWherePartitions(spark, dir, snap, eq)
-            require(res.committed.isDefined,
-              s"graft catalog: no files match where_partition " +
-                s"${eq.map { case (k, v) => s"$k=$v" }.mkString(",")}")
-            // same meaning as the other branches: the table's file
-            // count AFTER the compaction (not the rewritten-input count)
-            Manifest.history(spark, dir).last.files.size.toLong
-          case None if partCols.nonEmpty =>
-            require(target == -1L,
-              "graft catalog: compact on a hive-partitioned table writes " +
-                "one file per partition value; target_file_bytes is not " +
-                "configurable on this layout")
-            Manifest.compactPartitioned(spark, dir, snap, partCols)
-          case None => Manifest.compact(spark, dir, snap,
-            if (target == -1L) 128L * 1024 * 1024 else target)
+        val where = wherePartition(args, 2)
+        val partCols = layoutOf(spark, dir, declaredPartCols)
+        if (target != -1L) {
+          require(where.isEmpty,
+            "graft catalog: where_partition compaction writes one file " +
+              "per matched partition value; target_file_bytes is not " +
+              "configurable on this form")
+          require(partCols.isEmpty,
+            "graft catalog: compact on a hive-partitioned table writes " +
+              "one file per partition value; target_file_bytes is not " +
+              "configurable on this layout")
         }
-        spark.catalog.refreshByPath(dir)
-        result(outSchema, UTF8String.fromString(snap), files)
+        compactTable(spark, dir, s"compact${System.currentTimeMillis()}",
+          if (target == -1L) DefaultTargetFileBytes else target, Nil, where,
+          partCols)
       }
     },
     "zorder" -> new TableProcedure(cat, "zorder",
@@ -160,13 +187,12 @@ private[catalog] object GraftProcedures {
         // declared `CLUSTER BY` (the liquid-clustering cadence:
         // declare once, CALL zorder applies it every maintenance pass)
         inDefault("columns", StringType, "null"),
-        inDefault("target_file_bytes", LongType, (128L * 1024 * 1024).toString),
+        inDefault("target_file_bytes", LongType, DefaultTargetFileBytes.toString),
         // OPTIMIZE … WHERE … ZORDER BY: "k=v[,k2=v2]" clusters ONLY the
         // matching hive partitions, carrying every other file by
         // reference — the nightly hot-partition move with tight bounds
         inDefault("where_partition", StringType, "null"))
-      override val outSchema = new StructType()
-        .add("snapshot", StringType).add("files", LongType)
+      override val outSchema = CompactSchema
       override def run(spark: SparkSession, dir: String,
           declaredPartCols: Seq[String],
           args: InternalRow): java.util.Iterator[Scan] = {
@@ -190,44 +216,14 @@ private[catalog] object GraftProcedures {
         val target = args.getLong(2)
         require(target > 0,
           s"graft catalog: target_file_bytes must be positive, got $target")
-        val whereEq: Option[Map[String, String]] =
-          if (args.isNullAt(3)) None
-          else Some(args.getUTF8String(3).toString.split(',').toSeq
-            .map(_.trim).filter(_.nonEmpty)
-            .map { kv =>
-              val i = kv.indexOf('=')
-              require(i > 0, s"graft catalog: malformed where_partition " +
-                s"entry '$kv' (expected k=v)")
-              kv.substring(0, i).trim -> kv.substring(i + 1).trim
-            }.toMap)
-        whereEq.foreach(m => require(m.nonEmpty,
-          "graft catalog: where_partition needs at least one k=v entry"))
-        val snap = s"zorder${System.currentTimeMillis()}"
-        // layout-preserving: a hive-partitioned table clusters WITHIN
-        // its partition tree (declared partitioning wins, repairing a
-        // mixed layout exactly as CALL compact does)
-        val partCols =
-          if (declaredPartCols.nonEmpty) declaredPartCols
-          else GraftSource.uniformPartitionColsOf(spark, dir)
+        val where = wherePartition(args, 3)
+        val partCols = layoutOf(spark, dir, declaredPartCols)
         require(cols.forall(c => !partCols.contains(c)),
           s"graft catalog: cluster columns ${cols.mkString(", ")} must not " +
             s"include partition columns (${partCols.mkString(", ")}) - " +
             "partition values are already path-exact")
-        val files = whereEq match {
-          case Some(eq) =>
-            val res = Manifest.compactClusteredWherePartitions(
-              spark, dir, snap, eq, target, cols)
-            require(res.committed.isDefined,
-              s"graft catalog: no files match where_partition " +
-                s"${eq.map { case (k, v) => s"$k=$v" }.mkString(",")}")
-            Manifest.history(spark, dir).last.files.size.toLong
-          case None if partCols.nonEmpty =>
-            Manifest.compactClusteredPartitioned(
-              spark, dir, snap, target, cols, partCols)
-          case None => Manifest.compactClustered(spark, dir, snap, target, cols)
-        }
-        spark.catalog.refreshByPath(dir)
-        result(outSchema, UTF8String.fromString(snap), files)
+        compactTable(spark, dir, s"zorder${System.currentTimeMillis()}",
+          target, cols, where, partCols)
       }
     },
     "vacuum" -> new TableProcedure(cat, "vacuum",

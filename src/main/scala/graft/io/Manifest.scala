@@ -492,8 +492,8 @@ object Manifest {
     * ([[deleteRange]]), the matching rows' (file, row-index) pairs land
     * as a small `deletes-<snapshot>/` parquet and the commit carries
     * the SAME data files plus the delete list. Readers anti-join the
-    * delete set (broadcast — it is small by design); [[compact]] /
-    * [[compactClustered]] purge deletes back into a clean snapshot.
+    * delete set (broadcast — it is small by design); [[compact]]
+    * purges deletes back into a clean snapshot.
     * Deleting a few thousand rows from a 100 TB table writes KILOBYTES,
     * not a rewrite of every touched file. Prune, literal space, and
     * NULL semantics are exactly [[deleteRange]]'s; time travel to the
@@ -763,31 +763,44 @@ object Manifest {
 
   /** Default per-file landing target (in OPTIMIZER-ESTIMATED bytes;
     * parquet compression makes the on-disk file a factor smaller).
-    * Override with `spark.graft.write.targetFileBytes`. */
+    * Override with [[TargetFileBytesKey]]. */
   private val DefaultTargetFileBytes = 64L << 20
+  private val TargetFileBytesKey = "spark.graft.write.targetFileBytes"
 
   /** Output file sizing at the landing choke points: coalesce the
     * outgoing frame so each write task carries roughly
     * `spark.graft.write.targetFileBytes` of estimated data instead of
-    * landing one near-empty part file per upstream partition — a small
-    * commit lands ONE file, a large commit still lands many. The
-    * estimate is the optimizer's `sizeInBytes`, which on join-derived
-    * plans OVER-estimates — an over-estimate only keeps more
-    * partitions (coalesce never raises the count), so the floor is
-    * safe in both directions. Scale-adaptive by construction: the file
-    * count derives from data size, not from the session's core count.
+    * landing one near-empty part file per upstream partition. The
+    * coalesce keeps a floor of 16 partitions (see below), so a small
+    * commit lands at most 16 files — fewer only when its frame already
+    * has fewer partitions — and a large commit lands about one file
+    * per target. The estimate is the optimizer's `sizeInBytes`, which
+    * on join-derived plans OVER-estimates — an over-estimate only keeps
+    * more partitions (coalesce never raises the count), so the sizing
+    * is safe in both directions. Scale-adaptive by construction: the
+    * file count derives from data size, not from the session's core
+    * count.
     *
     * A caller that EXPLICITLY laid out its frame keeps that layout:
-    * compaction's ceil(bytes/target) split, the range-clustered zorder
-    * rewrite, and fixtures landing N range-clustered files for
-    * data-skipping demonstrations all repartition immediately below
-    * the write, so the sizer walks through the order-preserving
-    * wrappers this file adds (column-mapping Project, constraint-gate
-    * CollectMetrics, within-partition Sort) and backs off when it
-    * finds a RepartitionOperation. */
+    * [[compact]] (its ceil(bytes/target) split, its one-file-per-value
+    * partitioned shuffle and its range-clustered zorder rewrite) and
+    * fixtures landing N range-clustered files for data-skipping
+    * demonstrations all repartition immediately below the write, so the
+    * sizer walks through the order-preserving wrappers this file adds
+    * (column-mapping Project, constraint-gate CollectMetrics,
+    * within-partition Sort) and backs off when it finds a
+    * RepartitionOperation. Compaction RELIES on that back-off: a
+    * wrapper the walk does not know would let the coalesce merge the
+    * compaction's layout away. */
   private def sizeForLanding(df: DataFrame,
       knownDiskBytes: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical._
+    val target = df.sparkSession.conf.getOption(TargetFileBytesKey)
+      .fold(DefaultTargetFileBytes) { v =>
+        v.trim.toLongOption.filter(_ > 0).getOrElse(
+          throw new IllegalArgumentException(
+            s"$TargetFileBytesKey must be a positive byte count, got '$v'"))
+      }
     @annotation.tailrec
     def explicitLayout(p: LogicalPlan): Boolean = p match {
       case _: RepartitionOperation => true
@@ -801,9 +814,6 @@ object Manifest {
     val analyzed = df.queryExecution.analyzed
     if (explicitLayout(analyzed)) df
     else {
-      val target = df.sparkSession.conf
-        .getOption("spark.graft.write.targetFileBytes")
-        .map(_.toLong).getOrElse(DefaultTargetFileBytes)
       // Preferred estimate: the caller's KNOWN on-disk byte count (a DML
       // rewrite knows exactly which files it re-packs), inflated ×4 for
       // parquet-encoded → in-memory width. Fallback: analyzed-plan
@@ -1566,8 +1576,8 @@ object Manifest {
     abs
   }
 
-  /** Result of a copy-on-write [[deleteRange]]/[[updateRange]] commit:
-    * which files were rewritten vs carried untouched, and the new
+  /** Result of a copy-on-write [[deleteRange]]/[[updateRange]]/[[compact]]
+    * commit: which files were rewritten vs carried untouched, and the new
     * snapshot's id (None = the prune proved NO file could match — the
     * table is untouched, no commit). */
   final case class CowRewrite(rewritten: Seq[String], carried: Seq[String],
@@ -1735,200 +1745,87 @@ object Manifest {
       })
   }
 
-  /** Compact the current snapshot into ceil(bytes/target) files AS A NEW
-    * SNAPSHOT — same bytes, fewer files, and unlike
-    * [[TableIO.compactDir]] the swap has no race: readers resolve either
-    * manifest, each pointing at a complete file set. */
+  /** Compaction — the ONE maintenance rewrite behind `CALL compact`,
+    * `CALL zorder` and the streaming cadence's auto-maintenance: re-pack
+    * the current snapshot's files AS A NEW SNAPSHOT — same rows, fewer
+    * files — and, unlike [[TableIO.compactDir]], swap with no race:
+    * readers resolve either manifest, each pointing at a complete file
+    * set. Position deletes are applied on the way through, so the
+    * rewritten files carry no MOR state, and the commit is flagged
+    * `rewrite` with an empty change record (a re-pack changes no
+    * logical row).
+    *
+    *  - `partitionBy`: the layout the rewrite lands. None = the rewritten
+    *    files' own uniform hive layout (flat when flat or mixed), so a
+    *    hive-partitioned table keeps its `col=value/` tree and every
+    *    partition-exact read ([[readWherePartitions]]) keeps working.
+    *  - `clusterBy`: range-cluster on these columns (`OPTIMIZE … ZORDER
+    *    BY`): every file's min/max bounds become tight on them, which is
+    *    what turns the exports' data skipping ([[DeltaLog.readPruned]],
+    *    [[IcebergExport.readPruned]], [[deleteRange]]'s prune) from
+    *    "keeps everything" into "opens the overlapping handful". On a
+    *    partitioned layout the range leads with the partition columns
+    *    and an intra-task sort tightens every row group, so the
+    *    clustering happens WITHIN each partition.
+    *  - `where`: Delta's `OPTIMIZE … WHERE` — rewrite ONLY the files of
+    *    the hive partitions matching every entry (the same hive-escaped
+    *    path match [[readWherePartitions]] uses: exact, zero footer
+    *    reads), carrying every other file, and its delete state, by
+    *    reference. The commit declares the scoped base, so a racing
+    *    commit over DISJOINT files rebases instead of failing the
+    *    maintenance job. Nothing matching = no commit.
+    *
+    * A whole-table compaction reads ONE head and publishes under its
+    * seq CAS: a commit landing anywhere in between makes the publish
+    * refuse loudly instead of silently dropping the interloper's files.
+    * `targetFileBytes` sizes the flat and clustered rewrites at
+    * ceil(bytes/target) files; an unclustered partitioned rewrite
+    * writes one file per partition value. Returns the rewritten/carried
+    * split (whole table: every file rewritten, none carried). */
   def compact(spark: SparkSession, dir: String, snapshot: String,
-      targetFileBytes: Long): Long = {
-    val (fsys, base) = fs(spark, dir)
-    // ONE head read pins everything: the file list the rewrite reads
-    // AND the expectedSeq CAS the commit publishes under — a commit
-    // landing anywhere in between makes the publish refuse loudly
-    // instead of silently dropping the interloper's files
-    val cur = retained(fsys, base).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $dir"))
-    val files = cur.files
-    require(files.nonEmpty, s"no committed snapshot under $dir")
-    val bytes = files.map(f => fsys.getFileStatus(new Path(base, f)).getLen).sum
-    val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-    // position deletes applied, so compaction doubles as the MOR
-    // purge: the new snapshot carries zero delete files.
-    // cdcNoChange: a compaction re-packs bytes without changing any
-    // logical row (pending MOR deletes were already recorded as cdc by
-    // the delete commit itself), so the change feed reads it as empty
-    val df = readFilesApplyingDeletes(spark, dir, cur.files, cur.deleteFiles,
-      declaredSchema(spark, dir)).repartition(n.toInt)
-    writeImpl(df, dir, snapshot, () => (), rewrite = true, cdcNoChange = true,
-      expectedSeq = Some(cur.seq + 1))
-    n
-  }
-
-  /** OPTIMIZE with clustering: compact the current snapshot into
-    * ceil(bytes/target) files RANGE-CLUSTERED on `clusterCols` — the
-    * `OPTIMIZE ... ZORDER BY`-shaped maintenance move. Plain [[compact]]
-    * fixes the small-file problem; this one ALSO makes every file's
-    * min/max bounds tight on the cluster columns, which is what turns
-    * the exports' data-skipping stats ([[DeltaLog.readPruned]],
-    * [[IcebergExport.readPruned]], [[deleteRange]]'s prune) from
-    * "keeps everything" into "opens the handful of overlapping files".
-    * Same new-snapshot/no-reader-race contract as [[compact]]. */
-  def compactClustered(spark: SparkSession, dir: String, snapshot: String,
-      targetFileBytes: Long, clusterCols: Seq[String]): Long = {
-    require(clusterCols.nonEmpty, "compactClustered needs cluster columns")
-    val (fsys, base) = fs(spark, dir)
-    // one head read pins state + CAS (see compact)
-    val cur = retained(fsys, base).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $dir"))
-    val files = cur.files
-    require(files.nonEmpty, s"no committed snapshot under $dir")
-    val bytes = files.map(f => fsys.getFileStatus(new Path(base, f)).getLen).sum
-    val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-    // position deletes applied - compaction purges MOR state
-    val df = readFilesApplyingDeletes(spark, dir, cur.files, cur.deleteFiles,
-      declaredSchema(spark, dir)).repartitionByRange(
-      n.toInt, clusterCols.map(org.apache.spark.sql.functions.col): _*)
-    writeImpl(df, dir, snapshot, () => (), rewrite = true, cdcNoChange = true,
-      expectedSeq = Some(cur.seq + 1))
-    n
-  }
-
-  /** [[compactClustered]] for a HIVE-PARTITIONED table: the rewrite
-    * KEEPS the `col=value/` layout AND range-clusters WITHIN it — the
-    * range shuffle leads with the partition columns (each hive value
-    * stays contiguous across tasks) and continues into the cluster
-    * columns, then an intra-task sort tightens every row group, so
-    * each written file's min/max bounds are tight on the cluster
-    * columns. This is the maintenance move that makes data-skipping
-    * effective on a partitioned 100 TB table: partition pruning picks
-    * the directory, tight footer bounds then open only the overlapping
-    * files inside it. Same new-snapshot / no-reader-race / MOR-purge
-    * contract as [[compact]]. */
-  def compactClusteredPartitioned(spark: SparkSession, dir: String,
-      snapshot: String, targetFileBytes: Long, clusterCols: Seq[String],
-      partitionCols: Seq[String]): Long = {
-    require(clusterCols.nonEmpty, "compactClusteredPartitioned needs cluster columns")
-    require(partitionCols.nonEmpty,
-      "compactClusteredPartitioned needs partition columns")
-    val (fsys, base) = fs(spark, dir)
-    // one head read pins state + CAS (see compact)
-    val cur = retained(fsys, base).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $dir"))
-    val files = cur.files
-    require(files.nonEmpty, s"no committed snapshot under $dir")
-    val bytes = files.map(f => fsys.getFileStatus(new Path(base, f)).getLen).sum
-    val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-    val ordering = (partitionCols ++ clusterCols).map(F.col)
-    val df = readFilesApplyingDeletes(spark, dir, cur.files, cur.deleteFiles,
-      declaredSchema(spark, dir))
-      .repartitionByRange(n.toInt, ordering: _*)
-      .sortWithinPartitions(ordering: _*)
-    writeImpl(df, dir, snapshot, () => (), partitionCols = partitionCols,
-      rewrite = true, cdcNoChange = true, expectedSeq = Some(cur.seq + 1))
-    currentFiles(spark, dir).size.toLong
-  }
-
-  /** Compaction for a HIVE-PARTITIONED table: same new-snapshot /
-    * no-reader-race / MOR-purge contract as [[compact]], but the
-    * rewrite KEEPS the `col=value/` layout — a flat compact would
-    * silently break every partition-exact read
-    * ([[readWherePartitions]]) on the table. The shuffle hashes on the
-    * partition columns, so each partition value lands in exactly one
-    * task and writes exactly one file per partition tree — the
-    * small-file purge for the streaming append cadence. Returns the
-    * new snapshot's file count. */
-  def compactPartitioned(spark: SparkSession, dir: String, snapshot: String,
-      partitionCols: Seq[String]): Long = {
-    require(partitionCols.nonEmpty, "compactPartitioned needs partition columns")
-    val (fsys, base) = fs(spark, dir)
-    // one head read pins state + CAS (see compact)
-    val cur = retained(fsys, base).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $dir"))
-    val df = readFilesApplyingDeletes(spark, dir, cur.files, cur.deleteFiles,
-      declaredSchema(spark, dir)).repartition(partitionCols.map(F.col): _*)
-    writeImpl(df, dir, snapshot, () => (), partitionCols = partitionCols,
-      rewrite = true, cdcNoChange = true, expectedSeq = Some(cur.seq + 1))
-    currentFiles(spark, dir).size.toLong
-  }
-
-  /** PARTITION-SCOPED compaction (Delta's `OPTIMIZE … WHERE`): rewrite
-    * ONLY the files of the hive partitions matching every `equalTo`
-    * entry — one file per matched partition value — carrying every
-    * other file by reference. This is the daily maintenance move at
-    * 100 TB: a date-partitioned table's hot-partition small-file spray
-    * compacts for today's bytes, not the table's. The match is the
-    * same hive-ESCAPED path comparison [[readWherePartitions]] uses
-    * (exact, zero footer reads). MOR deletes targeting the rewritten
-    * files are applied during the rewrite (their entries become inert
-    * — they reference paths the new snapshot no longer lists); carried
-    * files keep their delete state. The commit declares the scoped
-    * base, so a racing commit over DISJOINT files rebases instead of
-    * failing the maintenance job. Returns the rewritten/carried split
-    * (committed = None when nothing matches — no commit). */
-  def compactWherePartitions(spark: SparkSession, dir: String,
-      snapshot: String, equalTo: Map[String, String]): CowRewrite = {
-    require(equalTo.nonEmpty, "compactWherePartitions needs partition values")
+      targetFileBytes: Long, clusterBy: Seq[String] = Nil,
+      where: Map[String, String] = Map.empty,
+      partitionBy: Option[Seq[String]] = None): CowRewrite = {
+    require(targetFileBytes > 0,
+      s"compact: targetFileBytes must be > 0, got $targetFileBytes")
     val (fsys, base) = fs(spark, dir)
     val cur = retained(fsys, base).lastOption.getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot under $dir"))
+    val scoped = where.nonEmpty
+    require(scoped || cur.files.nonEmpty, s"no committed snapshot under $dir")
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    def matches(f: String): Boolean = equalTo.forall { case (k, v) =>
+    val (touch, keep) = cur.files.partition(f => where.forall { case (k, v) =>
       f.contains(s"/${escapePathName(k)}=${escapePathName(v)}/")
-    }
-    val (touch, keep) = cur.files.partition(matches)
+    })
     if (touch.isEmpty) return CowRewrite(Nil, keep, None)
-    val partCols = partitionValuesOf(touch.head).map(_._1)
-    require(partCols.nonEmpty,
-      s"compactWherePartitions: matched files under $dir carry no hive layout")
+    val partCols = partitionBy.getOrElse(
+      graft.sources.GraftSource.uniformPartitionCols(touch).getOrElse(Nil))
+    require(!scoped || partCols.nonEmpty,
+      s"compact: files matching $where under $dir carry no uniform hive layout")
+    // sized only by the shuffles that take a file count
+    lazy val n = {
+      val bytes = touch.map(f => fsys.getFileStatus(new Path(base, f)).getLen).sum
+      math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+    }
     val df = readFilesApplyingDeletes(spark, dir, touch, cur.deleteFiles,
       declaredSchema(spark, dir))
-      .repartition(partCols.map(F.col): _*)
-    writeImpl(df, dir, snapshot, () => (), carriedExplicit = Some(keep),
-      partitionCols = partCols, deletesExplicit = Some(cur.deleteFiles),
-      rewrite = true, cowBase = Some(cur), cdcNoChange = true)
-    CowRewrite(touch, keep, Some(snapshot))
-  }
-
-  /** PARTITION-SCOPED CLUSTERED compaction (Delta's `OPTIMIZE … WHERE
-    * … ZORDER BY`): rewrite ONLY the hive partitions matching every
-    * `equalTo` entry, RANGE-CLUSTERED on `clusterCols` within the kept
-    * layout, carrying every other file by reference — the nightly
-    * hot-partition maintenance move that ALSO makes the partition's
-    * footer bounds tight, so selective reads inside it open only the
-    * overlapping files. Match, MOR, rebase, and commit semantics are
-    * exactly [[compactWherePartitions]]'s; the clustering shuffle is
-    * [[compactClusteredPartitioned]]'s, scoped to the matched bytes. */
-  def compactClusteredWherePartitions(spark: SparkSession, dir: String,
-      snapshot: String, equalTo: Map[String, String],
-      targetFileBytes: Long, clusterCols: Seq[String]): CowRewrite = {
-    require(equalTo.nonEmpty, "compactClusteredWherePartitions needs partition values")
-    require(clusterCols.nonEmpty, "compactClusteredWherePartitions needs cluster columns")
-    val (fsys, base) = fs(spark, dir)
-    val cur = retained(fsys, base).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $dir"))
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    def matches(f: String): Boolean = equalTo.forall { case (k, v) =>
-      f.contains(s"/${escapePathName(k)}=${escapePathName(v)}/")
+    val ordering = (partCols ++ clusterBy).map(F.col)
+    // the shuffle sits DIRECTLY under the write, so sizeForLanding
+    // backs off and lands exactly this layout
+    val laidOut = (partCols.nonEmpty, clusterBy.nonEmpty) match {
+      case (false, false) => df.repartition(n)
+      case (true, false) => df.repartition(ordering: _*) // one file per value
+      case (false, true) => df.repartitionByRange(n, ordering: _*)
+      case (true, true) => df.repartitionByRange(n, ordering: _*)
+        .sortWithinPartitions(ordering: _*)
     }
-    val (touch, keep) = cur.files.partition(matches)
-    if (touch.isEmpty) return CowRewrite(Nil, keep, None)
-    val partCols = partitionValuesOf(touch.head).map(_._1)
-    require(partCols.nonEmpty,
-      s"compactClusteredWherePartitions: matched files under $dir carry " +
-        "no hive layout")
-    require(clusterCols.forall(c => !partCols.contains(c)),
-      s"cluster columns ${clusterCols.mkString(", ")} must not include " +
-        s"partition columns (${partCols.mkString(", ")})")
-    val bytes = touch.map(f => fsys.getFileStatus(new Path(base, f)).getLen).sum
-    val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)
-    val ordering = (partCols ++ clusterCols).map(F.col)
-    val df = readFilesApplyingDeletes(spark, dir, touch, cur.deleteFiles,
-      declaredSchema(spark, dir))
-      .repartitionByRange(n.toInt, ordering: _*)
-      .sortWithinPartitions(ordering: _*)
-    writeImpl(df, dir, snapshot, () => (), carriedExplicit = Some(keep),
-      partitionCols = partCols, deletesExplicit = Some(cur.deleteFiles),
-      rewrite = true, cowBase = Some(cur), cdcNoChange = true)
+    if (scoped)
+      writeImpl(laidOut, dir, snapshot, () => (), carriedExplicit = Some(keep),
+        partitionCols = partCols, deletesExplicit = Some(cur.deleteFiles),
+        rewrite = true, cowBase = Some(cur), cdcNoChange = true)
+    else
+      writeImpl(laidOut, dir, snapshot, () => (), partitionCols = partCols,
+        rewrite = true, cdcNoChange = true, expectedSeq = Some(cur.seq + 1))
     CowRewrite(touch, keep, Some(snapshot))
   }
 

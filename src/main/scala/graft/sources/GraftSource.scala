@@ -395,7 +395,7 @@ object GraftSource {
   /** The snapshot's hive partition column names, when every file agrees
     * on the same ordered layout (Nil = uniformly flat). None = mixed
     * layouts — only the union-by-name library read can serve those. */
-  private[sources] def uniformPartitionCols(files: Seq[String]): Option[Seq[String]] = {
+  private[graft] def uniformPartitionCols(files: Seq[String]): Option[Seq[String]] = {
     val layouts = files.map(f => Manifest.partitionValuesOf(f).map(_._1)).distinct
     if (layouts.size == 1) Some(layouts.head) else None
   }

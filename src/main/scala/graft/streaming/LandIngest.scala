@@ -108,11 +108,16 @@ object LandIngest {
     * manifest commit: readers resolve the pre- or post-compaction
     * snapshot, never a half state, and the SAME exactly-once guards as
     * the batch commits (isCommitted dedupe + orphan abandon) make a
-    * replayed maintenance batch idempotent. Partitioned tables compact
-    * through [[graft.io.Manifest.compactPartitioned]] (the hive layout
-    * survives); flat tables range-cluster on `clusterCols` when given
-    * (tight bounds → the exports' data skipping keeps working), else
-    * plain [[graft.io.Manifest.compact]]. */
+    * replayed maintenance batch idempotent. The commit is one
+    * [[graft.io.Manifest.compact]] call in the drain's `partitionCols`
+    * layout: a partitioned table keeps its hive tree (one file per
+    * partition value), a flat one re-packs into files of about
+    * `targetFileBytes`. With `clusterCols` the rewrite range-clusters
+    * on them (tight bounds → the exports' data skipping keeps working):
+    * a flat table into `targetFileBytes`-sized files, a partitioned one
+    * WITHIN each partition — the form `CALL zorder` uses. A
+    * `targetFileBytes` <= 0 fails the maintenance commit with an
+    * IllegalArgumentException. */
   final case class MaintenancePolicy(
       maxFiles: Int = 64,
       smallFileBytes: Long = 8L << 20,
@@ -172,14 +177,8 @@ object LandIngest {
                 val snap = s"maint-$batchId"
                 if (!Manifest.isCommitted(spark, curatedDir, snap)) {
                   Manifest.abandonOrphan(spark, curatedDir, snap)
-                  if (partitionCols.nonEmpty)
-                    Manifest.compactPartitioned(spark, curatedDir, snap,
-                      partitionCols)
-                  else if (p.clusterCols.nonEmpty)
-                    Manifest.compactClustered(spark, curatedDir, snap,
-                      p.targetFileBytes, p.clusterCols)
-                  else
-                    Manifest.compact(spark, curatedDir, snap, p.targetFileBytes)
+                  Manifest.compact(spark, curatedDir, snap, p.targetFileBytes,
+                    clusterBy = p.clusterCols, partitionBy = Some(partitionCols))
                 }
               }
             }

@@ -1102,6 +1102,30 @@ class GraftCatalogSpec extends AnyFunSuite {
       "table => 'db.hot', where_partition => 'seg=zzz')"))
   }
 
+  test("CALL compact and zorder report the committed snapshot's file count") {
+    sql("CREATE NAMESPACE IF NOT EXISTS gcat.db")
+    sql("CREATE TABLE gcat.db.fcount (x INT) USING graft")
+    sql("INSERT INTO gcat.db.fcount VALUES (1), (2), (3)")
+    sql("INSERT INTO gcat.db.fcount VALUES (4), (5)")
+    val (dir, _) = spark.sessionState.catalogManager.catalog("gcat")
+      .asInstanceOf[GraftCatalog].resolveTable("db.fcount")
+    // a target far below the table's bytes plans more files than there
+    // are rows: the count must be what was committed, not what was planned
+    val target = math.max(1L, Manifest.filesBytes(spark, dir,
+      Manifest.currentFiles(spark, dir)) / 20)
+    Seq(s"compact(table => 'db.fcount', target_file_bytes => $target)",
+      s"zorder(table => 'db.fcount', columns => 'x', " +
+        s"target_file_bytes => $target)").foreach { call =>
+      val res = sql(s"CALL gcat.system.$call").collect()
+      val files = Manifest.currentFiles(spark, dir)
+      assert(files.forall(_.startsWith(s"data-${res.head.getString(0)}/")))
+      assert(res.head.getLong(1) == files.size,
+        s"$call reported ${res.head.getLong(1)} files, committed ${files.size}")
+      assert(files.size < 20, "five rows cannot fill the ~20 planned files")
+    }
+    assert(sql("SELECT SUM(x) FROM gcat.db.fcount").collect().head.getLong(0) == 15)
+  }
+
   test("maintenance on an evolved FLAT table keeps the evolved column's values") {
     sql("CREATE NAMESPACE IF NOT EXISTS gcat.db")
     // flat layout on purpose: a mixed old/new file list read through

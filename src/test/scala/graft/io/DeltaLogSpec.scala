@@ -305,7 +305,7 @@ class DeltaLogSpec extends AnyFunSuite {
       "hash-shuffled files all overlap [0,99] - nothing prunable")
     val bytes = Manifest.currentFiles(spark, dir).map(f =>
       new java.io.File(s"$dir/$f").length).sum
-    Manifest.compactClustered(spark, dir, "optimized", bytes / 5, Seq("id"))
+    Manifest.compact(spark, dir, "optimized", bytes / 5, clusterBy = Seq("id"))
     DeltaLog.exportLog(spark, dir)
     val after = DeltaLog.prunedFiles(spark, dir, "id", "0", "99")
     assert(after.nonEmpty &&

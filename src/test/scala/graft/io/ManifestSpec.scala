@@ -78,6 +78,122 @@ class ManifestSpec extends AnyFunSuite {
     assert(Manifest.read(spark, dir).agg(sum("v")).collect().head.getLong(0) == sumBefore)
   }
 
+  /** One [[Manifest.compact]] layout: flat or hive-partitioned by
+    * `seg`, clustered on `id` or not, whole-table or scoped to `seg=e`. */
+  private case class CompactCase(partitioned: Boolean, clustered: Boolean,
+      scoped: Boolean) {
+    def name: String = Seq(if (partitioned) "partitioned" else "flat",
+      if (clustered) "clustered" else "unclustered",
+      if (scoped) "where seg=e" else "whole table").mkString(", ")
+  }
+
+  private val compactCases = for {
+    partitioned <- Seq(false, true)
+    clustered <- Seq(false, true)
+    scoped <- Seq(false, true) if partitioned || !scoped
+  } yield CompactCase(partitioned, clustered, scoped)
+
+  compactCases.foreach { c =>
+    test(s"compact keeps rows, layout and the rewrite contract: ${c.name}") {
+      val dir = tmpDir()
+      def rows(from: Long, to: Long) = spark.range(from, to).toDF("id")
+        .withColumn("seg", when(col("id") % 2 === 0, "e").otherwise("o"))
+        .withColumn("v", col("id") * 3)
+      // a fragmented history with pending MOR deletes in both partitions
+      if (c.partitioned) {
+        Manifest.writePartitioned(rows(0, 1000).repartition(4), dir, "base",
+          Seq("seg"))
+        Manifest.appendPartitioned(rows(1000, 1010), dir, "a1", Seq("seg"))
+      } else {
+        Manifest.write(rows(0, 1000).repartition(4), dir, "base")
+        Manifest.append(rows(1000, 1010), dir, "a1")
+      }
+      Manifest.deleteRangeMOR(spark, dir, "id", "100", "149", "mor")
+      val before = Manifest.history(spark, dir).last
+      assert(before.deleteFiles.nonEmpty)
+      def content = Manifest.read(spark, dir)
+        .select("id", "seg", "v").as[(Long, String, Long)].collect().sorted.toSeq
+      val rowsBefore = content
+      assert(rowsBefore.size == 960)
+      val bytes = Manifest.filesBytes(spark, dir, before.files)
+      // flat rewrites split into two files; partitioned ones write one
+      // file per value (clustered: one range task)
+      val target = if (c.partitioned) Long.MaxValue else bytes / 2 + 1
+      val res = Manifest.compact(spark, dir, "packed", target,
+        clusterBy = if (c.clustered) Seq("id") else Nil,
+        where = if (c.scoped) Map("seg" -> "e") else Map.empty)
+
+      assert(content == rowsBefore, "compaction must not change any row")
+      val after = Manifest.history(spark, dir).last
+      assert(after.snapshot == "packed" && res.committed.contains("packed"))
+      if (c.partitioned) {
+        assert(after.files.forall(_.matches(".*/seg=(e|o)/part-.*")),
+          s"the hive layout must survive: ${after.files}")
+        assert(Manifest.readWherePartitions(spark, dir, Map("seg" -> "e"))
+          .count() == rowsBefore.count(_._2 == "e"))
+      } else assert(after.files.forall(!_.contains("=")), after.files)
+      val (rewritten, carried) =
+        if (c.scoped) before.files.partition(_.contains("/seg=e/"))
+        else (before.files, Nil)
+      assert(res.rewritten == rewritten && res.carried == carried)
+      assert(after.files.count(_.startsWith("data-packed/")) ==
+        (if (c.scoped) 1 else 2))
+      assert(after.files.size == carried.size +
+        after.files.count(_.startsWith("data-packed/")))
+      assert(carried.forall(after.files.contains))
+      // whole table purges the MOR state; a scoped rewrite carries it
+      // for the files it did not touch
+      assert(after.deleteFiles ==
+        (if (c.scoped) before.deleteFiles else Nil))
+      assert(after.rewrite && after.cdcRecorded && after.cdcFiles.isEmpty,
+        "a compaction is a rewrite with an empty change record")
+    }
+  }
+
+  test("compact on a writePartitioned table keeps the hive layout by default") {
+    val dir = tmpDir()
+    Manifest.writePartitioned(
+      spark.range(0, 200).toDF("id")
+        .withColumn("seg", when(col("id") % 2 === 0, "e").otherwise("o"))
+        .repartition(4),
+      dir, "base", Seq("seg"))
+    Manifest.compact(spark, dir, "packed", 1L << 30)
+    val files = Manifest.currentFiles(spark, dir)
+    assert(files.forall(f => f.contains("/seg=e/") || f.contains("/seg=o/")),
+      s"compaction must not flatten the hive layout: $files")
+    assert(Manifest.readWherePartitions(spark, dir, Map("seg" -> "e"))
+      .count() == 100)
+  }
+
+  test("compact refuses a non-positive targetFileBytes before it commits") {
+    val dir = tmpDir()
+    Manifest.write((1 to 100).toDF("v"), dir, "s1")
+    Seq(0L, -1L).foreach { t =>
+      val e = intercept[IllegalArgumentException](
+        Manifest.compact(spark, dir, s"bad$t".replace('-', 'm'), t))
+      assert(e.getMessage.contains("targetFileBytes"), e.getMessage)
+    }
+    assert(Manifest.snapshots(spark, dir) == Seq("s1"))
+  }
+
+  test("spark.graft.write.targetFileBytes must be a positive byte count") {
+    val dir = tmpDir()
+    Manifest.write((1 to 100).toDF("v"), dir, "s1")
+    val key = "spark.graft.write.targetFileBytes"
+    Seq("0", "-5", "64MB").foreach { bad =>
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          Manifest.append((101 to 110).toDF("v"), dir, "s2"))
+        assert(e.getMessage.contains(key), e.getMessage)
+      } finally spark.conf.unset(key)
+      assert(Manifest.snapshots(spark, dir) == Seq("s1"))
+      assert(!new java.io.File(s"$dir/data-s2").exists())
+    }
+    Manifest.append((101 to 110).toDF("v"), dir, "s2")
+    assert(Manifest.read(spark, dir).count() == 110)
+  }
+
   test("two writers racing the same commit_seq: exactly one wins, the loser throws") {
     val dir = tmpDir()
     Manifest.write((1 to 10).toDF("v"), dir, "s1") // seq 0

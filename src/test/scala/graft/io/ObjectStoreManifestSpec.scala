@@ -209,8 +209,8 @@ class ObjectStoreManifestSpec extends AnyFunSuite {
     Manifest.appendPartitioned(
       Seq((5, "e"), (6, "o")).toDF("v", "seg"), dir, "s2", Seq("seg"))
     // OPTIMIZE WHERE seg=e: one fresh data dir, one fresh manifest key
-    val cw = Manifest.compactWherePartitions(spark, dir, "opt-e",
-      Map("seg" -> "e"))
+    val cw = Manifest.compact(spark, dir, "opt-e", 128L << 20,
+      where = Map("seg" -> "e"))
     assert(cw.committed.contains("opt-e") && cw.rewritten.nonEmpty &&
       cw.rewritten.forall(_.contains("seg=e")) &&
       cw.carried.forall(!_.contains("seg=e")))

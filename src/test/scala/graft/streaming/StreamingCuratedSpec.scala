@@ -164,6 +164,27 @@ class StreamingCuratedSpec extends AnyFunSuite {
     assert(Manifest.read(spark, curated).count() === 300)
   }
 
+  test("maintenance with a non-positive targetFileBytes fails naming it") {
+    val base = Files.createTempDirectory("stream_maint_bad")
+    val land = Files.createDirectory(base.resolve("land"))
+    val curated = base.resolve("curated").toString
+    val ckpt = base.resolve("ckpt").toString
+    // maxSmallFiles = 0: the first batch's file triggers the compaction
+    val policy = Some(LandIngest.MaintenancePolicy(
+      smallFileBytes = 1L << 20, maxSmallFiles = 0, targetFileBytes = 0))
+    writeJsonl(land, "week0.jsonl", 0 until 150)
+    val e = intercept[Exception](
+      LandIngest.drainLandToCurated(spark, land.toString, schema, curated,
+        ckpt, curate, minRows = 100, maintenance = policy))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(causes.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+      t.getMessage.contains("targetFileBytes")),
+      s"expected an IllegalArgumentException naming targetFileBytes: $e")
+    // the batch itself committed; the maintenance commit never did
+    assert(Manifest.snapshots(spark, curated) === Seq("batch-0"))
+  }
+
   test("kill between curate-landing and manifest publish: replay promotes exactly once") {
     val base = Files.createTempDirectory("stream_curated_kill")
     val land = Files.createDirectory(base.resolve("land"))
