@@ -106,10 +106,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * manifest; it is a NAMESPACE when it exists and is neither. */
   private def isTable(p: Path): Boolean =
     fsys.exists(new Path(p, GraftTableMeta.SidecarName)) ||
-      (fsys.exists(p) && fsys.listStatus(p).exists { st =>
-        val n = st.getPath.getName
-        n.startsWith("manifest-") && n.endsWith(".json")
-      })
+      Manifest.hasManifest(fsys, p)
 
   // ---- tables ------------------------------------------------------------
 
@@ -247,7 +244,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         "declare an invariant over unvalidated existing rows - register " +
         "first, then ALTER TABLE ... ADD CONSTRAINT (which scans)")
     location.foreach { loc =>
-      require(Manifest.history(spark, loc).nonEmpty,
+      require(Manifest.head(spark, loc).nonEmpty,
         s"graft catalog: LOCATION '$loc' has no committed graft " +
           "snapshot - write one first (the catalog registers existing " +
           "manifest tables; it does not create empty external ones)")
@@ -341,7 +338,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         if (!changesSchema) meta0raw
         else {
           val pre = meta0raw.schema.getOrElse {
-            require(Manifest.history(spark, dir).nonEmpty,
+            require(Manifest.head(spark, dir).nonEmpty,
               s"graft catalog: ${ident} has neither a declared schema nor " +
                 "a committed snapshot to evolve")
             StructType(Manifest.read(spark, dir).schema
@@ -513,7 +510,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                 // UNKNOWN pass, FALSE violates); the scan reads through
                 // the full resolution path (declared schema, mapping,
                 // MOR state)
-                if (Manifest.history(spark, dir).nonEmpty) {
+                if (Manifest.head(spark, dir).nonEmpty) {
                   val bad = spark.read.format("graft").load(dir)
                     .where(s"($sql) IS FALSE").limit(1).count()
                   require(bad == 0,
@@ -1079,7 +1076,7 @@ private[graft] class GraftCatalogTable(ident: String, val dir: String,
     * a declared-only table reads as empty). Resolved ONCE per loaded
     * table: the statement's analysis and execution see one snapshot. */
   lazy val relation: Option[BaseRelation] =
-    if (Manifest.history(spark, dir).isEmpty) {
+    if (Manifest.head(spark, dir).isEmpty) {
       require(timeTravel.isEmpty,
         s"graft catalog: $ident has no committed snapshot to time-travel to")
       None

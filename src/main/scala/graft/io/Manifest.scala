@@ -2,9 +2,12 @@ package graft.io
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.{functions => F}
+import org.json4s.{JArray, JBool, JInt, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods
 
 /**
  * Manifest-committed table directory: the minimal snapshot-isolation
@@ -27,10 +30,14 @@ import org.apache.spark.sql.{functions => F}
  * mix, never an absent table. A writer that dies earlier leaves an
  * orphan data dir and an unchanged current snapshot.
  *
- * Reads list only the KB-sized `manifest-*.json` keys — never the data
- * tree: the data file set comes from inside the manifest. At 100 TB on
- * S3 that kills both listing pathologies (no LIST over millions of data
- * keys on reads, no rename-directory commit on writes).
+ * Reads list only the KB-sized `manifest-<seq>.json` keys — never the
+ * data tree: the data file set comes from inside the manifest. At 100 TB
+ * on S3 that kills both listing pathologies (no LIST over millions of
+ * data keys on reads, no rename-directory commit on writes). The format
+ * lives behind two private functions and nowhere else: [[listManifests]]
+ * (which keys are manifests, in seq order) and the JSON codec
+ * ([[encode]]/[[decode]], json4s-jackson). [[head]] parses only the
+ * newest manifest; [[history]] parses every retained one.
  *
  * Concurrency contract — optimistic, single winner per seq: keying the
  * commit file by `commit_seq` (not by snapshot name) makes the publish
@@ -127,57 +134,98 @@ object Manifest {
       metaB64: Option[String] = None,
       cdcFiles: Seq[String] = Nil, cdcRecorded: Boolean = false)
 
-  /** One read per manifest: snapshot id, commit_seq, the data file
-    * list, and any POSITION-DELETE file list (`deletes-<snap>/…`, the
-    * merge-on-read state). The file patterns require the `data-`/
-    * `deletes-` dir prefixes, so the quoted `snapshot` field can never
-    * parse as a phantom file. */
+  /** The manifest codec's writer. Optional fields are omitted when
+    * they say nothing: `delete_files` when empty, `rewrite` and
+    * `cdc_recorded` unless true, `meta_b64` when absent, `cdc_files`
+    * unless recorded and non-empty. */
+  private[io] def encode(m: ManifestData): String = {
+    def strs(xs: Seq[String]) = JArray(xs.map(JString(_)).toList)
+    val fields = List(
+      Some("snapshot" -> JString(m.snapshot)),
+      Some("commit_seq" -> JInt(m.seq)),
+      Some("committed_at" -> JInt(m.committedAt)),
+      Some("files" -> strs(m.files)),
+      Option.when(m.deleteFiles.nonEmpty)("delete_files" -> strs(m.deleteFiles)),
+      Option.when(m.rewrite)("rewrite" -> JBool(true)),
+      m.metaB64.map("meta_b64" -> JString(_)),
+      Option.when(m.cdcRecorded)("cdc_recorded" -> JBool(true)),
+      Option.when(m.cdcRecorded && m.cdcFiles.nonEmpty)(
+        "cdc_files" -> strs(m.cdcFiles))).flatten
+    JsonMethods.pretty(JsonMethods.render(JObject(fields))) + "\n"
+  }
+
+  /** The manifest codec's reader: None for a body that is not JSON or
+    * lacks `snapshot`/`commit_seq` (such a key is skipped, never read
+    * as a commit). `committed_at` is 0 when absent (manifests older
+    * than the field). */
+  private[io] def decode(text: String): Option[ManifestData] = {
+    def strs(j: JValue) = j match {
+      case JArray(xs) => xs.collect { case JString(s) => s }
+      case _ => Nil
+    }
+    JsonMethods.parseOpt(text).flatMap { j =>
+      (j \ "snapshot", j \ "commit_seq") match {
+        case (JString(snap), JInt(seq)) => Some(ManifestData(snap, seq.toLong,
+          strs(j \ "files"), strs(j \ "delete_files"),
+          j \ "committed_at" match { case JInt(t) => t.toLong; case _ => 0L },
+          j \ "rewrite" == JBool(true),
+          j \ "meta_b64" match { case JString(b) => Some(b); case _ => None },
+          strs(j \ "cdc_files"), j \ "cdc_recorded" == JBool(true)))
+        case _ => None
+      }
+    }
+  }
+
   private def parse(fsys: FileSystem, mp: Path): Option[ManifestData] = {
     if (!fsys.exists(mp)) return None
     val in = fsys.open(mp)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val snap = "\"snapshot\"\\s*:\\s*\"([^\"]+)\"".r
-      .findFirstMatchIn(text).map(_.group(1)).getOrElse(return None)
-    val seq = "\"commit_seq\"\\s*:\\s*(\\d+)".r
-      .findFirstMatchIn(text).map(_.group(1).toLong).getOrElse(return None)
-    // optional hive-style `k=v/` segments between the data dir and the
-    // part file — a PARTITIONED snapshot's layout
-    val files = "\"(data-[^\"/]+/(?:[^\"/=]+=[^\"/]*/)*part-[^\"/]*\\.parquet)\"".r
-      .findAllMatchIn(text).map(_.group(1)).toSeq
-    val deletes = "\"(deletes-[^\"/]+/part-[^\"/]*\\.parquet)\"".r
-      .findAllMatchIn(text).map(_.group(1)).toSeq
-    val at = "\"committed_at\"\\s*:\\s*(\\d+)".r
-      .findFirstMatchIn(text).map(_.group(1).toLong).getOrElse(0L)
-    val rewrite = "\"rewrite\"\\s*:\\s*true".r.findFirstIn(text).isDefined
-    // DDL commits embed the table metadata they declare, base64-coded
-    // (alphabet is regex-safe against every other field's pattern)
-    val metaB64 = "\"meta_b64\"\\s*:\\s*\"([A-Za-z0-9+/=]+)\"".r
-      .findFirstMatchIn(text).map(_.group(1))
-    // CHANGE-DATA-FEED state (round 13): `cdc_recorded: true` declares
-    // that this commit's LOGICAL row change is fully described by its
-    // `cdc-<snap>/` files (possibly zero of them — a compaction changes
-    // no rows). Commits without the flag predate CDF recording (or are
-    // overwrite-class) — the change-feed reader refuses to span them.
-    val cdcFs = "\"(cdc-[^\"/]+/part-[^\"/]*\\.parquet)\"".r
-      .findAllMatchIn(text).map(_.group(1)).toSeq
-    val cdcRec = "\"cdc_recorded\"\\s*:\\s*true".r.findFirstIn(text).isDefined
-    Some(ManifestData(snap, seq, files, deletes, at, rewrite, metaB64,
-      cdcFs, cdcRec))
+    try decode(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+    finally in.close()
   }
+
+  private val ManifestName = """manifest-(\d+)\.json""".r
+
+  /** THE manifest listing: the `manifest-<seq>.json` keys under `base`,
+    * oldest → newest by the seq in the key name (the commit protocol
+    * keys every manifest by its seq). One LIST of KB-sized keys, zero
+    * content reads. */
+  private def listManifests(fsys: FileSystem, base: Path): Seq[FileStatus] =
+    if (!fsys.exists(base)) Nil
+    else fsys.listStatus(base).toSeq
+      .flatMap(st => st.getPath.getName match {
+        case ManifestName(seq) => seq.toLongOption.map(_ -> st)
+        case _ => None
+      })
+      .sortBy(_._1).map(_._2)
+
+  /** Has any manifest been published under `base`? (A dir with one is
+    * a table to the catalog.) */
+  private[graft] def hasManifest(fsys: FileSystem, base: Path): Boolean =
+    listManifests(fsys, base).nonEmpty
 
   /** All retained manifests, oldest → newest commit order. */
   private def retained(fsys: FileSystem, base: Path): Seq[ManifestData] =
-    if (!fsys.exists(base)) Nil
-    else fsys.listStatus(base).toSeq
-      .map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.startsWith("manifest-") && n.endsWith(".json")
-      }
-      .flatMap(parse(fsys, _))
-      .sortBy(m => (m.seq, m.snapshot))
+    listManifests(fsys, base).flatMap(st => parse(fsys, st.getPath))
+
+  /** The CURRENT snapshot's manifest — the newest parseable one — or
+    * None if the table never committed: one LIST and, normally, one
+    * parse, however deep the history. */
+  private[graft] def head(spark: SparkSession, dir: String): Option[ManifestData] = {
+    val (fsys, base) = fs(spark, dir)
+    listManifests(fsys, base).reverseIterator
+      .flatMap(st => parse(fsys, st.getPath)).nextOption()
+  }
+
+  /** `head`, or the "no committed snapshot" refusal. */
+  private def headOrThrow(head: Option[ManifestData], dir: String): ManifestData =
+    head.getOrElse(
+      throw new IllegalArgumentException(s"no committed snapshot under $dir"))
+
+  /** Refuse a snapshot id some retained commit already used. */
+  private def requireFresh(priors: Seq[ManifestData], snapshot: String,
+      dir: String): Unit =
+    require(priors.forall(_.snapshot != snapshot),
+      s"snapshot $snapshot already committed under $dir")
 
   /** Retained commit history, oldest → newest — the [[DeltaLog]]
     * export's input view. */
@@ -194,10 +242,8 @@ object Manifest {
 
   /** Files of the CURRENT (newest-commit) snapshot, relative paths;
     * empty if the table has never committed. */
-  def currentFiles(spark: SparkSession, dir: String): Seq[String] = {
-    val (fsys, base) = fs(spark, dir)
-    retained(fsys, base).lastOption.map(_.files).getOrElse(Nil)
-  }
+  def currentFiles(spark: SparkSession, dir: String): Seq[String] =
+    head(spark, dir).map(_.files).getOrElse(Nil)
 
   /** Overwrite-commit: land `df` as a fresh snapshot, then publish it
     * with ONE rename onto the fresh seq-keyed manifest — the commit
@@ -277,72 +323,35 @@ object Manifest {
     sb.toString
   }
 
-  /** Seqs of retained manifests recovered from the KEY NAMES alone (the
-    * commit protocol keys every manifest by its seq) — zero content
-    * reads, so resolving "which manifest is current" costs one LIST of
-    * KB-sized keys however many files the table has. */
-  private def manifestSeqs(fsys: FileSystem, base: Path): Seq[Long] =
-    if (!fsys.exists(base)) Nil
-    else fsys.listStatus(base).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("manifest-") && n.endsWith(".json"))
-      .map(_.stripPrefix("manifest-").stripSuffix(".json"))
-      .filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong).sorted
-
-  /** The current manifest's body as a DataFrame — the DISTRIBUTED face
-    * of the state for everything data-proportional: the manifest JSON
-    * (∝ active file count) is parsed executor-side (multiLine JSON
-    * scan), the manifest to read is chosen from the listing alone
-    * ([[manifestSeqs]]), and callers filter BEFORE collecting, so a
-    * pruned read's driver state is bounded by its selectivity — never
-    * by the table's file count. Columns: `file` (one row per data
-    * file) plus the scalar `snapshot`/`commit_seq`. */
-  private[graft] def currentFilesDF(spark: SparkSession, dir: String): DataFrame = {
-    val (fsys, base) = fs(spark, dir)
-    val seqs = manifestSeqs(fsys, base)
-    require(seqs.nonEmpty, s"no committed snapshot under $dir")
-    spark.read.option("multiLine", "true")
-      .json(manifestPath(dir, seqs.max).toString)
-      .select(F.col("snapshot"), F.col("commit_seq"),
-        F.explode(F.col("files")).as("file"))
-  }
+  /** Does manifest-relative `file` sit in a hive partition matching
+    * every `equalTo` entry? Values compare in their hive-ESCAPED path
+    * rendering (escaped with the same escaper Spark's partitioned writer
+    * used), which sidesteps any unescape ambiguity; every partition
+    * segment sits between '/'s (the data dir leads, the part file
+    * trails) and '/' inside values is always escaped. */
+  private def inPartitions(equalTo: Map[String, String])(file: String): Boolean =
+    equalTo.forall { case (k, v) =>
+      file.contains(s"/${escapePathName(k)}=${escapePathName(v)}/")
+    }
 
   /** The current snapshot restricted to partitions where every
     * `equalTo` entry matches the file's `k=v` path values — an EXACT
     * manifest-level prune (no footer reads, no data-tree listing, no
-    * bounds reasoning), evaluated INSIDE [[currentFilesDF]]'s frame so
-    * only matching paths are ever collected. Values compare in their
-    * hive-ESCAPED path rendering (escaped with the same escaper Spark's
-    * partitioned writer used), which sidesteps any unescape ambiguity.
-    * Zero matching partitions → empty frame with the table schema. */
+    * bounds reasoning) over the head manifest's file list, with the
+    * head's position deletes applied. Zero matching partitions → empty
+    * frame with the table schema. */
   def readWherePartitions(spark: SparkSession, dir: String,
       equalTo: Map[String, String]): DataFrame = {
-    val (fsys, base) = fs(spark, dir)
-    val seqs = manifestSeqs(fsys, base)
-    require(seqs.nonEmpty, s"no committed snapshot under $dir")
-    val raw = spark.read.option("multiLine", "true")
-      .json(manifestPath(dir, seqs.max).toString)
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    val cond = equalTo.foldLeft(F.lit(true)) { case (acc, (k, v)) =>
-      // every partition segment sits between '/'s (the data dir leads,
-      // the part file trails); '/' inside values is always escaped
-      acc && F.col("file").contains(s"/${escapePathName(k)}=${escapePathName(v)}/")
-    }
-    val kept = raw.select(F.explode(F.col("files")).as("file")).where(cond)
-      .orderBy("file").collect().map(_.getString(0)).toSeq
-    // the merge-on-read delete list is small by design — collect it whole
-    val delFiles =
-      if (!raw.columns.contains("delete_files")) Nil
-      else raw.select(F.explode(F.col("delete_files")).as("d"))
-        .orderBy("d").collect().map(_.getString(0)).toSeq
+    val m = headOrThrow(head(spark, dir), dir)
+    val kept = m.files.filter(inPartitions(equalTo)).sorted
     val hint = declaredSchema(spark, dir)
-    if (kept.nonEmpty) readFilesApplyingDeletes(spark, dir, kept, delFiles, hint)
+    if (kept.nonEmpty)
+      readFilesApplyingDeletes(spark, dir, kept, m.deleteFiles, hint)
     else {
-      // rare path: zero matches — the full list is needed once, for the
+      // rare path: zero matches — the full list is read once, for the
       // table's schema
-      val all = raw.select(F.explode(F.col("files")).as("file"))
-        .orderBy("file").collect().map(_.getString(0)).toSeq
-      require(all.nonEmpty, s"no committed snapshot under $dir")
-      readFiles(spark, dir, all, hint).limit(0)
+      require(m.files.nonEmpty, s"no committed snapshot under $dir")
+      readFiles(spark, dir, m.files.sorted, hint).limit(0)
     }
   }
 
@@ -358,30 +367,36 @@ object Manifest {
     * user-specified schema — no footer inference (which would sample
     * ONE file and could miss columns newer files carry), and files
     * predating an ADD COLUMN null-fill per file inside the parquet
-    * reader. */
+    * reader.
+    *
+    * `positions` adds the two hidden columns a position delete keys on:
+    * `_graft_file` (absolute scan path) and `_graft_pos` (the parquet
+    * row index — stable physical position within the file). */
   private[graft] def readFiles(spark: SparkSession, dir: String,
       files: Seq[String],
-      schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
+      schemaHint: Option[org.apache.spark.sql.types.StructType] = None,
+      positions: Boolean = false): DataFrame = {
     // a mapped hint scans under PHYSICAL names, then projects back to
     // logical — the parquet layer is uniformly physical by contract
     val mapped = schemaHint.filter(ColumnMapping.hasMapping)
     val scanHint = mapped.map(ColumnMapping.physicalSchema).orElse(schemaHint)
-    def reader = {
+    def scan(basePath: Option[String], fs: Seq[String]): DataFrame = {
       val r = spark.read
       scanHint.foreach(r.schema)
-      r
+      basePath.foreach(r.option("basePath", _))
+      val df = r.parquet(fs.map(f => s"$dir/$f"): _*)
+      if (!positions) df
+      else df.select(F.col("*"), F.col("_metadata.file_path").as("_graft_file"),
+        F.col("_metadata.row_index").as("_graft_pos"))
     }
     val raw =
-      if (files.forall(partitionValuesOf(_).isEmpty))
-        reader.parquet(files.map(f => s"$dir/$f"): _*)
+      if (files.forall(partitionValuesOf(_).isEmpty)) scan(None, files)
       else files.groupBy(_.split('/').head).toSeq.sortBy(_._1)
-        .map { case (dataDir, fs) =>
-          reader.option("basePath", s"$dir/$dataDir")
-            .parquet(fs.map(f => s"$dir/$f"): _*)
-        }
+        .map { case (dataDir, fs) => scan(Some(s"$dir/$dataDir"), fs) }
         .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-    mapped.fold(raw)(ColumnMapping.toLogical(raw, _))
+    // the logical projection keeps the hidden position columns
+    mapped.fold(raw)(ColumnMapping.toLogical(raw, _,
+      if (positions) Seq("_graft_file", "_graft_pos") else Nil))
   }
 
   // ---- merge-on-read position deletes -----------------------------------
@@ -394,80 +409,26 @@ object Manifest {
     org.apache.spark.sql.functions.col("_graft_file"),
     "(data-[^/]+/(?:[^/=]+=[^/]*/)*part-[^/]*\\.parquet)$", 1)
 
-  /** [[readFiles]] plus the two hidden columns a position delete keys
-    * on: `_graft_file` (absolute scan path) and `_graft_pos` (the
-    * parquet row index — stable physical position within the file). */
-  private def readFilesMeta(spark: SparkSession, dir: String,
-      files: Seq[String],
-      schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val mapped = schemaHint.filter(ColumnMapping.hasMapping)
-    val scanHint = mapped.map(ColumnMapping.physicalSchema).orElse(schemaHint)
-    def withMeta(df: DataFrame): DataFrame =
-      df.select(col("*"),
-        col("_metadata.file_path").as("_graft_file"),
-        col("_metadata.row_index").as("_graft_pos"))
-    def reader = {
-      val r = spark.read
-      scanHint.foreach(r.schema)
-      r
-    }
-    val raw =
-      if (files.forall(partitionValuesOf(_).isEmpty))
-        withMeta(reader.parquet(files.map(f => s"$dir/$f"): _*))
-      else files.groupBy(_.split('/').head).toSeq.sortBy(_._1)
-        .map { case (dataDir, fs) =>
-          withMeta(reader.option("basePath", s"$dir/$dataDir")
-            .parquet(fs.map(f => s"$dir/$f"): _*))
-        }
-        .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-    // logical projection keeps the two hidden position-delete tags
-    mapped.fold(raw)(ColumnMapping.toLogical(raw, _,
-      extra = Seq("_graft_file", "_graft_pos")))
-  }
-
-  /** [[readFilesMeta]] with the snapshot's position deletes applied —
-    * the LIVE rows of `files`, still carrying `_graft_file`/`_graft_pos`
+  /** [[readFiles]] with `positions`, minus the rows the snapshot's
+    * position deletes name — the LIVE rows of `files`, still carrying
+    * `_graft_file`/`_graft_pos`
     * (what a merge-on-read DML needs: judge the predicate on live rows
-    * only, then target the survivors by position). */
+    * only, then target the survivors by position). A broadcast
+    * anti-join on (relative file path, row index) — the merge-on-read
+    * contract, correct as long as delete sets stay small relative to
+    * the data (their reason to exist; [[compact]] purges them back to
+    * zero). */
   private[graft] def readFilesMetaApplyingDeletes(spark: SparkSession,
       dir: String, files: Seq[String], deleteFiles: Seq[String],
       schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame = {
-    val metaDf = readFilesMeta(spark, dir, files, schemaHint)
+    val metaDf = readFiles(spark, dir, files, schemaHint, positions = true)
     if (deleteFiles.isEmpty) return metaDf
     import org.apache.spark.sql.functions.{broadcast, col}
     val dels = spark.read.parquet(deleteFiles.map(f => s"$dir/$f"): _*)
       .select(col("file_path").as("_graft_del_file"),
         col("pos").as("_graft_del_pos"))
     metaDf.withColumn("_graft_rel", relPathCol)
-      .join(broadcast(dels),
-        col("_graft_rel") =!= "" &&
-          col("_graft_rel") === col("_graft_del_file") &&
-          col("_graft_pos") === col("_graft_del_pos"),
-        "left_anti")
-      .drop("_graft_rel")
-  }
-
-  /** Read `files` with the snapshot's position deletes applied: a
-    * broadcast anti-join on (relative file path, row index) — the
-    * merge-on-read contract, correct as long as delete sets stay small
-    * relative to the data (their reason to exist; [[compact]] purges
-    * them back to zero). */
-  private[graft] def readFilesApplyingDeletes(spark: SparkSession, dir: String,
-      files: Seq[String], deleteFiles: Seq[String],
-      schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    if (deleteFiles.isEmpty) return readFiles(spark, dir, files, schemaHint)
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val dels = spark.read.parquet(deleteFiles.map(f => s"$dir/$f"): _*)
-      .select(col("file_path").as("_graft_del_file"),
-        col("pos").as("_graft_del_pos"))
-    val dataCols = // pre-meta schema
-      readFiles(spark, dir, files, schemaHint).columns
-    readFilesMeta(spark, dir, files, schemaHint)
-      .withColumn("_graft_rel", relPathCol)
       // the "" guard: an unextractable path must KEEP its rows (fail
       // open), never match an equally-unextractable delete entry —
       // "" == "" once deleted every row of the table in development
@@ -476,8 +437,18 @@ object Manifest {
           col("_graft_rel") === col("_graft_del_file") &&
           col("_graft_pos") === col("_graft_del_pos"),
         "left_anti")
-      .select(dataCols.map(col): _*)
+      .drop("_graft_rel")
   }
+
+  /** Read `files` with the snapshot's position deletes applied — the
+    * table columns of [[readFilesMetaApplyingDeletes]]. */
+  private[graft] def readFilesApplyingDeletes(spark: SparkSession, dir: String,
+      files: Seq[String], deleteFiles: Seq[String],
+      schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
+      : DataFrame =
+    if (deleteFiles.isEmpty) readFiles(spark, dir, files, schemaHint)
+    else readFilesMetaApplyingDeletes(spark, dir, files, deleteFiles,
+      schemaHint).drop("_graft_file", "_graft_pos")
 
   /** Result of a [[deleteRangeMOR]] commit: the data files the delete
     * targets (NONE of them rewritten — that is the point), the count of
@@ -504,12 +475,10 @@ object Manifest {
     require(snapshot.matches("[A-Za-z0-9._-]+"), s"unsafe snapshot id: $snapshot")
     val (fsys, base) = fs(spark, dir)
     val priors = retained(fsys, base)
-    val cur = priors.lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $dir"))
-    require(priors.forall(_.snapshot != snapshot),
-      s"snapshot $snapshot already committed under $dir")
-    val delDir = new Path(base, s"deletes-$snapshot")
-    require(!fsys.exists(delDir), s"deletes-$snapshot already landed under $dir")
+    val cur = headOrThrow(priors.lastOption, dir)
+    requireFresh(priors, snapshot, dir)
+    require(!fsys.exists(new Path(base, s"deletes-$snapshot")),
+      s"deletes-$snapshot already landed under $dir")
     // same exact-partition-first / footer-bounds-second prune as the COW
     // path; the partition comparison uses the FULL file list's recovered
     // type — the type the row predicate casts to (a touched-subset read
@@ -557,30 +526,11 @@ object Manifest {
       snapshot: String, touch: Seq[String],
       hits: DataFrame, beforePublish: () => Unit = () => ()): MorDelete = {
     require(snapshot.matches("[A-Za-z0-9._-]+"), s"unsafe snapshot id: $snapshot")
-    import org.apache.spark.sql.functions.col
     val (fsys, base) = fs(spark, dir)
     val priors = retained(fsys, base)
     require(priors.nonEmpty, s"no committed snapshot under $dir")
-    require(priors.forall(_.snapshot != snapshot),
-      s"snapshot $snapshot already committed under $dir")
-    val delDir = new Path(base, s"deletes-$snapshot")
-    require(!fsys.exists(delDir), s"deletes-$snapshot already landed under $dir")
-    val dels = hits
-      .select(relPathCol.as("file_path"), col("_graft_pos").as("pos"))
-      // the spec's required sort order for position deletes; also keeps
-      // the tiny file deterministic
-      .orderBy("file_path", "pos")
-    dels.coalesce(1).write.parquet(delDir.toString)
-    val delFiles = fsys.listStatus(delDir).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .sorted.map(n => s"deletes-$snapshot/$n")
-    val landed = spark.read.parquet(delFiles.map(f => s"$dir/$f"): _*)
-    // fail LOUDLY if any delete row lost its file path — such a row
-    // would silently never apply (readers fail open on "")
-    require(landed.where("file_path = '' OR file_path IS NULL").count() == 0,
-      s"position-delete rows with unextractable file paths under $delDir")
-    val n = landed.count()
+    requireFresh(priors, snapshot, dir)
+    val (delFiles, n) = landPositionDeletes(spark, dir, snapshot, hits)
     // the change record: the deleted rows themselves — the MOR commit
     // adds no data files, so without it the change feed could never
     // represent this deletion (the position list names rows, not values)
@@ -647,27 +597,13 @@ object Manifest {
       cdc: DataFrame, partitionCols: Seq[String],
       beforePublish: () => Unit = () => ()): Unit = {
     require(snapshot.matches("[A-Za-z0-9._-]+"), s"unsafe snapshot id: $snapshot")
-    import org.apache.spark.sql.functions.col
     val (fsys, base) = fs(spark, dir)
     val priors = retained(fsys, base)
-    val cur = priors.lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $dir"))
-    require(priors.forall(_.snapshot != snapshot),
-      s"snapshot $snapshot already committed under $dir")
-    val delDir = new Path(base, s"deletes-$snapshot")
+    val cur = headOrThrow(priors.lastOption, dir)
+    requireFresh(priors, snapshot, dir)
     val dataDir = new Path(base, s"data-$snapshot")
-    require(!fsys.exists(delDir), s"deletes-$snapshot already landed under $dir")
     require(!fsys.exists(dataDir), s"data-$snapshot already landed under $dir")
-    hits.select(relPathCol.as("file_path"), col("_graft_pos").as("pos"))
-      .orderBy("file_path", "pos")
-      .coalesce(1).write.parquet(delDir.toString)
-    val delFiles = fsys.listStatus(delDir).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .sorted.map(n => s"deletes-$snapshot/$n")
-    val landed = spark.read.parquet(delFiles.map(f => s"$dir/$f"): _*)
-    require(landed.where("file_path = '' OR file_path IS NULL").count() == 0,
-      s"position-delete rows with unextractable file paths under $delDir")
+    val (delFiles, _) = landPositionDeletes(spark, dir, snapshot, hits)
     // the updated copies land through the same logical→physical choke
     // point as every writer — CHECK constraints included (an UPDATE
     // must not be the door through which a violating value enters)
@@ -679,17 +615,11 @@ object Manifest {
     else toLand.write.partitionBy(partitionCols: _*).parquet(dataDir.toString)
     try verifyConstraints()
     catch { case t: Throwable =>
-      fsys.delete(dataDir, true); fsys.delete(delDir, true); throw t
+      fsys.delete(dataDir, true)
+      fsys.delete(new Path(base, s"deletes-$snapshot"), true)
+      throw t
     }
-    def walk(p: Path, rel: String): Seq[String] =
-      fsys.listStatus(p).toSeq.sortBy(_.getPath.getName).flatMap { st =>
-        val nm = st.getPath.getName
-        if (st.isDirectory && nm.contains("=")) walk(st.getPath, s"$rel$nm/")
-        else if (!st.isDirectory && nm.startsWith("part-") &&
-          nm.endsWith(".parquet")) Seq(s"$rel$nm")
-        else Nil
-      }
-    val newFiles = walk(dataDir, "").map(f => s"data-$snapshot/$f")
+    val newFiles = landedParts(fsys, base, s"data-$snapshot")
     val cdcFs = landCdc(spark, dir, snapshot, cdc)
     publishManifest(fsys, base, dir, snapshot, priors,
       cur.files ++ newFiles, cur.deleteFiles ++ delFiles, beforePublish,
@@ -748,17 +678,55 @@ object Manifest {
     * buys nothing at the scale it exists for. Returns the
     * manifest-relative cdc file paths. */
   private def landCdc(spark: SparkSession, dir: String, snapshot: String,
-      cdcDf: DataFrame, landingBytes: Option[Long] = None): Seq[String] = {
+      cdcDf: DataFrame): Seq[String] = {
     val (fsys, base) = fs(spark, dir)
     val cdcDir = new Path(base, s"cdc-$snapshot")
     require(!fsys.exists(cdcDir), s"cdc-$snapshot already landed under $dir")
     val toLand = sizeForLanding(declaredSchema(spark, dir)
       .filter(ColumnMapping.hasMapping)
-      .fold(cdcDf)(ColumnMapping.toPhysical(cdcDf, _)), landingBytes)
+      .fold(cdcDf)(ColumnMapping.toPhysical(cdcDf, _)))
     toLand.write.parquet(cdcDir.toString)
-    fsys.listStatus(cdcDir).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-      .sorted.map(n => s"cdc-$snapshot/$n")
+    landedParts(fsys, base, s"cdc-$snapshot")
+  }
+
+  /** Land `hits`' (file, row-index) pairs — rows carrying
+    * `_graft_file`/`_graft_pos` — as the one-file position-delete list
+    * `deletes-<snapshot>/`, sorted (the spec's required order for
+    * position deletes; also keeps the tiny file deterministic). Returns
+    * the manifest-relative delete files and the landed row count. */
+  private def landPositionDeletes(spark: SparkSession, dir: String,
+      snapshot: String, hits: DataFrame): (Seq[String], Long) = {
+    val (fsys, base) = fs(spark, dir)
+    val delDir = new Path(base, s"deletes-$snapshot")
+    require(!fsys.exists(delDir), s"deletes-$snapshot already landed under $dir")
+    hits.select(relPathCol.as("file_path"), F.col("_graft_pos").as("pos"))
+      .orderBy("file_path", "pos")
+      .coalesce(1).write.parquet(delDir.toString)
+    val delFiles = landedParts(fsys, base, s"deletes-$snapshot")
+    val landed = spark.read.parquet(delFiles.map(f => s"$dir/$f"): _*)
+      .selectExpr("count(*)", "count_if(file_path = '' OR file_path IS NULL)")
+      .head()
+    // fail LOUDLY if any delete row lost its file path — such a row
+    // would silently never apply (readers fail open on "")
+    require(landed.getLong(1) == 0,
+      s"position-delete rows with unextractable file paths under $delDir")
+    (delFiles, landed.getLong(0))
+  }
+
+  /** Manifest-relative part files landed under `base/sub`, sorted:
+    * flat for an unpartitioned landing, descending through `k=v/` dirs
+    * for a partitioned one — rel paths keep the partition segments so
+    * the manifest IS the partition index. */
+  private def landedParts(fsys: FileSystem, base: Path, sub: String): Seq[String] = {
+    def walk(p: Path, rel: String): Seq[String] =
+      fsys.listStatus(p).toSeq.sortBy(_.getPath.getName).flatMap { st =>
+        val n = st.getPath.getName
+        if (st.isDirectory && n.contains("=")) walk(st.getPath, s"$rel$n/")
+        else if (!st.isDirectory && n.startsWith("part-") &&
+          n.endsWith(".parquet")) Seq(s"$rel$n")
+        else Nil
+      }
+    walk(new Path(base, sub), s"$sub/")
   }
 
   /** Default per-file landing target (in OPTIMIZER-ESTIMATED bytes;
@@ -836,10 +804,15 @@ object Manifest {
   }
 
   /** Total on-disk bytes of manifest-relative `files` under `dir` —
-    * the landing-size hint a DML rewrite passes to its commit. */
-  def filesBytes(spark: SparkSession, dir: String, files: Seq[String]): Long = {
+    * the landing-size hint a DML rewrite passes to its commit. None
+    * when a file has vanished (a concurrent rewrite plus vacuum): the
+    * commit then sizes from plan stats and its conflict check decides
+    * the outcome. */
+  def filesBytes(spark: SparkSession, dir: String,
+      files: Seq[String]): Option[Long] = {
     val (fsys, base) = fs(spark, dir)
-    files.map(f => fsys.getFileStatus(new Path(base, f)).getLen).sum
+    try Some(files.map(f => fsys.getFileStatus(new Path(base, f)).getLen).sum)
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Declared CHECK constraints of the table dir — (name, predicate
@@ -909,8 +882,7 @@ object Manifest {
     val (fsys, base) = fs(spark, dir)
     val dataDir = new Path(base, s"data-$snapshot")
     require(!fsys.exists(dataDir), s"snapshot $snapshot already landed under $dir")
-    require(retained(fsys, base).forall(_.snapshot != snapshot),
-      s"snapshot $snapshot already committed under $dir")
+    requireFresh(retained(fsys, base), snapshot, dir)
     // CHECK constraints gate every writer at this choke point, on the
     // LOGICAL frame (predicates name logical columns), riding the
     // write job's own pass — a violating batch lands nothing durable
@@ -926,22 +898,10 @@ object Manifest {
     else toLand.write.partitionBy(partitionCols: _*).parquet(dataDir.toString)
     try verifyConstraints()
     catch { case t: Throwable => fsys.delete(dataDir, true); throw t }
-    // list the landed part files: flat for an unpartitioned snapshot,
-    // descending through `k=v/` dirs for a partitioned one — rel paths
-    // keep the partition segments so the manifest IS the partition index
-    def walk(p: Path, rel: String): Seq[String] =
-      fsys.listStatus(p).toSeq.sortBy(_.getPath.getName).flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.contains("=")) walk(st.getPath, s"$rel$n/")
-        else if (!st.isDirectory && n.startsWith("part-") &&
-          n.endsWith(".parquet")) Seq(s"$rel$n")
-        else Nil
-      }
-    val files = walk(dataDir, "")
+    val files = landedParts(fsys, base, s"data-$snapshot")
     // the commit's row-level change record lands beside the data —
     // published (or orphaned) together with it
-    val cdcLanded = cdc.map(landCdc(spark, dir, snapshot, _, landingBytes))
-      .getOrElse(Nil)
+    val cdcLanded = cdc.map(landCdc(spark, dir, snapshot, _)).getOrElse(Nil)
     val cdcRec = cdc.isDefined || cdcNoChange
     // COMMIT REBASE (Delta's OptimisticTransaction shape), two tiers:
     //
@@ -982,8 +942,7 @@ object Manifest {
     val cowRebase = cowBase.isDefined && carriedExplicit.isDefined
     def attempt(): Unit = {
       val priors = retained(fsys, base)
-      require(priors.forall(_.snapshot != snapshot),
-        s"snapshot $snapshot already committed under $dir")
+      requireFresh(priors, snapshot, dir)
       val carried: Seq[String] =
         if (cowRebase) {
           val bse = cowBase.get
@@ -1021,7 +980,7 @@ object Manifest {
         if (carryForward) priors.lastOption.map(_.deleteFiles).getOrElse(Nil)
         else Nil)
       publishManifest(fsys, base, dir, snapshot, priors,
-        carried ++ files.map(f => s"data-$snapshot/$f"), deletes, beforePublish,
+        carried ++ files, deletes, beforePublish,
         rewrite, cdcFiles = cdcLanded, cdcRecorded = cdcRec,
         expectedSeq = expectedSeq)
     }
@@ -1085,8 +1044,7 @@ object Manifest {
     }
     if (overwrite) {
       val priors = retained(fsys, base)
-      require(priors.forall(_.snapshot != snapshot),
-        s"snapshot $snapshot already committed under $dir")
+      requireFresh(priors, snapshot, dir)
       // re-packs previously-served rows ⇒ rewrite-flagged (non-initial)
       publishManifest(fsys, base, dir, snapshot, priors, newFiles, Nil,
         rewrite = priors.nonEmpty)
@@ -1095,8 +1053,7 @@ object Manifest {
       var done = false
       while (!done) {
         val priors = retained(fsys, base)
-        require(priors.forall(_.snapshot != snapshot),
-          s"snapshot $snapshot already committed under $dir")
+        requireFresh(priors, snapshot, dir)
         val head = priors.lastOption
         try {
           publishManifest(fsys, base, dir, snapshot, priors,
@@ -1139,8 +1096,7 @@ object Manifest {
     val (fsys, base) = fs(spark, dir)
     val priors = retained(fsys, base)
     require(priors.nonEmpty, s"no committed snapshot under $dir")
-    require(priors.forall(_.snapshot != snapshot),
-      s"snapshot $snapshot already committed under $dir")
+    requireFresh(priors, snapshot, dir)
     val head = priors.last
     // head-consistency vs expectedSeq is enforced inside
     // publishManifest (shared by every expectedSeq caller)
@@ -1166,17 +1122,8 @@ object Manifest {
 
   private[graft] def newestEmbeddedMetaB64(fsys: FileSystem,
       base: Path): Option[String] = {
-    if (!fsys.exists(base)) return None
-    val byNewest = fsys.listStatus(base).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        n.startsWith("manifest-") && n.endsWith(".json")
-      }
-      .flatMap(st => st.getPath.getName.stripPrefix("manifest-")
-        .stripSuffix(".json").toLongOption.map(_ -> st))
-      .sortBy(-_._1)
     if (metaB64Cache.size > 65536) metaB64Cache.clear()
-    byNewest.iterator.flatMap { case (_, st) =>
+    listManifests(fsys, base).reverseIterator.flatMap { st =>
       val key = s"${st.getPath}#${st.getLen}#${st.getModificationTime}"
       metaB64Cache.computeIfAbsent(key,
         _ => parse(fsys, st.getPath).flatMap(_.metaB64))
@@ -1213,41 +1160,20 @@ object Manifest {
             "state must be re-derived")
     }
     val seq = expectedSeq.getOrElse((priors.map(_.seq) :+ -1L).max + 1)
-    val body = allFiles.map(f => s"""    "$f"""").mkString(",\n")
-    val delBlock =
-      if (deleteFiles.isEmpty) ""
-      else deleteFiles.map(f => s"""    "$f"""")
-        .mkString(",\n  \"delete_files\": [\n", ",\n", "\n  ]")
     // `rewrite: true` marks commits whose NEW files re-serve rows older
     // snapshots already contained (compaction, COW DML) — the analogue
     // of Delta's dataChange=false, which [[readChangesSince]] refuses to
-    // diff across instead of re-serving old rows as changes
-    val rewriteBlock = if (rewrite) ",\n  \"rewrite\": true" else ""
-    // the DDL payload rides IN the commit (Delta's metaData action):
+    // diff across instead of re-serving old rows as changes. The DDL
+    // payload (`metaB64`) rides IN the commit (Delta's metaData action):
     // meta state and its seq publish under ONE atomic rename, so a
-    // racing ALTER can never acknowledge a change computed from a
-    // state the table had already left
-    val metaBlock = metaB64.map(b => s""",\n  "meta_b64": "$b"""").getOrElse("")
-    // CDF state: the flag means "this commit's logical change is fully
-    // described by the listed cdc files" (Delta's rule that cdc actions
-    // supersede add/remove derivation) — an empty recorded list is a
-    // real statement ("no row changed": compaction, zorder)
-    val cdcBlock =
-      if (!cdcRecorded) ""
-      else if (cdcFiles.isEmpty) ",\n  \"cdc_recorded\": true"
-      else cdcFiles.map(f => s"""    "$f"""")
-        .mkString(",\n  \"cdc_recorded\": true,\n  \"cdc_files\": [\n",
-          ",\n", "\n  ]")
-    val json =
-      s"""{
-         |  "snapshot": "$snapshot",
-         |  "commit_seq": $seq,
-         |  "committed_at": ${System.currentTimeMillis()},
-         |  "files": [
-         |$body
-         |  ]$delBlock$rewriteBlock$metaBlock$cdcBlock
-         |}
-         |""".stripMargin
+    // racing ALTER can never acknowledge a change computed from a state
+    // the table had already left. `cdcRecorded` means "this commit's
+    // logical change is fully described by the listed cdc files"
+    // (Delta's rule that cdc actions supersede add/remove derivation) —
+    // an empty recorded list is a real statement ("no row changed":
+    // compaction, zorder)
+    val json = encode(ManifestData(snapshot, seq, allFiles, deleteFiles,
+      System.currentTimeMillis(), rewrite, metaB64, cdcFiles, cdcRecorded))
     val tmp = new Path(base, s".manifest-$snapshot.tmp")
     val out = fsys.create(tmp, true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
@@ -1363,9 +1289,7 @@ object Manifest {
     * as absent (error), not as empty. Evolved tables (DDL sidecar with
     * a declared schema) read under that schema — see [[declaredSchema]]. */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val (fsys, base) = fs(spark, dir)
-    val m = retained(fsys, base).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $dir"))
+    val m = headOrThrow(head(spark, dir), dir)
     require(m.files.nonEmpty, s"no committed snapshot under $dir")
     readFilesApplyingDeletes(spark, dir, m.files, m.deleteFiles,
       declaredSchema(spark, dir))
@@ -1629,9 +1553,8 @@ object Manifest {
       beforePublish: () => Unit = () => (),
       cdcOf: (DataFrame, org.apache.spark.sql.Column) => Option[DataFrame] =
         (_, _) => None): CowRewrite = {
-    val (fsys, base) = fs(spark, dir)
-    val cur = retained(fsys, base).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $dir"))
+    val (_, base) = fs(spark, dir)
+    val cur = headOrThrow(head(spark, dir), dir)
     val files = cur.files
     require(files.nonEmpty, s"no committed snapshot under $dir")
     // partition values prune EXACTLY and for free (path strings); only
@@ -1789,14 +1712,10 @@ object Manifest {
     require(targetFileBytes > 0,
       s"compact: targetFileBytes must be > 0, got $targetFileBytes")
     val (fsys, base) = fs(spark, dir)
-    val cur = retained(fsys, base).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot under $dir"))
+    val cur = headOrThrow(head(spark, dir), dir)
     val scoped = where.nonEmpty
     require(scoped || cur.files.nonEmpty, s"no committed snapshot under $dir")
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    val (touch, keep) = cur.files.partition(f => where.forall { case (k, v) =>
-      f.contains(s"/${escapePathName(k)}=${escapePathName(v)}/")
-    })
+    val (touch, keep) = cur.files.partition(inPartitions(where))
     if (touch.isEmpty) return CowRewrite(Nil, keep, None)
     val partCols = partitionBy.getOrElse(
       graft.sources.GraftSource.uniformPartitionCols(touch).getOrElse(Nil))

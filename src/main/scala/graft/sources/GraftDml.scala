@@ -188,8 +188,7 @@ private[sources] object GraftDmlExec {
     * empty — DELETE/UPDATE no-op, MERGE starts from zero rows. */
   def headOrFail(spark: SparkSession, dir: String,
       pinned: String): Option[Manifest.ManifestData] = {
-    val head = Manifest.history(spark, dir).lastOption
-    (head, pinned) match {
+    (Manifest.head(spark, dir), pinned) match {
       case (None, "") => None
       case (Some(cur), "") =>
         throw new IllegalStateException(
@@ -510,7 +509,7 @@ private[sources] object GraftDmlExec {
     // a join-derived rewrite plan over-counts by orders of magnitude
     // and would leave one near-empty part file per shuffle partition
     val touchedBytes = if (touch.isEmpty) None
-      else Some(math.max(1L, Manifest.filesBytes(spark, dir, touch)))
+      else Manifest.filesBytes(spark, dir, touch).map(math.max(1L, _))
     Manifest.writeImpl(rewritten, dir, snap, beforePublishHook,
       carriedExplicit = Some(keep), partitionCols = partCols,
       deletesExplicit = Some(deleteFiles), rewrite = touch.nonEmpty,

@@ -174,7 +174,7 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
     val dir = opts.getOrElse("path", throw new IllegalArgumentException(
       "graft: .save(<manifest table dir>) is required"))
     val spark = sqlContext.sparkSession
-    val exists = Manifest.history(spark, dir).nonEmpty
+    val exists = Manifest.head(spark, dir).nonEmpty
     def snap(): String = opts.getOrElse("snapshot",
       s"w${System.currentTimeMillis()}-${java.util.UUID.randomUUID().toString.take(8)}")
     val partCols = opts.get("partitionby").map(_.split(",").map(_.trim).toSeq
@@ -405,7 +405,7 @@ object GraftSource {
     * declared no partitioning. */
   private[graft] def uniformPartitionColsOf(spark: SparkSession,
       dir: String): Seq[String] =
-    Manifest.history(spark, dir).lastOption.map(_.files)
+    Manifest.head(spark, dir).map(_.files)
       .flatMap(uniformPartitionCols).getOrElse(Nil)
 }
 

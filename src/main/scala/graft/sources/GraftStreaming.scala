@@ -255,7 +255,7 @@ class GraftStreamSource(spark: SparkSession, dir: String,
   @volatile private var availableNowEnd: Option[Long] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowEnd = Manifest.history(spark, dir).lastOption.map(_.seq)
+    availableNowEnd = Manifest.head(spark, dir).map(_.seq)
 
   /** Admission is applied inside [[latestOffset]] (exactly like
     * FileStreamSource's option-driven caps), so the engine-side limit
@@ -522,7 +522,7 @@ class GraftSink(spark: SparkSession, dir: String,
     // own write action on it (ForeachBatchSink's own move)
     val batch = Bridge.internalFrame(data.sparkSession,
       data.queryExecution.toRdd, data.schema, isStreaming = false)
-    val exists = Manifest.history(spark, dir).nonEmpty
+    val exists = Manifest.head(spark, dir).nonEmpty
     mode match {
       case m if m == OutputMode.Append() =>
         if (!exists) {

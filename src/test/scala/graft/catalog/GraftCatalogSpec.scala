@@ -1112,7 +1112,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     // a target far below the table's bytes plans more files than there
     // are rows: the count must be what was committed, not what was planned
     val target = math.max(1L, Manifest.filesBytes(spark, dir,
-      Manifest.currentFiles(spark, dir)) / 20)
+      Manifest.currentFiles(spark, dir)).get / 20)
     Seq(s"compact(table => 'db.fcount', target_file_bytes => $target)",
       s"zorder(table => 'db.fcount', columns => 'x', " +
         s"target_file_bytes => $target)").foreach { call =>

@@ -115,7 +115,7 @@ class ManifestSpec extends AnyFunSuite {
         .select("id", "seg", "v").as[(Long, String, Long)].collect().sorted.toSeq
       val rowsBefore = content
       assert(rowsBefore.size == 960)
-      val bytes = Manifest.filesBytes(spark, dir, before.files)
+      val bytes = Manifest.filesBytes(spark, dir, before.files).get
       // flat rewrites split into two files; partitioned ones write one
       // file per value (clustered: one range task)
       val target = if (c.partitioned) Long.MaxValue else bytes / 2 + 1
@@ -768,5 +768,104 @@ class ManifestSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       Manifest.readChangesSince(spark, dir, "wk2")
     }
+  }
+
+  /** Every field set, in the layout the string-template writer put on
+    * disk before the manifest codec existed: two-space indent, one file
+    * per line, optional fields after `files`. The partition values are
+    * hive-escaped ('=' and ' ' rendered as %3D and %20). */
+  private val prettyFixture =
+    """{
+      |  "snapshot": "s3",
+      |  "commit_seq": 3,
+      |  "committed_at": 1760000000000,
+      |  "files": [
+      |    "data-s1/tag=a%3Db/part-00000-1f.c000.snappy.parquet",
+      |    "data-s2/tag=en%20us/part-00001-2e.c000.snappy.parquet"
+      |  ],
+      |  "delete_files": [
+      |    "deletes-s3/part-00000-3d.c000.snappy.parquet"
+      |  ],
+      |  "rewrite": true,
+      |  "meta_b64": "eyJzY2hlbWEiOiJ4In0=",
+      |  "cdc_recorded": true,
+      |  "cdc_files": [
+      |    "cdc-s3/part-00000-4c.c000.snappy.parquet"
+      |  ]
+      |}
+      |""".stripMargin
+
+  private val fixtureData = Manifest.ManifestData("s3", 3L,
+    Seq("data-s1/tag=a%3Db/part-00000-1f.c000.snappy.parquet",
+      "data-s2/tag=en%20us/part-00001-2e.c000.snappy.parquet"),
+    Seq("deletes-s3/part-00000-3d.c000.snappy.parquet"),
+    committedAt = 1760000000000L, rewrite = true,
+    metaB64 = Some("eyJzY2hlbWEiOiJ4In0="),
+    cdcFiles = Seq("cdc-s3/part-00000-4c.c000.snappy.parquet"),
+    cdcRecorded = true)
+
+  /** Retained history of a table dir holding `text` as manifest-3. */
+  private def historyOf(text: String) = {
+    val dir = tmpDir()
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "manifest-3.json"),
+      text.getBytes("UTF-8"))
+    Manifest.history(spark, dir)
+  }
+
+  test("pretty-printed and one-line manifests on disk read to the same data") {
+    val oneLine = prettyFixture.linesIterator.map(_.trim).mkString
+      .replace("\": ", "\":")
+    assert(historyOf(prettyFixture) == Seq(fixtureData))
+    assert(historyOf(oneLine) == Seq(fixtureData))
+    assert(Manifest.partitionValuesOf(fixtureData.files.head) == Seq("tag" -> "a=b"))
+    // a body without snapshot or commit_seq is no commit
+    assert(historyOf(prettyFixture.replace("\"snapshot\"", "\"snap\"")).isEmpty)
+    assert(historyOf(prettyFixture.replace("\"commit_seq\"", "\"seq\"")).isEmpty)
+  }
+
+  test("the manifest writer round-trips every field and omits empty ones") {
+    assert(Manifest.decode(Manifest.encode(fixtureData)).contains(fixtureData))
+    val optional = Seq("delete_files", "rewrite", "meta_b64", "cdc_recorded",
+      "cdc_files")
+    val bare = Manifest.ManifestData("s0", 0L, Seq("data-s0/part-0.parquet"),
+      committedAt = 7L)
+    val bareText = Manifest.encode(bare)
+    assert(Manifest.decode(bareText).contains(bare))
+    optional.foreach(k => assert(!bareText.contains(k), s"$k in $bareText"))
+    // recorded with zero cdc files ("no row changed"): flag only
+    val noChange = bare.copy(cdcRecorded = true)
+    val noChangeText = Manifest.encode(noChange)
+    assert(noChangeText.contains("cdc_recorded") &&
+      !noChangeText.contains("cdc_files"))
+    assert(Manifest.decode(noChangeText).contains(noChange))
+    // a real commit's manifest carries what its history reports
+    val dir = tmpDir()
+    Manifest.write((1 to 10).toDF("v"), dir, "w0")
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, "manifest-0.json")), "UTF-8")
+    assert(Manifest.decode(text).toSeq == Manifest.history(spark, dir))
+  }
+
+  test("readWherePartitions applies the head's position deletes") {
+    val dir = tmpDir()
+    Manifest.writePartitioned(spark.range(0, 300)
+      .selectExpr("id", "IF(id % 2 = 0, 'e', 'o') AS seg"), dir, "base",
+      Seq("seg"))
+    Manifest.deleteRangeMOR(spark, dir, "id", "0", "99", "mor")
+    assert(Manifest.history(spark, dir).last.deleteFiles.nonEmpty)
+    val e = Manifest.readWherePartitions(spark, dir, Map("seg" -> "e"))
+    assert(e.columns.toSet == Set("id", "seg"))
+    assert(e.select("id").as[Long].collect().sorted.toSeq ==
+      (100L until 300L by 2))
+  }
+
+  test("the landing-size hint over a vanished file is None, not a throw") {
+    val dir = tmpDir()
+    Manifest.write((1 to 10).toDF("v"), dir, "s1")
+    val files = Manifest.currentFiles(spark, dir)
+    assert(Manifest.filesBytes(spark, dir, files).exists(_ > 0))
+    // a concurrent rewrite plus vacuum removed a touched file
+    assert(new java.io.File(s"$dir/${files.head}").delete())
+    assert(Manifest.filesBytes(spark, dir, files).isEmpty)
   }
 }
