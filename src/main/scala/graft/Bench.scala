@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line with per-query wall-clock seconds. A warmup pass
   * (table scans + one tiny query) precedes timing so JVM/codegen warmup
@@ -9,29 +7,19 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT96 (the 4.x default) is deprecated AND carries no usable footer
-      // stats - micros keeps timestamp columns data-skippable
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      // engine optimizer rules (e.g. fold-over-zip → native VecDot)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, Map(
+      "spark.sql.adaptive.enabled" -> "true",
       // session-aging control: with the UI off, the status stores still
       // retain per-execution plan graphs + metrics and per-job/stage state
       // for the WHOLE 249-query run (defaults: 1000 executions), and that
       // heap buildup taxed late-alphabet queries ~2-4x in round 5 (fresh-
       // JVM control: q_window_rank 0.15s vs 0.54s in-session, q_winsorize
       // 0.54 vs 1.90). Keep only a handful of executions live.
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .getOrCreate()
+      "spark.sql.ui.retainedExecutions" -> "4",
+      "spark.ui.retainedJobs" -> "50",
+      "spark.ui.retainedStages" -> "50",
+      "spark.ui.retainedTasks" -> "500"))
     spark.sparkContext.setLogLevel("WARN")
 
     // warmup: touch every table (FS cache + parquet footers) and force one

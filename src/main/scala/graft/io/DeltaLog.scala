@@ -1611,29 +1611,15 @@ object DeltaLog {
       if (knownCard && totalCard <= MaxBroadcastDvPositions)
         F.broadcast(delDf)
       else delDf
-    def withMeta(df: DataFrame): DataFrame =
-      df.select(F.col("*"),
-        F.col("_metadata.file_path").as("_g_file"),
-        F.col("_metadata.row_index").as("_g_pos"))
-    val metaDf =
-      if (files.forall(Manifest.partitionValuesOf(_).isEmpty))
-        withMeta(spark.read.parquet(files.map(f => s"$dir/$f"): _*))
-      else files.groupBy(_.split('/').head).toSeq.sortBy(_._1)
-        .map { case (dataDir, fs2) =>
-          withMeta(spark.read.option("basePath", s"$dir/$dataDir")
-            .parquet(fs2.map(f => s"$dir/$f"): _*))
-        }
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-    val dataCols = Manifest.readFiles(spark, dir, files).columns
-    metaDf
-      .withColumn("_g_tail", F.element_at(F.split(F.col("_g_file"), "/"), -1))
+    Manifest.readFiles(spark, dir, files, positions = true)
+      .withColumn("_g_tail", F.element_at(F.split(F.col("_graft_file"), "/"), -1))
       .join(
         delSide.withColumn("_dv_tail",
           F.element_at(F.split(F.col("_dv_file"), "/"), -1)),
         F.col("_g_tail") === F.col("_dv_tail") &&
-          F.col("_g_pos") === F.col("_dv_pos") &&
-          F.col("_g_file").endsWith(F.concat(F.lit("/"), F.col("_dv_file"))),
+          F.col("_graft_pos") === F.col("_dv_pos") &&
+          F.col("_graft_file").endsWith(F.concat(F.lit("/"), F.col("_dv_file"))),
         "left_anti")
-      .select(dataCols.map(F.col): _*)
+      .drop("_graft_file", "_graft_pos", "_g_tail")
   }
 }

@@ -4,6 +4,8 @@ import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
 import java.time.{Instant, LocalDate, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
+import scala.util.Try
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.statistics.Statistics
@@ -14,6 +16,9 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, IntLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimestampLogicalTypeAnnotation, TimeUnit}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.types._
 
 /**
  * Per-file column statistics lifted from PARQUET FOOTERS — the
@@ -235,53 +240,166 @@ object FileStats {
       Some(if (srcMillis) math.multiplyExact(raw, 1000L) else raw)
   }
 
-  // ---- range overlap for stats-driven file pruning ----------------------
+  // ---- the one file split: zone maps over Catalyst expressions --------
 
-  /** Parse a user bound literal into `kind`'s value space (the space
-    * [[ColumnStat]] min/max live in): numerics as Long/Double, `Date` as
-    * ISO date → epoch-day, `Ts` as ISO date-time (optional fraction,
-    * optional trailing Z) → epoch-micros, strings verbatim. None =
-    * unparsable — callers must treat the file as "may match". */
-  def parseBound(kind: Kind, s: String): Option[Any] = kind match {
-    case Kind.I64 => s.toLongOption
-    case Kind.F64 => s.toDoubleOption
-    case Kind.Str => Some(s)
-    case Kind.Bool => s.toBooleanOption
-    case Kind.Date => scala.util.Try(
-      java.time.LocalDate.parse(s).toEpochDay).toOption
-    case Kind.Ts(_, _) => scala.util.Try {
-      val ldt = java.time.LocalDateTime.parse(s.stripSuffix("Z"))
-      ldt.toEpochSecond(ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L
-    }.toOption
-  }
-
-  private def cmpValues(a: Any, b: Any): Int = (a, b) match {
-    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-    case (x: Double, y: Double) => java.lang.Double.compare(x, y)
-    case (x: String, y: String) => x.compareTo(y)
-    case (x: Boolean, y: Boolean) => java.lang.Boolean.compare(x, y)
-    case _ => throw new IllegalArgumentException(
-      s"incomparable bound classes: ${a.getClass} vs ${b.getClass}")
-  }
-
-  /** Can this file hold rows with `column` ∈ [lo, hi] (literals per
-    * [[parseBound]])? KEEP (true) whenever pruning cannot be PROVEN
-    * sound — column or bounds absent, literal unparsable. The one
-    * bounds-free skip is a provably all-null column (nullCount ==
-    * numRecords): a range predicate never matches NULL. */
-  def mayMatch(fst: FileStat, column: String, lo: String, hi: String): Boolean =
-    fst.columns.toMap.get(column) match {
-      case None => true
-      case Some(c) => (c.min, c.max) match {
-        case (Some(mn), Some(mx)) =>
-          (parseBound(c.kind, lo), parseBound(c.kind, hi)) match {
-            case (Some(loV), Some(hiV)) =>
-              !(cmpValues(mx, loV) < 0 || cmpValues(mn, hiV) > 0)
-            case _ => true
-          }
-        case _ => !(fst.numRecords > 0 && c.nullCount.contains(fst.numRecords))
-      }
+  /** Catalyst literal → the [[ColumnStat]] value space; None on any
+    * mismatch (keep the file). */
+  private def toStatSpace(v: Any, dt: DataType, kind: Kind): Option[Any] =
+    (dt, kind) match {
+      case (ByteType | ShortType | IntegerType, Kind.I64) =>
+        Some(v.asInstanceOf[Number].longValue())
+      case (LongType, Kind.I64) => Some(v.asInstanceOf[Long])
+      case (FloatType | DoubleType, Kind.F64) =>
+        Some(v.asInstanceOf[Number].doubleValue())
+      case (StringType, Kind.Str) => Some(v.toString)
+      case (BooleanType, Kind.Bool) => Some(v.asInstanceOf[Boolean])
+      case (DateType, Kind.Date) =>
+        Some(v.asInstanceOf[Number].longValue()) // catalyst days == epoch-day
+      case (TimestampType | TimestampNTZType, Kind.Ts(_, _)) =>
+        Some(v.asInstanceOf[Long]) // catalyst micros == stat micros
+      case _ => None
     }
+
+  private def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
+    case (x: Long, y: Long) => Some(java.lang.Long.compare(x, y))
+    case (x: Double, y: Double) => Some(java.lang.Double.compare(x, y))
+    case (x: String, y: String) => Some(x.compareTo(y))
+    case (x: Boolean, y: Boolean) => Some(java.lang.Boolean.compare(x, y))
+    case _ => None
+  }
+
+  /** The zone-map check: can the file hold a row satisfying this
+    * conjunct? Attribute names are the files' PHYSICAL column names.
+    * True whenever pruning cannot be PROVEN sound. Bounds are over
+    * non-null values, so a provably all-null column fails every value
+    * predicate (and satisfies IS NULL). */
+  def mayMatch(fst: FileStat, e: Expression): Boolean = {
+    def colStat(name: String): Option[ColumnStat] =
+      fst.columns.find(_._1 == name).map(_._2)
+    def allNull(c: ColumnStat): Boolean =
+      fst.numRecords > 0 && c.nullCount.contains(fst.numRecords)
+    // evaluate `test(min, max)` when the column has provable bounds;
+    // all-null columns fail value predicates; anything unprovable keeps
+    def onBounds(name: String)(test: (Any, Any) => Option[Boolean]): Boolean =
+      colStat(name) match {
+        case None => true
+        case Some(c) => (c.min, c.max) match {
+          case (Some(mn), Some(mx)) => test(mn, mx).getOrElse(true)
+          case _ => !allNull(c)
+        }
+      }
+    def lit(l: Literal, name: String): Option[Any] =
+      colStat(name).flatMap(c => Option(l.value).flatMap(v =>
+        toStatSpace(v, l.dataType, c.kind)))
+    e match {
+      case And(l, r) => mayMatch(fst, l) && mayMatch(fst, r)
+      case EqualTo(a: AttributeReference, l: Literal) =>
+        lit(l, a.name).forall(v => onBounds(a.name)((mn, mx) =>
+          for (c1 <- cmp(mn, v); c2 <- cmp(mx, v)) yield c1 <= 0 && c2 >= 0))
+      case EqualTo(l: Literal, a: AttributeReference) =>
+        mayMatch(fst, EqualTo(a, l))
+      case GreaterThan(a: AttributeReference, l: Literal) => // col > v
+        lit(l, a.name).forall(v => onBounds(a.name)((_, mx) =>
+          cmp(mx, v).map(_ > 0)))
+      case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
+        lit(l, a.name).forall(v => onBounds(a.name)((_, mx) =>
+          cmp(mx, v).map(_ >= 0)))
+      case LessThan(a: AttributeReference, l: Literal) => // col < v
+        lit(l, a.name).forall(v => onBounds(a.name)((mn, _) =>
+          cmp(mn, v).map(_ < 0)))
+      case LessThanOrEqual(a: AttributeReference, l: Literal) =>
+        lit(l, a.name).forall(v => onBounds(a.name)((mn, _) =>
+          cmp(mn, v).map(_ <= 0)))
+      // flipped comparisons rewrite to the attribute-first form
+      case GreaterThan(l: Literal, a: AttributeReference) =>
+        mayMatch(fst, LessThan(a, l))
+      case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
+        mayMatch(fst, LessThanOrEqual(a, l))
+      case LessThan(l: Literal, a: AttributeReference) =>
+        mayMatch(fst, GreaterThan(a, l))
+      case LessThanOrEqual(l: Literal, a: AttributeReference) =>
+        mayMatch(fst, GreaterThanOrEqual(a, l))
+      case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
+        vs.exists(v => mayMatch(fst, EqualTo(a, v.asInstanceOf[Literal])))
+      case IsNull(a: AttributeReference) =>
+        colStat(a.name).forall(c => c.nullCount.forall(_ > 0))
+      case IsNotNull(a: AttributeReference) =>
+        colStat(a.name).forall(c => !allNull(c))
+      case _ => true
+    }
+  }
+
+  /** A hive path value as a Catalyst value of `dt` (the hive null
+    * marker is null), cast in time zone `tz` — pass the session zone,
+    * the zone `partitionBy` rendered timestamp values in. */
+  def partitionValue(raw: String, dt: DataType, tz: String): Any =
+    if (raw == "__HIVE_DEFAULT_PARTITION__") null
+    else Cast(Literal(raw), dt, Some(tz)).eval()
+
+  /** The one file split — the scan prune of the graft file index, SQL
+    * DELETE/UPDATE and the library range DML all call it: (touch, keep)
+    * of manifest-relative `files`, where keep-files provably hold no
+    * row satisfying `rawCond`. Two prune classes, both fail-open:
+    *
+    *  - exact hive partition values: a partition column is constant per
+    *    file, so a conjunct over partition columns (typed by `types`; a
+    *    column absent from a file's path is never judged here) that
+    *    evaluates FALSE or NULL on the file's values excludes the file.
+    *    The values are cast in the SESSION time zone ([[partitionValue]])
+    *    — casting them in any other zone folds the predicate FALSE on
+    *    exactly the file holding the matching rows;
+    *  - footer min/max bounds ([[mayMatch]]) of the partition-kept files,
+    *    from `known` or from one [[collect]] job.
+    *
+    * Attributes carrying a column-mapping physical name look their
+    * stats up under it: after `RENAME a TO b` then `ADD COLUMN a`, the
+    * logical name `a` names a DIFFERENT physical column, and judging it
+    * by the old column's bounds would let matching rows escape. Keep is
+    * in `files` order. */
+  def splitFiles(spark: SparkSession, dir: String, files: Seq[String],
+      rawCond: Expression, types: Map[String, DataType],
+      known: Option[Map[String, FileStat]] = None)
+      : (Seq[String], Seq[String]) = {
+    // fold constant subtrees (`CAST('2021-01-02' AS DATE)`) to the bare
+    // Literals the zone-map patterns match; a fold that throws (an ANSI
+    // cast of a bad literal) stays unfolded, which keeps the file
+    val cond = rawCond.transformUp {
+      case e if e.foldable && !e.isInstanceOf[Literal] =>
+        Try(Literal.create(e.eval(InternalRow.empty), e.dataType)).getOrElse(e)
+    }
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val partConjuncts = conjuncts(cond).filter(c => c.deterministic &&
+      c.references.nonEmpty && c.references.forall(r => types.contains(r.name)))
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    def partitionMay(vals: Map[String, String]): Boolean =
+      partConjuncts.forall { c =>
+        if (!c.references.forall(r => vals.contains(r.name))) true
+        // the cast runs INSIDE the Try: under ANSI mode an uncastable
+        // partition value keeps the file instead of failing the caller
+        else Try(c.transform { case a: AttributeReference =>
+          Literal.create(partitionValue(vals(a.name), types(a.name), tz),
+            a.dataType)
+        }.eval()).toOption match {
+          case Some(false) | Some(null) => false
+          case _ => true // true or unevaluable: keep
+        }
+      }
+    val verdict = files.map(Manifest.partitionValuesOf).distinct
+      .map(v => v -> partitionMay(v.toMap)).toMap
+    val partKept = files.filter(f => verdict(Manifest.partitionValuesOf(f)))
+    val stats = known.getOrElse(collect(spark, new Path(dir), partKept))
+    val physCond = cond.transform {
+      case a: AttributeReference
+          if a.metadata.contains(Manifest.ColumnMapping.Key) =>
+        a.withName(a.metadata.getString(Manifest.ColumnMapping.Key))
+    }
+    val touch = partKept.filter(f => mayMatch(stats(f), physCond))
+    val touched = touch.toSet
+    (touch, files.filterNot(touched))
+  }
 
   // ---- rendering for Delta stats JSON -----------------------------------
 

@@ -292,20 +292,48 @@ object Manifest {
       }
     }
 
-  /** Recovered Spark type of `column` over the FULL file list —
-    * metadata-only (footer schema + partition-value inference across
-    * every path, the same inference a whole-table read performs), so
-    * path-level pruning and the row-level predicate judge a partition
-    * column with the SAME type a reader of the table sees. A subset
-    * read must NOT be used for this: partition-type inference over a
-    * subset can differ (e.g. {"9"} infers long while the full set
-    * {"9","x"} infers string). */
-  private def recoveredType(spark: SparkSession, dir: String,
-      files: Seq[String], column: String): org.apache.spark.sql.types.DataType =
-    readFiles(spark, dir, files, declaredSchema(spark, dir)).schema
-      .find(_.name == column)
-      .map(_.dataType).getOrElse(throw new IllegalArgumentException(
+  /** The range DML's one predicate and split ([[deleteRange]],
+    * [[updateRange]], [[deleteRangeMOR]]): `column >= CAST(lo AS dt) AND
+    * column <= CAST(hi AS dt)`, built once as a Catalyst expression with
+    * the literals cast in the SESSION time zone — the zone SQL casts
+    * the same literals in — and handed to the one file split
+    * ([[FileStats.splitFiles]]) and, over the read frame's column, to
+    * the row filter, so prune and predicate cannot disagree.
+    *
+    * `dt` and the attribute's metadata come from the declared field, so
+    * the split looks stats up under the column's PHYSICAL name (a
+    * renamed-then-re-added name must not borrow the old column's
+    * bounds). A hive partition column keeps the type a whole-table read
+    * recovers over the FULL file list ({"9"} alone infers long where
+    * {"9","x"} infers string); only a path table with no declared
+    * schema reads one file's footer for a data column's type. Returns
+    * (touch, keep, row filter). */
+  private def rangeSplit(spark: SparkSession, dir: String,
+      files: Seq[String], column: String, lo: String,
+      hi: String): (Seq[String], Seq[String], org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Cast, GreaterThanOrEqual, LessThanOrEqual, Literal}
+    val partitioned =
+      files.exists(f => partitionValuesOf(f).exists(_._1 == column))
+    val field = declaredSchema(spark, dir)
+      .getOrElse(readFiles(spark, dir,
+        if (partitioned) files else files.take(1)).schema)
+      .find(_.name == column).getOrElse(throw new IllegalArgumentException(
         s"no column '$column' in the table under $dir"))
+    val dt = field.dataType
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val attr = AttributeReference(column, dt, nullable = true, field.metadata)()
+    val inRange = And(GreaterThanOrEqual(attr, Cast(Literal(lo), dt, tz)),
+      LessThanOrEqual(attr, Cast(Literal(hi), dt, tz)))
+    val (touch, keep) =
+      FileStats.splitFiles(spark, dir, files, inRange, Map(column -> dt))
+    // a touched subset can recover a different partition type than the
+    // full list, so the row filter casts the read column to `dt`
+    val rows = inRange.transform { case a: AttributeReference =>
+      Cast(org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+        .quoted(a.name), dt)
+    }
+    (touch, keep, org.apache.spark.sql.graftbridge.Bridge.columnOf(rows))
+  }
 
   /** Invert hive path escaping (%XX for chars unsafe in dir names —
     * the encoding Spark/Hive writers apply inside `k=v` segments). */
@@ -479,33 +507,14 @@ object Manifest {
     requireFresh(priors, snapshot, dir)
     require(!fsys.exists(new Path(base, s"deletes-$snapshot")),
       s"deletes-$snapshot already landed under $dir")
-    // same exact-partition-first / footer-bounds-second prune as the COW
-    // path; the partition comparison uses the FULL file list's recovered
-    // type — the type the row predicate casts to (a touched-subset read
-    // can infer a different partition type and disagree)
-    val partHasCol =
-      cur.files.exists(f => partitionValuesOf(f).exists(_._1 == column))
-    val authDt: Option[org.apache.spark.sql.types.DataType] =
-      if (partHasCol) Some(recoveredType(spark, dir, cur.files, column))
-      else None
-    val byPartition = cur.files.map(f => f -> authDt.flatMap(
-      partitionMayMatch(f, column, lo, hi, _))).toMap
-    val undecided = cur.files.filter(f => byPartition(f).isEmpty)
-    val stats = FileStats.collect(spark, base, undecided)
-    val touch = cur.files.filter(f => byPartition(f).getOrElse(
-      FileStats.mayMatch(stats(f), column, lo, hi)))
+    val (touch, _, inRange) = rangeSplit(spark, dir, cur.files, column, lo, hi)
     if (touch.isEmpty) return MorDelete(Nil, 0L, None)
-    import org.apache.spark.sql.functions.col
     // LIVE rows only: judging the predicate on already-MOR-deleted rows
     // would re-record them as deleted in the change feed (and write
     // duplicate delete positions — harmless for the anti-join, wrong
     // for cdc)
     val metaDf = readFilesMetaApplyingDeletes(spark, dir, touch,
       cur.deleteFiles, declaredSchema(spark, dir))
-    val dt = authDt.getOrElse(metaDf.schema(column).dataType)
-    val c = col(column).cast(dt)
-    val inRange = c >= org.apache.spark.sql.functions.lit(lo).cast(dt) &&
-      c <= org.apache.spark.sql.functions.lit(hi).cast(dt)
     // rows TO DELETE: NULL never matches a range predicate, and
     // where(inRange) drops null-valued rows from the delete set — the
     // right way round for a delete
@@ -1507,71 +1516,22 @@ object Manifest {
   final case class CowRewrite(rewritten: Seq[String], carried: Seq[String],
       committed: Option[String])
 
-  /** The shared copy-on-write core: one distributed footer pass
-    * partitions the current snapshot into files whose [min,max] bounds
-    * MAY overlap `column` ∈ [lo, hi] and files that provably cannot;
-    * only the former are scanned and fed through `rewrite` (with the
-    * derived in-range predicate), the latter ride into the new snapshot
-    * by file-list reference — never opened, never copied. */
-  /** Does a file's PARTITION VALUE for `column` fall inside [lo, hi]?
-    * None = the path carries no value for the column (unpartitioned, or
-    * partitioned by something else) — the caller falls back to footer
-    * bounds. The comparison is derived from the column's RECOVERED
-    * Spark type (`dt`, from [[recoveredType]] over the full file list)
-    * — the SAME type the row-level predicate casts to — never from an
-    * independent parse heuristic: a string-typed partition column
-    * holding mixed values ('9' with lo='10') must prune
-    * LEXICOGRAPHICALLY, exactly as the row predicate matches, or the
-    * prune silently carries files whose rows the predicate selects.
-    * Fail-open (keep) whenever the comparison cannot be proven. */
-  private def partitionMayMatch(relPath: String, column: String,
-      lo: String, hi: String,
-      dt: org.apache.spark.sql.types.DataType): Option[Boolean] = {
-    import org.apache.spark.sql.types._
-    partitionValuesOf(relPath).toMap.get(column).map { v =>
-      dt match {
-        case _: NumericType =>
-          (scala.util.Try(BigDecimal(v)).toOption,
-            scala.util.Try(BigDecimal(lo)).toOption,
-            scala.util.Try(BigDecimal(hi)).toOption) match {
-            case (Some(n), Some(l), Some(h)) => n >= l && n <= h
-            case _ => true // unprovable — keep
-          }
-        // ISO date paths render "2021-01-02": lexicographic ==
-        // chronological; strings compare as the row predicate does.
-        // Timestamp paths render with ' ' where literals use 'T' —
-        // no sound lexicographic compare, so fail open.
-        case StringType | DateType => v >= lo && v <= hi
-        case _ => true // keep: no sound path-level comparison
-      }
-    }
-  }
-
+  /** The shared copy-on-write core: the range split ([[rangeSplit]])
+    * divides the current snapshot into files that MAY hold a row with
+    * `column` ∈ [lo, hi] and files that provably cannot; only the former
+    * are scanned and fed through `rewrite` (with the same in-range
+    * predicate), the latter ride into the new snapshot by file-list
+    * reference — never opened, never copied. */
   private def cowRewrite(spark: SparkSession, dir: String, column: String,
       lo: String, hi: String, snapshot: String,
       rewrite: (DataFrame, org.apache.spark.sql.Column) => DataFrame,
       beforePublish: () => Unit = () => (),
       cdcOf: (DataFrame, org.apache.spark.sql.Column) => Option[DataFrame] =
         (_, _) => None): CowRewrite = {
-    val (_, base) = fs(spark, dir)
     val cur = headOrThrow(head(spark, dir), dir)
-    val files = cur.files
-    require(files.nonEmpty, s"no committed snapshot under $dir")
-    // partition values prune EXACTLY and for free (path strings); only
-    // files without a path-level verdict pay for the footer pass. The
-    // comparison type comes from the FULL file list (see
-    // [[recoveredType]]) so prune and row predicate cannot disagree.
-    val partHasCol =
-      files.exists(f => partitionValuesOf(f).exists(_._1 == column))
-    val authDt: Option[org.apache.spark.sql.types.DataType] =
-      if (partHasCol) Some(recoveredType(spark, dir, files, column))
-      else None
-    val byPartition = files.map(f => f -> authDt.flatMap(
-      partitionMayMatch(f, column, lo, hi, _))).toMap
-    val undecided = files.filter(f => byPartition(f).isEmpty)
-    val stats = FileStats.collect(spark, base, undecided)
-    val (touch, keep) = files.partition(f => byPartition(f).getOrElse(
-      FileStats.mayMatch(stats(f), column, lo, hi)))
+    require(cur.files.nonEmpty, s"no committed snapshot under $dir")
+    val (touch, keep, inRange) =
+      rangeSplit(spark, dir, cur.files, column, lo, hi)
     if (touch.isEmpty) return CowRewrite(Nil, keep, None)
     // basePath read: a partitioned file's hive columns come back as real
     // columns, and partitionBy on the rewrite puts them back into paths
@@ -1583,10 +1543,6 @@ object Manifest {
     val partCols = partitionValuesOf(touch.head).map(_._1)
     val df = readFilesApplyingDeletes(spark, dir, touch, cur.deleteFiles,
       declaredSchema(spark, dir))
-    val dt = authDt.getOrElse(df.schema(column).dataType)
-    val c = org.apache.spark.sql.functions.col(column).cast(dt)
-    val inRange = c >= org.apache.spark.sql.functions.lit(lo).cast(dt) &&
-      c <= org.apache.spark.sql.functions.lit(hi).cast(dt)
     writeImpl(rewrite(df, inRange), dir, snapshot, beforePublish,
       carriedExplicit = Some(keep), partitionCols = partCols,
       deletesExplicit = Some(cur.deleteFiles), rewrite = true,
@@ -1597,11 +1553,13 @@ object Manifest {
   /** Copy-on-write DELETE of rows with `column` ∈ [lo, hi] — the
     * lakehouse DELETE path, stats-driven end to end:
     *
-    *  1. ONE distributed parquet-footer pass ([[FileStats.collect]])
-    *     over the current snapshot's files — metadata-only, no data read.
-    *  2. Files whose [min,max] bounds CANNOT overlap the range are
-    *     CARRIED FORWARD into the new snapshot by file-list reference —
-    *     never opened, never copied. On a range-clustered 100 TB table a
+    *  1. The one file split ([[FileStats.splitFiles]], shared with SQL
+    *     DELETE/UPDATE and the scan path): exact hive partition values,
+    *     then ONE distributed parquet-footer pass over the remaining
+    *     files — metadata-only, no data read.
+    *  2. Files whose partition value or [min,max] bounds CANNOT overlap
+    *     the range are CARRIED FORWARD into the new snapshot by
+    *     file-list reference — never opened, never copied. On a range-clustered 100 TB table a
     *     one-year delete rewrites the year, not the table.
     *  3. Only overlapping files are scanned; their surviving rows (NULLs
     *     survive — NULL never matches a range predicate) land as a fresh
@@ -1612,9 +1570,10 @@ object Manifest {
     *
     * `lo`/`hi` are string literals in the column's natural rendering
     * (numerics, ISO date "2021-01-02", ISO timestamp
-    * "2021-01-02T03:04:05[.micros]") — the SAME literal space
-    * [[DeltaLog.readPruned]] takes; the row-level predicate is derived
-    * from them by casting to the column's own Spark type, so prune and
+    * "2021-01-02T03:04:05[.micros]"), cast to the column's declared
+    * type in the SESSION time zone — the same cast SQL `DELETE … WHERE
+    * ts BETWEEN '…' AND '…'` applies. One Catalyst predicate drives both
+    * the split and the row filter ([[rangeSplit]]), so prune and
     * predicate can never disagree. */
   def deleteRange(spark: SparkSession, dir: String, column: String,
       lo: String, hi: String, snapshot: String): CowRewrite =

@@ -9,7 +9,6 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.io.{FileStats, Manifest}
 
@@ -27,15 +26,16 @@ import graft.io.{FileStats, Manifest}
  * main-resolution-batch interception [[GraftInsertRule]] uses — and
  * rewrites it onto the Manifest's own commit machinery:
  *
- *  - **DELETE / UPDATE** take a COPY-ON-WRITE file-pruned path: one
- *    pass over the pinned snapshot's partition values (exact, free —
- *    path strings) and parquet footer bounds ([[GraftStatsPrune]],
- *    fail-open) splits the file list into files that MAY contain a
+ *  - **DELETE / UPDATE** take a COPY-ON-WRITE file-pruned path: the
+ *    one file split ([[graft.io.FileStats.splitFiles]] — the same split
+ *    the scan path and the library `Manifest.deleteRange` use) judges
+ *    the pinned snapshot's partition values (exact, free — path
+ *    strings, cast in the session time zone) and parquet footer bounds
+ *    (fail-open), dividing the file list into files that MAY contain a
  *    matching row (rewritten) and files that provably cannot (carried
  *    into the new snapshot by reference — never opened, never copied).
  *    On a range-clustered 100 TB table a one-segment DELETE rewrites
- *    the segment, not the table — the same cost profile as the library
- *    `Manifest.deleteRange`, generalized to arbitrary predicates.
+ *    the segment, not the table.
  *  - **MERGE** is a full-snapshot rewrite (a merge's matches are
  *    data-driven; file bounds cannot scope them without the join): one
  *    full-outer join target⟗source, per-row first-applicable action,
@@ -206,92 +206,6 @@ private[sources] object GraftDmlExec {
             "re-run the statement")
         Some(cur)
     }
-  }
-
-  /** COW file split for a condition: (touch, keep) where keep-files
-    * provably contain no matching row. Two prune classes, both
-    * fail-open: exact hive partition-value evaluation (a partition
-    * column is constant per file, so a conjunct over partition columns
-    * that evaluates FALSE on the file's values excludes the whole
-    * file), then footer min/max bounds via [[GraftStatsPrune]]. */
-  def splitFiles(spark: SparkSession, dir: String, files: Seq[String],
-      rawCond: Expression,
-      types: Map[String, org.apache.spark.sql.types.DataType])
-      : (Seq[String], Seq[String]) = {
-    // the condition arrives ANALYZED but unoptimized (the commands pin
-    // captured expressions away from the statement optimizer — see
-    // [[Pinned]]), so fold constant subtrees here: the zone-map
-    // patterns below match bare Literals, not `Cast(Literal)`
-    val cond = rawCond.transformUp {
-      case e if e.foldable && !e.isInstanceOf[Literal] =>
-        Literal.create(
-          e.eval(org.apache.spark.sql.catalyst.InternalRow.empty),
-          e.dataType)
-    }
-    val conjuncts = splitAnd(cond).filter(_.deterministic)
-
-    // partitionBy renders timestamp partition values in the SESSION
-    // time zone — casting them back must use the same zone, or a
-    // non-UTC session folds the predicate FALSE on exactly the file
-    // holding the matching rows (rows silently escape the DML)
-    val sessionTz = spark.sessionState.conf.sessionLocalTimeZone
-    def castPart(raw: String, dt: org.apache.spark.sql.types.DataType): Any =
-      if (raw == "__HIVE_DEFAULT_PARTITION__") null
-      else Cast(Literal(UTF8String.fromString(raw),
-        org.apache.spark.sql.types.StringType), dt, Some(sessionTz)).eval(null)
-
-    def partitionMay(file: String): Boolean = {
-      val vals = Manifest.partitionValuesOf(file).toMap
-      if (vals.isEmpty) return true
-      conjuncts.forall { c =>
-        val refs = c.references.toSeq
-        if (refs.isEmpty || !refs.forall(r => vals.contains(r.name) &&
-            types.contains(r.name))) true
-        else {
-          // the cast runs INSIDE the Try: under ANSI mode an uncastable
-          // partition value must fail OPEN (keep the file), not fail
-          // the whole statement
-          scala.util.Try {
-            val folded = c.transform { case a: AttributeReference =>
-              Literal.create(castPart(vals(a.name), types(a.name)), a.dataType)
-            }
-            folded.eval(null)
-          }.toOption match {
-            // the partition value is CONSTANT per file, so a conjunct
-            // evaluating FALSE — or NULL (never TRUE) — on it excludes
-            // every row of the file
-            case Some(false) | Some(null) => false
-            case _ => true // true or unevaluable: keep
-          }
-        }
-      }
-    }
-
-    val partKept = files.filter(partitionMay)
-    val partPruned = files.filterNot(partKept.toSet)
-    val stats = FileStats.collect(spark,
-      new org.apache.hadoop.fs.Path(dir), partKept)
-    // footer stats key on the files' PHYSICAL column names; under
-    // column mapping a logical name can alias a DIFFERENT physical
-    // column (RENAME a TO b then ADD COLUMN a, or a swap-rename), so
-    // matching logical names against physical stats would prune with
-    // the WRONG column's bounds — rows silently escaping the DML.
-    // Each attribute's own metadata carries its physical name, so the
-    // lookup translates exactly; an attribute without mapping metadata
-    // stores under its own name (including pre-mapping tables).
-    val physCond = cond.transform {
-      case a: AttributeReference
-          if a.metadata.contains(Manifest.ColumnMapping.Key) =>
-        a.withName(a.metadata.getString(Manifest.ColumnMapping.Key))
-    }
-    val (touch, keepByStats) = partKept.partition(f =>
-      GraftStatsPrune.mayMatch(stats(f), physCond))
-    (touch, keepByStats ++ partPruned)
-  }
-
-  private def splitAnd(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitAnd(l) ++ splitAnd(r)
-    case other => Seq(other)
   }
 
   /** Re-bind a resolved expression by NAME for evaluation over a fresh
@@ -475,22 +389,24 @@ private[sources] object GraftDmlExec {
       Seq(df.col("_graft_file"), df.col("_graft_pos")): _*)
   }
 
+  /** Test seam: runs after the statement computed its rewrite,
+    * immediately before each commit-publish attempt — the window a
+    * concurrent writer races into. */
+  private[sources] var beforePublishHook: () => Unit = () => ()
+
   /** Commit the rewritten rows + carried files as one rewrite-flagged
     * snapshot, preserving the touched files' hive layout. A
     * predicate-scoped statement (DELETE/UPDATE) passes its pinned
     * `base`, arming [[Manifest.writeImpl]]'s file-level conflict
     * rebase: a concurrent commit that left the touched files alone
     * does not fail the statement. MERGE passes None — it read the
-    * whole table, so every concurrent commit is a true conflict. */
-  /** Test seam: runs after the statement computed its rewrite,
-    * immediately before each commit-publish attempt — the window a
-    * concurrent writer races into. */
-  private[sources] var beforePublishHook: () => Unit = () => ()
-
+    * whole table, so every concurrent commit is a true conflict.
+    * `inserts`: the statement adds rows (a MERGE with an INSERT
+    * action), so the touched bytes do not bound what lands. */
   def commitRewrite(spark: SparkSession, dir: String, rewritten: DataFrame,
       touch: Seq[String], keep: Seq[String], deleteFiles: Seq[String],
       base: Option[Manifest.ManifestData] = None,
-      cdc: Option[DataFrame] = None): Unit = {
+      cdc: Option[DataFrame] = None, inserts: Boolean = false): Unit = {
     val snap = s"dml${System.currentTimeMillis()}-" +
       java.util.UUID.randomUUID().toString.take(8)
     // layout from the touched files, falling back to the carried ones:
@@ -503,12 +419,13 @@ private[sources] object GraftDmlExec {
     // `cdc` is the statement's row-level change record (changed rows +
     // `_change_type`), landed beside the data so the change feed can
     // serve this commit instead of refusing it
-    // landing-size hint: the rewrite re-packs exactly the touched
-    // files' rows (plus MERGE inserts, the smaller side by far), so
-    // their on-disk byte sum bounds the commit — the stats estimate of
-    // a join-derived rewrite plan over-counts by orders of magnitude
-    // and would leave one near-empty part file per shuffle partition
-    val touchedBytes = if (touch.isEmpty) None
+    // landing-size hint: a rewrite that adds no rows (DELETE, UPDATE,
+    // a MERGE without INSERT) re-packs at most the touched files' rows,
+    // so their on-disk byte sum bounds the commit — the stats estimate
+    // of a join-derived plan over-counts by orders of magnitude. An
+    // inserting MERGE can land far more than it touched, so it sizes
+    // from plan stats (an over-estimate only keeps more files)
+    val touchedBytes = if (touch.isEmpty || inserts) None
       else Manifest.filesBytes(spark, dir, touch).map(math.max(1L, _))
     Manifest.writeImpl(rewritten, dir, snap, beforePublishHook,
       carriedExplicit = Some(keep), partitionCols = partCols,
@@ -569,7 +486,7 @@ case class GraftDeleteCommand(dir: String, pinned: String,
     val splitCond = (cond +:
       GraftDmlExec.subqueryBoundConjuncts(spark, cond)).reduce(And)
     val (touch, keep) =
-      GraftDmlExec.splitFiles(spark, dir, cur.files, splitCond, types)
+      FileStats.splitFiles(spark, dir, cur.files, splitCond, types)
     if (touch.nonEmpty) {
       val attrs = target.output.collect { case a: AttributeReference => a }
       val hasSubq = cond.exists(_.isInstanceOf[SubqueryExpression])
@@ -644,7 +561,7 @@ case class GraftUpdateCommand(dir: String, pinned: String,
       case Some(c) =>
         val splitCond = (c +:
           GraftDmlExec.subqueryBoundConjuncts(spark, c)).reduce(And)
-        GraftDmlExec.splitFiles(spark, dir, cur.files, splitCond, types)
+        FileStats.splitFiles(spark, dir, cur.files, splitCond, types)
       case None => (cur.files, Nil)
     }
     if (touch.nonEmpty) {
@@ -1198,7 +1115,8 @@ case class GraftMergeCommand(dir: String, pinned: String,
               applyActions(base, src, attrs, Nil, { (result, cdc) =>
                 GraftDmlExec.refuseEmptyResult(result, keep, "MERGE")
                 GraftDmlExec.commitRewrite(spark, dir, result, touch, keep,
-                  cur.deleteFiles, base = Some(cur), cdc = cdc)
+                  cur.deleteFiles, base = Some(cur), cdc = cdc,
+                  inserts = notMatchedActions.nonEmpty)
               })
           }
         case None =>
@@ -1212,7 +1130,8 @@ case class GraftMergeCommand(dir: String, pinned: String,
             notMatchedBySourceActions, { (result, cdc) =>
               GraftDmlExec.refuseEmptyResult(result, Nil, "MERGE")
               GraftDmlExec.commitRewrite(spark, dir, result,
-                curOpt.map(_.files).getOrElse(Nil), Nil, Nil, cdc = cdc)
+                curOpt.map(_.files).getOrElse(Nil), Nil, Nil, cdc = cdc,
+                inserts = notMatchedActions.nonEmpty)
             })
       }
     } finally srcBase.unpersist()

@@ -6,13 +6,12 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, EqualTo, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, GenericInternalRow}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.{SaveMode}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, InsertableRelation, PrunedFilteredScan, RelationProvider, Filter => SourceFilter}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.io.{FileStats, Manifest}
 
@@ -350,15 +349,19 @@ object GraftSource {
   /** Resolve the snapshot the options select (default: current). */
   private[sources] def resolveSnapshot(spark: SparkSession, dir: String,
       opts: Map[String, String]): Manifest.ManifestData = {
-    val hist = Manifest.history(spark, dir)
-    require(hist.nonEmpty, s"graft: no committed snapshot under $dir")
     val selectors = Seq("versionasof", "snapshotasof", "timestampasof")
       .flatMap(k => opts.get(k).map(k -> _))
+    // only time travel needs the retained history; a plain read parses
+    // the head manifest alone
+    lazy val hist = Manifest.history(spark, dir)
+    val latest =
+      if (selectors.isEmpty) Manifest.head(spark, dir) else hist.lastOption
+    require(latest.nonEmpty, s"graft: no committed snapshot under $dir")
     require(selectors.size <= 1,
       s"graft: at most one of versionAsOf/snapshotAsOf/timestampAsOf " +
         s"(got ${selectors.map(_._1).mkString(", ")})")
     val m = selectors.headOption match {
-      case None => hist.last
+      case None => latest.get
       case Some(("versionasof", v)) =>
         val seq = v.toLongOption.getOrElse(throw new IllegalArgumentException(
           s"graft: versionAsOf must be a commit_seq number, got '$v'"))
@@ -412,10 +415,12 @@ object GraftSource {
 /**
  * The table format's planner hook: a snapshot-pinned [[FileIndex]]
  * whose file list comes from the manifest (never a data-tree listing)
- * and whose `listFiles` applies BOTH prune classes before Spark ever
- * opens a footer on the scan path. Immutable by design — a graft
- * relation is a snapshot read, so `refresh()` has nothing to do (the
- * next `spark.read` resolves the then-current manifest).
+ * and whose `listFiles` prunes through the one file split
+ * ([[FileStats.splitFiles]]: hive partition values, then footer
+ * bounds) before Spark ever opens a footer on the scan path. Immutable
+ * by design — a graft relation is a snapshot read, so `refresh()` has
+ * nothing to do (the next `spark.read` resolves the then-current
+ * manifest).
  */
 class GraftFileIndex(spark: SparkSession, dir: String,
     m: Manifest.ManifestData, override val partitionSchema: StructType)
@@ -451,38 +456,22 @@ class GraftFileIndex(spark: SparkSession, dir: String,
       .map { case (vals, fs) => (partRow(vals), fs.sorted) }
 
   private def partRow(vals: Seq[String]): InternalRow = {
-    // session zone, not UTC: partitionBy rendered timestamp values in
-    // the session zone, so the round-trip must use the same zone or a
-    // non-UTC session mis-prunes (same convention as the DML split)
     val tz = spark.sessionState.conf.sessionLocalTimeZone
-    val cells = partitionSchema.fields.zip(vals).map { case (f, raw) =>
-      if (raw == "__HIVE_DEFAULT_PARTITION__") null
-      else Cast(Literal(UTF8String.fromString(raw), StringType),
-        f.dataType, Some(tz)).eval(null)
-    }
-    new GenericInternalRow(cells.toArray[Any])
+    new GenericInternalRow(partitionSchema.fields.zip(vals).map {
+      case (f, raw) => FileStats.partitionValue(raw, f.dataType, tz)
+    }.toArray[Any])
   }
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val partKept =
-      if (partitionFilters.isEmpty || partitionSchema.isEmpty) groups
-      else {
-        val bound = partitionFilters.reduce(And).transform {
-          case a: AttributeReference =>
-            val idx = partitionSchema.fieldIndex(a.name)
-            BoundReference(idx, partitionSchema(idx).dataType,
-              partitionSchema(idx).nullable)
-        }
-        val pred = Predicate.create(bound)
-        pred.initialize(0)
-        groups.filter { case (row, _) => pred.eval(row) }
-      }
-    partKept.map { case (row, fs) =>
-      val kept =
-        if (dataFilters.isEmpty) fs
-        else fs.filter(f => dataFilters.forall(mayMatch(stats(f), _)))
-      PartitionDirectory(row, kept.map(fileStatusOf).toArray)
+    val filters = partitionFilters ++ dataFilters
+    val kept =
+      if (filters.isEmpty) m.files.toSet
+      else FileStats.splitFiles(spark, dir, m.files, filters.reduce(And),
+        partitionSchema.map(f => f.name -> f.dataType).toMap,
+        Some(stats))._1.toSet
+    groups.map { case (row, fs) =>
+      PartitionDirectory(row, fs.filter(kept).map(fileStatusOf).toArray)
     }.filter(_.files.nonEmpty)
   }
 
@@ -491,9 +480,6 @@ class GraftFileIndex(spark: SparkSession, dir: String,
     new FileStatus(fst.size, false, 1, 128L * 1024 * 1024, fst.modTime,
       new Path(s"$qualBase/$rel"))
   }
-
-  private def mayMatch(fst: FileStats.FileStat, e: Expression): Boolean =
-    GraftStatsPrune.mayMatch(fst, e)
 
   /** The pinned snapshot's id — the DML commands verify the head has
     * not moved between analysis and execution. */
@@ -507,107 +493,6 @@ class GraftFileIndex(spark: SparkSession, dir: String,
     require(files.forall(all.contains),
       "graft: restrictTo files must belong to the pinned snapshot")
     new GraftFileIndex(spark, dir, m.copy(files = files), partitionSchema)
-  }
-}
-
-/**
- * Zone-map reasoning over collected parquet footer bounds, shared by
- * the planner-driven scan prune ([[GraftFileIndex.listFiles]]) and the
- * SQL DML commands' copy-on-write file split (fail-OPEN semantics —
- * keep the file whenever pruning cannot be PROVEN sound).
- */
-private[sources] object GraftStatsPrune {
-
-  // ---- stats-bounds pruning (zone-map semantics, fail-OPEN) -------------
-
-  /** Catalyst literal → the [[FileStats.ColumnStat]] value space; None
-    * on any mismatch (keep the file). */
-  private def toStatSpace(v: Any, dt: DataType,
-      kind: FileStats.Kind): Option[Any] = (dt, kind) match {
-    case (ByteType | ShortType | IntegerType, FileStats.Kind.I64) =>
-      Some(v.asInstanceOf[Number].longValue())
-    case (LongType, FileStats.Kind.I64) => Some(v.asInstanceOf[Long])
-    case (FloatType | DoubleType, FileStats.Kind.F64) =>
-      Some(v.asInstanceOf[Number].doubleValue())
-    case (StringType, FileStats.Kind.Str) => Some(v.toString)
-    case (BooleanType, FileStats.Kind.Bool) => Some(v.asInstanceOf[Boolean])
-    case (DateType, FileStats.Kind.Date) =>
-      Some(v.asInstanceOf[Number].longValue()) // catalyst days == epoch-day
-    case (TimestampType | TimestampNTZType, FileStats.Kind.Ts(_, _)) =>
-      Some(v.asInstanceOf[Long]) // catalyst micros == stat micros
-    case _ => None
-  }
-
-  private def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (x: Long, y: Long) => Some(java.lang.Long.compare(x, y))
-    case (x: Double, y: Double) => Some(java.lang.Double.compare(x, y))
-    case (x: String, y: String) => Some(x.compareTo(y))
-    case (x: Boolean, y: Boolean) => Some(java.lang.Boolean.compare(x, y))
-    case _ => None
-  }
-
-  /** Can the file hold a row satisfying this conjunct? True whenever
-    * pruning cannot be PROVEN sound. Bounds are over non-null values,
-    * so a provably all-null column fails every value predicate (and
-    * satisfies IS NULL). */
-  def mayMatch(fst: FileStats.FileStat, e: Expression): Boolean = {
-    def colStat(name: String): Option[FileStats.ColumnStat] =
-      fst.columns.find(_._1 == name).map(_._2)
-    def allNull(c: FileStats.ColumnStat): Boolean =
-      fst.numRecords > 0 && c.nullCount.contains(fst.numRecords)
-    // evaluate `test(min, max)` when the column has provable bounds;
-    // all-null columns fail value predicates; anything unprovable keeps
-    def onBounds(name: String)(
-        test: (Any, Any) => Option[Boolean]): Boolean =
-      colStat(name) match {
-        case None => true
-        case Some(c) => (c.min, c.max) match {
-          case (Some(mn), Some(mx)) => test(mn, mx).getOrElse(true)
-          case _ => !allNull(c)
-        }
-      }
-    def lit(l: Literal, name: String): Option[Any] =
-      colStat(name).flatMap(c => Option(l.value).flatMap(v =>
-        toStatSpace(v, l.dataType, c.kind)))
-    e match {
-      case And(l, r) => mayMatch(fst, l) && mayMatch(fst, r)
-      case EqualTo(a: AttributeReference, l: Literal) =>
-        lit(l, a.name) match {
-          case None => true
-          case Some(v) => onBounds(a.name)((mn, mx) =>
-            for (c1 <- cmp(mn, v); c2 <- cmp(mx, v)) yield c1 <= 0 && c2 >= 0)
-        }
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        mayMatch(fst, EqualTo(a, l))
-      case GreaterThan(a: AttributeReference, l: Literal) => // col > v
-        lit(l, a.name).forall(v => onBounds(a.name)((_, mx) =>
-          cmp(mx, v).map(_ > 0)))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) =>
-        lit(l, a.name).forall(v => onBounds(a.name)((_, mx) =>
-          cmp(mx, v).map(_ >= 0)))
-      case LessThan(a: AttributeReference, l: Literal) => // col < v
-        lit(l, a.name).forall(v => onBounds(a.name)((mn, _) =>
-          cmp(mn, v).map(_ < 0)))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) =>
-        lit(l, a.name).forall(v => onBounds(a.name)((mn, _) =>
-          cmp(mn, v).map(_ <= 0)))
-      // flipped comparisons rewrite to the attribute-first form
-      case GreaterThan(l: Literal, a: AttributeReference) =>
-        mayMatch(fst, LessThan(a, l))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) =>
-        mayMatch(fst, LessThanOrEqual(a, l))
-      case LessThan(l: Literal, a: AttributeReference) =>
-        mayMatch(fst, GreaterThan(a, l))
-      case LessThanOrEqual(l: Literal, a: AttributeReference) =>
-        mayMatch(fst, GreaterThanOrEqual(a, l))
-      case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        vs.exists(v => mayMatch(fst, EqualTo(a, v.asInstanceOf[Literal])))
-      case IsNull(a: AttributeReference) =>
-        colStat(a.name).forall(c => c.nullCount.forall(_ > 0))
-      case IsNotNull(a: AttributeReference) =>
-        colStat(a.name).forall(c => !allNull(c))
-      case _ => true
-    }
   }
 }
 

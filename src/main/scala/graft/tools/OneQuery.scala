@@ -1,34 +1,34 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Run one named SparkEntry query against a fixture dir and print its
   * row count + first rows — scratch harness for iterating on a single
-  * operator without a full Verify pass. `time` as a trailing arg switches
-  * to two timed runs at local[32] (plan-compile run + steady run). */
+  * operator without a full Verify pass. A trailing `time` switches to two
+  * timed runs at local[32] (plan-compile run + steady run); a trailing
+  * `explain` prints the formatted physical plan instead, for each of a
+  * comma list of names (or `all`). */
 object OneQuery {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
     val timing = args.contains("time")
-    val dir = args.drop(1).filterNot(_ == "time").headOption
+    val explain = args.contains("explain")
+    val rest = args.filterNot(a => a == "time" || a == "explain")
+    val dir = rest.drop(1).headOption
       .getOrElse(if (timing) "/root/testdata/sf0.1" else "/root/testdata/sf0.01")
-    val cores = if (timing) 32 else 8
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT96 (the 4.x default) is deprecated AND carries no usable footer
-      // stats - micros keeps timestamp columns data-skippable
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(if (timing) 32 else 8)
     spark.sparkContext.setLogLevel("WARN")
-    val fn = graft.SparkEntry.queries(name)
-    if (timing) (1 to 2).foreach { i =>
+    val queries = graft.SparkEntry.queries
+    if (explain) {
+      val names =
+        if (rest(0) == "all") queries.keys.toSeq.sorted else rest(0).split(",").toSeq
+      names.foreach { n =>
+        println(s"\n======== $n ========")
+        queries(n)(spark, dir).explain("formatted")
+      }
+    } else if (timing) (1 to 2).foreach { i =>
       val t0 = System.nanoTime()
-      fn(spark, dir).count()
+      queries(rest(0))(spark, dir).count()
       println(s"run$i ${(System.nanoTime() - t0) / 1e9}")
     } else {
-      val df = fn(spark, dir)
+      val df = queries(rest(0))(spark, dir)
       println(s"ROWS ${df.count()}")
       df.show(10, truncate = false)
     }

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan census over every SparkEntry query: counts of the
   * plan features that matter at scale (exchanges, broadcast vs
   * sort-merge joins, whole-stage codegen spans, parquet pushdown) →
@@ -11,18 +9,11 @@ import org.apache.spark.sql.SparkSession
   * operator changes with `sbt "runMain graft.tools.PlanAudit"`. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT96 (the 4.x default) is deprecated AND carries no usable footer
-      // stats - micros keeps timestamp columns data-skippable
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // AQE off for the census: an un-executed AdaptiveSparkPlanExec
-      // prints its initial plan without codegen spans; the static
-      // preparation shows the real WholeStageCodegen coverage
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // AQE off for the census: an un-executed AdaptiveSparkPlanExec
+    // prints its initial plan without codegen spans; the static
+    // preparation shows the real WholeStageCodegen coverage
+    val spark = graft.GraftSession.local(8,
+      Map("spark.sql.adaptive.enabled" -> "false"))
     spark.sparkContext.setLogLevel("ERROR")
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
 

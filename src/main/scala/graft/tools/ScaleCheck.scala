@@ -14,15 +14,8 @@ import org.apache.spark.sql.functions._
  */
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      // INT96 (the 4.x default) is deprecated AND carries no usable footer
-      // stats - micros keeps timestamp columns data-skippable
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(32,
+      Map("spark.sql.adaptive.enabled" -> "true"))
     spark.sparkContext.setLogLevel("WARN")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if (args.contains("x100")) { run100x(spark, args); spark.stop(); return }

@@ -716,6 +716,26 @@ class GraftCatalogSpec extends AnyFunSuite {
       "an out-of-bounds DELETE must prune every file (no new commit)")
   }
 
+  test("COLUMN MAPPING: library range DML prunes on the PHYSICAL column (rename, re-add)") {
+    // after RENAME a TO c and ADD COLUMN a, the files' physical column
+    // `a` holds c's values; judging logical `a` by those bounds would
+    // prune every file and keep the a = 1 row
+    sql("CREATE NAMESPACE IF NOT EXISTS gcat.db")
+    sql("CREATE TABLE gcat.db.creadd (a BIGINT, b BIGINT) USING graft")
+    sql("INSERT INTO gcat.db.creadd VALUES (10, 1), (20, 2)")
+    sql("ALTER TABLE gcat.db.creadd RENAME COLUMN a TO c")
+    sql("ALTER TABLE gcat.db.creadd ADD COLUMN a BIGINT")
+    sql("INSERT INTO gcat.db.creadd VALUES (30, 3, 1), (40, 4, 2)")
+    val (dir, _) = spark.sessionState.catalogManager.catalog("gcat")
+      .asInstanceOf[GraftCatalog].resolveTable("db.creadd")
+    val r = Manifest.deleteRange(spark, dir, "a", "1", "1", "del-a1")
+    assert(r.committed.contains("del-a1"))
+    spark.catalog.refreshByPath(dir)
+    assert(sql("SELECT c FROM gcat.db.creadd ORDER BY c").collect()
+      .map(_.getLong(0)).toSeq == Seq(10L, 20L, 40L),
+      "the a = 1 row must be deleted, every other row kept")
+  }
+
   test("COLUMN MAPPING: DROP COLUMN hides the bytes; re-ADD never resurrects them") {
     sql("CREATE NAMESPACE IF NOT EXISTS gcat.db")
     sql("CREATE TABLE gcat.db.cdrop (k BIGINT, junk STRING, v DOUBLE) USING graft")

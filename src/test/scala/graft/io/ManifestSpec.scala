@@ -502,6 +502,38 @@ class ManifestSpec extends AnyFunSuite {
     assert(Manifest.read(spark, dir2).count() == 48 - 18)
   }
 
+  test("range DML casts timestamp literals in the session time zone") {
+    // written under UTC: one file holding 08:30Z and 12:00Z
+    def table(): String = {
+      val dir = tmpDir()
+      Manifest.write(spark.sql(
+        """SELECT * FROM VALUES
+          |  (1L, TIMESTAMP'2021-01-02 08:30:00', 'ok'),
+          |  (2L, TIMESTAMP'2021-01-02 12:00:00', 'ok')
+          |AS t(id, ts, flag)""".stripMargin).coalesce(1), dir, "base")
+      dir
+    }
+    def ids(dir: String) =
+      Manifest.read(spark, dir).select("id").as[Long].collect().sorted.toSeq
+    val (cow, upd, mor) = (table(), table(), table())
+    // 00:00..01:00 in Los Angeles is 08:00Z..09:00Z: the 08:30Z row is
+    // in range, as SQL `DELETE … WHERE ts BETWEEN` judges it
+    val (lo, hi) = ("2021-01-02T00:00:00", "2021-01-02T01:00:00")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      assert(Manifest.deleteRange(spark, cow, "ts", lo, hi, "cow")
+        .committed.contains("cow"))
+      assert(ids(cow) == Seq(2L))
+      assert(Manifest.updateRange(spark, upd, "ts", lo, hi, "upd",
+        Map("flag" -> lit("hit"))).committed.contains("upd"))
+      assert(Manifest.read(spark, upd).select("id", "flag").as[(Long, String)]
+        .collect().sorted.toSeq == Seq(1L -> "hit", 2L -> "ok"))
+      assert(Manifest.deleteRangeMOR(spark, mor, "ts", lo, hi, "mor")
+        .deletedRows == 1)
+      assert(ids(mor) == Seq(2L))
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+  }
+
   test("updateRange rewrites in-range rows only, confined to overlapping files") {
     val dir = tmpDir()
     Manifest.write(

@@ -419,6 +419,37 @@ class GraftDmlSpec extends AnyFunSuite {
     assert(Manifest.readAt(spark, dir, "base").count() == 1000)
   }
 
+  test("an inserting MERGE sizes its landing from the plan, not the touched bytes") {
+    val dir = tmpDir()
+    Manifest.write(spark.range(0, 10).toDF("k").withColumn("v", $"k" * 2),
+      dir, "base")
+    val baseFiles = Manifest.currentFiles(spark, dir).toSet
+    view(dir, "dml_mheavy_t")
+    spark.range(5, 20005).toDF("k").withColumn("nv", $"k" * 3)
+      .createOrReplaceTempView("dml_mheavy_s")
+    // 64 join partitions and a tiny file target: the touched bytes (a
+    // few KB) would size the landing at the 16-file floor, packing
+    // 20,000 inserted rows into 16 files
+    val conf = Map("spark.sql.shuffle.partitions" -> "64",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.graft.write.targetFileBytes" -> "1024")
+    val saved = conf.keys.map(k => k -> spark.conf.getOption(k))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try spark.sql(
+      """MERGE INTO dml_mheavy_t t USING dml_mheavy_s s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET v = s.nv
+        |WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.nv)""".stripMargin)
+    finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+    val after = spark.read.format("graft").load(dir)
+    assert(after.count() == 20005)
+    assert(after.where("k = 7 AND v = 21").count() == 1)
+    val landed = Manifest.currentFiles(spark, dir).filterNot(baseFiles)
+    assert(landed.size > 16,
+      s"an insert-heavy MERGE must not be packed into the floor: ${landed.size} files")
+  }
+
   test("a zero-match insert-only MERGE keeps the hive layout and is not a rewrite commit") {
     val dir = tmpDir()
     Manifest.writePartitioned(
