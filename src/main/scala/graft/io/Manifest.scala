@@ -500,13 +500,8 @@ object Manifest {
   def deleteRangeMOR(spark: SparkSession, dir: String, column: String,
       lo: String, hi: String, snapshot: String,
       beforePublish: () => Unit = () => ()): MorDelete = {
-    require(snapshot.matches("[A-Za-z0-9._-]+"), s"unsafe snapshot id: $snapshot")
-    val (fsys, base) = fs(spark, dir)
-    val priors = retained(fsys, base)
-    val cur = headOrThrow(priors.lastOption, dir)
-    requireFresh(priors, snapshot, dir)
-    require(!fsys.exists(new Path(base, s"deletes-$snapshot")),
-      s"deletes-$snapshot already landed under $dir")
+    val l = landing(spark, dir, snapshot, lands = true)
+    val cur = headOrThrow(l.priors.lastOption, dir)
     val (touch, _, inRange) = rangeSplit(spark, dir, cur.files, column, lo, hi)
     if (touch.isEmpty) return MorDelete(Nil, 0L, None)
     // LIVE rows only: judging the predicate on already-MOR-deleted rows
@@ -518,8 +513,7 @@ object Manifest {
     // rows TO DELETE: NULL never matches a range predicate, and
     // where(inRange) drops null-valued rows from the delete set — the
     // right way round for a delete
-    deleteHitsMOR(spark, dir, snapshot, touch, metaDf.where(inRange),
-      beforePublish)
+    deleteHitsMOR(spark, l, touch, metaDf.where(inRange), beforePublish)
   }
 
   /** The predicate-general MERGE-ON-READ DELETE core (shared by
@@ -528,60 +522,35 @@ object Manifest {
     * delete — derived from [[readFilesMetaApplyingDeletes]] over
     * `touch`, still carrying `_graft_file`/`_graft_pos` — landed as a
     * `deletes-<snapshot>/` position list plus the change record, then
-    * committed with the additive rebase (see the commit-loop note
-    * below). Data files never move: deleting a few thousand rows from
-    * a 100 TB table writes kilobytes. */
-  private[graft] def deleteHitsMOR(spark: SparkSession, dir: String,
-      snapshot: String, touch: Seq[String],
-      hits: DataFrame, beforePublish: () => Unit = () => ()): MorDelete = {
-    require(snapshot.matches("[A-Za-z0-9._-]+"), s"unsafe snapshot id: $snapshot")
-    val (fsys, base) = fs(spark, dir)
-    val priors = retained(fsys, base)
-    require(priors.nonEmpty, s"no committed snapshot under $dir")
-    requireFresh(priors, snapshot, dir)
-    val (delFiles, n) = landPositionDeletes(spark, dir, snapshot, hits)
+    * committed with the MOR-delete rebase (see [[commit]]). Data files
+    * never move: deleting a few thousand rows from a 100 TB table
+    * writes kilobytes. */
+  private[graft] def deleteHitsMOR(spark: SparkSession, l: Landing,
+      touch: Seq[String], hits: DataFrame,
+      beforePublish: () => Unit = () => ()): MorDelete = {
+    require(l.priors.nonEmpty, s"no committed snapshot under ${l.dir}")
+    val (delFiles, n) = landPositionDeletes(spark, l.dir, l.snapshot, hits)
     // the change record: the deleted rows themselves — the MOR commit
     // adds no data files, so without it the change feed could never
     // represent this deletion (the position list names rows, not values)
-    val cdcFs = landCdc(spark, dir, snapshot, hits
+    val cdcFs = landCdc(spark, l.dir, l.snapshot, hits
       .drop("_graft_file", "_graft_pos")
       .withColumn(CdfTypeCol, org.apache.spark.sql.functions.lit("delete")))
-    // MOR-delete commit with REBASE: position deletes are an ADDITIVE
-    // set keyed by (file, row-index), so a lost CAS rebases onto the
-    // winner's head — carrying the winner's files AND delete state,
-    // appending this commit's delete files — as long as every data file
-    // of the BASE snapshot is still present (this commit's delete rows
-    // target base files by position; a winner that rewrote or removed
-    // one invalidates those positions — a TRUE conflict, thrown). A
-    // concurrent append's new rows are not re-judged by the predicate
-    // (WriteSerializable, Delta's default).
-    var tries = 0
-    var committed = false
-    while (!committed) {
-      val priors2 = if (tries == 0) priors else retained(fsys, base)
-      val head = priors2.last
-      if (tries > 0) {
-        // the delete rows target the TOUCHED files by position — only
-        // those must survive the winner; a race against a rewrite of
-        // disjoint files (e.g. a COW delete elsewhere) rebases cleanly
-        val gone = touch.filterNot(head.files.toSet)
-        if (gone.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"MOR delete '$snapshot' for $dir lost its race to a commit " +
-              s"that rewrote or removed targeted base file(s) " +
-              s"(${gone.take(3).mkString(", ")}) - re-run the delete")
-      }
-      try {
-        publishManifest(fsys, base, dir, snapshot, priors2,
-          head.files, head.deleteFiles ++ delFiles, beforePublish,
-          cdcFiles = cdcFs, cdcRecorded = true)
-        committed = true
-      } catch {
-        case _: java.util.ConcurrentModificationException
-            if tries < MaxAppendCommitRetries => tries += 1
-      }
+    commit(l, retry = true, beforePublish) { priors =>
+      val head = priors.last
+      // the delete rows target the TOUCHED files by position — only
+      // those must survive the winner; a race against a rewrite of
+      // disjoint files (e.g. a COW delete elsewhere) rebases cleanly
+      val gone = touch.filterNot(head.files.toSet)
+      if (gone.nonEmpty)
+        throw new TrueConflictException(
+          s"MOR delete '${l.snapshot}' for ${l.dir} lost its race to a " +
+            s"commit that rewrote or removed targeted base file(s) " +
+            s"(${gone.take(3).mkString(", ")}) - re-run the delete")
+      Body(head.files, head.deleteFiles ++ delFiles,
+        cdcFiles = cdcFs, cdcRecorded = true)
     }
-    MorDelete(touch, n, Some(snapshot))
+    MorDelete(touch, n, Some(l.snapshot))
   }
 
   /** MERGE-ON-READ UPDATE commit (the SQL `UPDATE` path under
@@ -593,9 +562,9 @@ object Manifest {
     * thousand rows plus a KB position list). The commit both adds
     * files and changes delete state, so append-only incremental
     * readers refuse across it and the change feed serves it via the
-    * recorded cdc. ONE publish attempt pinned to the head the
-    * positions were computed against (the expectedSeq CAS): any
-    * concurrent commit surfaces loudly — re-run the statement.
+    * recorded cdc. ONE publish attempt against the head the positions
+    * were computed against: any concurrent commit surfaces loudly —
+    * re-run the statement.
     *
     * `hits` carries `_graft_file`/`_graft_pos` (LIVE rows matching the
     * predicate — localCheckpoint it so positions, updated copies, and
@@ -605,13 +574,9 @@ object Manifest {
       snapshot: String, hits: DataFrame, updated: DataFrame,
       cdc: DataFrame, partitionCols: Seq[String],
       beforePublish: () => Unit = () => ()): Unit = {
-    require(snapshot.matches("[A-Za-z0-9._-]+"), s"unsafe snapshot id: $snapshot")
-    val (fsys, base) = fs(spark, dir)
-    val priors = retained(fsys, base)
-    val cur = headOrThrow(priors.lastOption, dir)
-    requireFresh(priors, snapshot, dir)
-    val dataDir = new Path(base, s"data-$snapshot")
-    require(!fsys.exists(dataDir), s"data-$snapshot already landed under $dir")
+    val l = landing(spark, dir, snapshot, lands = true)
+    val cur = headOrThrow(l.priors.lastOption, dir)
+    val dataDir = new Path(l.base, s"data-$snapshot")
     val (delFiles, _) = landPositionDeletes(spark, dir, snapshot, hits)
     // the updated copies land through the same logical→physical choke
     // point as every writer — CHECK constraints included (an UPDATE
@@ -624,16 +589,16 @@ object Manifest {
     else toLand.write.partitionBy(partitionCols: _*).parquet(dataDir.toString)
     try verifyConstraints()
     catch { case t: Throwable =>
-      fsys.delete(dataDir, true)
-      fsys.delete(new Path(base, s"deletes-$snapshot"), true)
+      l.fsys.delete(dataDir, true)
+      l.fsys.delete(new Path(l.base, s"deletes-$snapshot"), true)
       throw t
     }
-    val newFiles = landedParts(fsys, base, s"data-$snapshot")
+    val newFiles = landedParts(l.fsys, l.base, s"data-$snapshot")
     val cdcFs = landCdc(spark, dir, snapshot, cdc)
-    publishManifest(fsys, base, dir, snapshot, priors,
-      cur.files ++ newFiles, cur.deleteFiles ++ delFiles, beforePublish,
-      cdcFiles = cdcFs, cdcRecorded = true,
-      expectedSeq = Some(cur.seq + 1))
+    commit(l, retry = false, beforePublish) { _ =>
+      Body(cur.files ++ newFiles, cur.deleteFiles ++ delFiles,
+        cdcFiles = cdcFs, cdcRecorded = true)
+    }
   }
 
   /** APPEND-commit: land `df` as a fresh data dir and publish a snapshot
@@ -674,9 +639,6 @@ object Manifest {
     }
   }
 
-  /** Test seam: `beforePublish` runs after the manifest temp file is
-    * staged, immediately before the commit rename — the window a
-    * concurrent writer would race into. */
   /** Land a CHANGE-DATA frame (table columns + `_change_type`) under
     * `cdc-<snapshot>/` — the commit's row-level change record, written
     * BEFORE the manifest publish so a failed commit leaves only a
@@ -690,7 +652,6 @@ object Manifest {
       cdcDf: DataFrame): Seq[String] = {
     val (fsys, base) = fs(spark, dir)
     val cdcDir = new Path(base, s"cdc-$snapshot")
-    require(!fsys.exists(cdcDir), s"cdc-$snapshot already landed under $dir")
     val toLand = sizeForLanding(declaredSchema(spark, dir)
       .filter(ColumnMapping.hasMapping)
       .fold(cdcDf)(ColumnMapping.toPhysical(cdcDf, _)))
@@ -707,7 +668,6 @@ object Manifest {
       snapshot: String, hits: DataFrame): (Seq[String], Long) = {
     val (fsys, base) = fs(spark, dir)
     val delDir = new Path(base, s"deletes-$snapshot")
-    require(!fsys.exists(delDir), s"deletes-$snapshot already landed under $dir")
     hits.select(relPathCol.as("file_path"), F.col("_graft_pos").as("pos"))
       .orderBy("file_path", "pos")
       .coalesce(1).write.parquet(delDir.toString)
@@ -838,9 +798,26 @@ object Manifest {
       .sortBy(_._1)
   }
 
+  /** One counter per CHECK constraint, named after it: the rows where
+    * its predicate is FALSE (SQL semantics — TRUE and UNKNOWN pass). */
+  private def violationCounts(
+      cons: Seq[(String, String)]): Seq[org.apache.spark.sql.Column] =
+    cons.map { case (name, sql) =>
+      F.sum(F.when(F.expr(s"($sql) IS FALSE"), 1L).otherwise(0L)).as(name)
+    }
+
+  /** The violated constraints among `counts` (keyed by constraint name),
+    * each as `'name' (sql): n row(s)`. */
+  private def violations(cons: Seq[(String, String)],
+      counts: Map[String, Any]): Seq[String] =
+    cons.flatMap { case (name, sql) =>
+      counts.get(name).collect {
+        case n: java.lang.Long if n > 0 => s"'$name' ($sql): $n row(s)"
+      }
+    }
+
   /** CHECK-constraint gate for a write: attach ONE observation to the
-    * outgoing frame counting each constraint's violations (SQL
-    * semantics — TRUE and UNKNOWN pass, FALSE violates), riding the
+    * outgoing frame counting each constraint's violations, riding the
     * write job itself: zero extra scans however many constraints.
     * Returns the instrumented frame and a verifier to call AFTER the
     * write action; the verifier throws naming every violated
@@ -851,17 +828,10 @@ object Manifest {
     val cons = checkConstraints(spark, dir)
     if (cons.isEmpty) return (df, () => ())
     val obs = org.apache.spark.sql.Observation()
-    val aggs = cons.map { case (name, sql) =>
-      F.sum(F.when(F.expr(s"($sql) IS FALSE"), 1L).otherwise(0L)).as(name)
-    }
+    val aggs = violationCounts(cons)
     val gated = df.observe(obs, aggs.head, aggs.tail: _*)
     (gated, () => {
-      val row = obs.get
-      val bad = cons.flatMap { case (name, sql) =>
-        Option(row.getOrElse(name, null)).collect {
-          case n: java.lang.Long if n > 0 => s"'$name' ($sql): $n row(s)"
-        }
-      }
+      val bad = violations(cons, obs.get)
       if (bad.nonEmpty)
         throw new IllegalStateException(
           s"graft: write into $dir violates CHECK constraint(s) " +
@@ -880,18 +850,15 @@ object Manifest {
       cdcNoChange: Boolean = false,
       expectedSeq: Option[Long] = None,
       landingBytes: Option[Long] = None): Unit = {
-    // expectedSeq pins single-attempt whole-state commits (compaction,
-    // MOR update) to the head their state was computed from — see
-    // publishManifest's head-consistency guard. The retrying tiers
-    // re-derive state per attempt, so pinning them would just spin.
+    // expectedSeq pins a single-attempt whole-state commit (compaction)
+    // to the head its state was computed from — see publishManifest's
+    // head-consistency guard. The retrying tiers re-derive state per
+    // attempt, so pinning them would just spin.
     require(expectedSeq.isEmpty || (cowBase.isEmpty && !carryForward),
       "expectedSeq is for single-attempt commits only")
-    require(snapshot.matches("[A-Za-z0-9._-]+"), s"unsafe snapshot id: $snapshot")
     val spark = df.sparkSession
-    val (fsys, base) = fs(spark, dir)
-    val dataDir = new Path(base, s"data-$snapshot")
-    require(!fsys.exists(dataDir), s"snapshot $snapshot already landed under $dir")
-    requireFresh(retained(fsys, base), snapshot, dir)
+    val l = landing(spark, dir, snapshot, lands = true)
+    val dataDir = new Path(l.base, s"data-$snapshot")
     // CHECK constraints gate every writer at this choke point, on the
     // LOGICAL frame (predicates name logical columns), riding the
     // write job's own pass — a violating batch lands nothing durable
@@ -906,42 +873,11 @@ object Manifest {
     if (partitionCols.isEmpty) toLand.write.parquet(dataDir.toString)
     else toLand.write.partitionBy(partitionCols: _*).parquet(dataDir.toString)
     try verifyConstraints()
-    catch { case t: Throwable => fsys.delete(dataDir, true); throw t }
-    val files = landedParts(fsys, base, s"data-$snapshot")
+    catch { case t: Throwable => l.fsys.delete(dataDir, true); throw t }
+    val files = landedParts(l.fsys, l.base, s"data-$snapshot")
     // the commit's row-level change record lands beside the data —
     // published (or orphaned) together with it
     val cdcLanded = cdc.map(landCdc(spark, dir, snapshot, _)).getOrElse(Nil)
-    val cdcRec = cdc.isDefined || cdcNoChange
-    // COMMIT REBASE (Delta's OptimisticTransaction shape), two tiers:
-    //
-    //  - PLAIN APPENDS: new files live in their own data-<snapshot> dir,
-    //    DISJOINT from any concurrent commit by construction, so a lost
-    //    CAS is never a conflict — re-read the head, recompute the
-    //    carry-forward (the winner's files AND delete state), retry.
-    //  - COW REWRITES with a declared base (`cowBase`: predicate-scoped
-    //    DELETE/UPDATE/MERGE): a lost CAS triggers Delta's FILE-LEVEL
-    //    conflict check against the new head. The commit rebases iff
-    //    the winner left every file this rewrite TOUCHED in place and
-    //    did not change merge-on-read delete state — then the rebased
-    //    carry is simply "the winner's head minus the touched files",
-    //    which keeps the winner's appends and the winner's own rewrites
-    //    of files this commit never read. A winner that rewrote or
-    //    removed a touched file, or changed delete state, is a TRUE
-    //    conflict: throw loudly. (WriteSerializable semantics, as Delta
-    //    defaults: a concurrent append's rows are not re-judged by this
-    //    commit's predicate.)
-    //
-    // Whole-table rebases (overwrite, compaction) declare no cowBase
-    // and still throw on any lost race: they READ the entire table, so
-    // every concurrent commit is a conflict.
-    //
-    // EVERYTHING the commit derives — seq, conflict check, rebased
-    // carry, delete state — comes from the ONE `retained()` read inside
-    // attempt(). Splitting them (rebase in the retry handler, seq in
-    // the next attempt) is a TOCTOU: a commit landing between the two
-    // reads would be counted in the seq (rename succeeds) while its
-    // files are missing from the stale carry — its rows silently
-    // vanish from the new head.
     val plainAppend = carryForward && carriedExplicit.isEmpty &&
       deletesExplicit.isEmpty && !rewrite
     // the rebase tier is keyed by the DECLARED base, not the rewrite
@@ -949,64 +885,42 @@ object Manifest {
     // like an append — its touched set is empty, so the conflict check
     // passes trivially and the carry re-derives from the new head
     val cowRebase = cowBase.isDefined && carriedExplicit.isDefined
-    def attempt(): Unit = {
-      val priors = retained(fsys, base)
-      requireFresh(priors, snapshot, dir)
+    commit(l, retry = plainAppend || cowRebase, beforePublish) { priors =>
+      val head = priors.lastOption
       val carried: Seq[String] =
         if (cowRebase) {
           val bse = cowBase.get
           val keep = carriedExplicit.get
-          val head = priors.lastOption.getOrElse(bse)
-          if (head.seq == bse.seq && head.snapshot == bse.snapshot) keep
+          val h = head.getOrElse(bse)
+          if (h.seq == bse.seq && h.snapshot == bse.snapshot) keep
           else {
             // head moved since the rewrite was computed: file-level
-            // conflict check + rebase against THIS priors snapshot —
-            // the same one the seq derives from, so any later commit
-            // still collides on the seq CAS and re-enters here
+            // conflict check + rebase against THIS attempt's read
             val touched = bse.files.toSet -- keep
-            if (head.deleteFiles.sorted != bse.deleteFiles.sorted)
+            if (h.deleteFiles.sorted != bse.deleteFiles.sorted)
               throw new TrueConflictException(
                 s"commit '$snapshot' for $dir lost its race to a commit " +
                   "that changed merge-on-read delete state; the rewrite " +
                   "was computed without it - re-run the operation")
-            val gone = touched.filterNot(head.files.toSet)
+            val gone = touched.filterNot(h.files.toSet)
             if (gone.nonEmpty)
               throw new TrueConflictException(
                 s"commit '$snapshot' for $dir lost its race to a commit " +
                   s"that rewrote or removed file(s) this rewrite also " +
                   s"touched (${gone.take(3).mkString(", ")}) - re-run " +
                   "the operation")
-            head.files.filterNot(touched)
+            h.files.filterNot(touched)
           }
         } else carriedExplicit.getOrElse(
-          if (carryForward) priors.lastOption.map(_.files).getOrElse(Nil)
-          else Nil)
+          if (carryForward) head.map(_.files).getOrElse(Nil) else Nil)
       // delete files: a rewrite (COW DML, compact, overwrite) resets MOR
       // state for the files it replaces; append carries it forward —
       // appended files can't be targeted by pre-existing deletes and the
       // carried data files keep theirs
       val deletes = deletesExplicit.getOrElse(
-        if (carryForward) priors.lastOption.map(_.deleteFiles).getOrElse(Nil)
-        else Nil)
-      publishManifest(fsys, base, dir, snapshot, priors,
-        carried ++ files, deletes, beforePublish,
-        rewrite, cdcFiles = cdcLanded, cdcRecorded = cdcRec,
-        expectedSeq = expectedSeq)
-    }
-    if (!plainAppend && !cowRebase) attempt()
-    else {
-      var tries = 0
-      var committed = false
-      while (!committed) {
-        try { attempt(); committed = true }
-        catch {
-          // retry only the CAS loss; a TrueConflictException is final
-          case cme: java.util.ConcurrentModificationException
-              if !cme.isInstanceOf[TrueConflictException] &&
-                tries < MaxAppendCommitRetries =>
-            tries += 1 // head moved: the next attempt re-reads and rebases
-        }
-      }
+        if (carryForward) head.map(_.deleteFiles).getOrElse(Nil) else Nil)
+      Body(carried ++ files, deletes, rewrite, expectedSeq = expectedSeq,
+        cdcFiles = cdcLanded, cdcRecorded = cdc.isDefined || cdcNoChange)
     }
   }
 
@@ -1014,19 +928,17 @@ object Manifest {
     * executors under `data-<snapshot>/` — the DSv2 streaming write's
     * commit half (the epoch's DataWriters wrote the parquet; the
     * driver publishes). Append mode carries the head forward and
-    * REBASES on a lost CAS exactly like [[append]] (new files live in
-    * their own dir, disjoint from any concurrent commit by
-    * construction); overwrite mode (streaming Complete) replaces the
-    * file list and treats any lost race as a true conflict (it
-    * logically read the whole table). */
+    * rebases on a lost CAS like any plain append; overwrite mode
+    * (streaming Complete) replaces the file list in one attempt (see
+    * [[commit]]). */
   private[graft] def commitLandedAppend(spark: SparkSession, dir: String,
       snapshot: String, newFiles: Seq[String],
-      overwrite: Boolean = false): Unit = {
-    require(snapshot.matches("[A-Za-z0-9._-]+"), s"unsafe snapshot id: $snapshot")
+      overwrite: Boolean = false,
+      beforePublish: () => Unit = () => ()): Unit = {
+    val l = landing(spark, dir, snapshot)
     require(newFiles.nonEmpty, s"nothing landed for snapshot $snapshot")
     require(newFiles.forall(_.startsWith(s"data-$snapshot/")),
       s"landed files must live under data-$snapshot/")
-    val (fsys, base) = fs(spark, dir)
     // CHECK constraints: the epoch's files were landed executor-side,
     // so the gate is one scan of the NEW bytes (logical view) before
     // the publish — a violating epoch aborts the query with the
@@ -1035,45 +947,23 @@ object Manifest {
     val cons = checkConstraints(spark, dir)
     if (cons.nonEmpty) {
       val frame = readFiles(spark, dir, newFiles, declaredSchema(spark, dir))
-      val aggs = cons.map { case (name, sql) =>
-        F.sum(F.when(F.expr(s"($sql) IS FALSE"), 1L).otherwise(0L)).as(name)
-      }
+      val aggs = violationCounts(cons)
       val row = frame.agg(aggs.head, aggs.tail: _*).collect().head
-      val bad = cons.zipWithIndex.collect {
-        case ((name, sql), i) if !row.isNullAt(i) && row.getLong(i) > 0 =>
-          s"'$name' ($sql): ${row.getLong(i)} row(s)"
-      }
+      val bad = violations(cons, row.getValuesMap[Any](cons.map(_._1)))
       if (bad.nonEmpty) {
-        fsys.delete(new Path(base, s"data-$snapshot"), true)
+        l.fsys.delete(new Path(l.base, s"data-$snapshot"), true)
         throw new IllegalStateException(
           s"graft: streaming epoch into $dir violates CHECK " +
             s"constraint(s) ${bad.mkString("; ")} - the epoch was not " +
             "committed")
       }
     }
-    if (overwrite) {
-      val priors = retained(fsys, base)
-      requireFresh(priors, snapshot, dir)
+    commit(l, retry = !overwrite, beforePublish) { priors =>
+      val head = priors.lastOption
       // re-packs previously-served rows ⇒ rewrite-flagged (non-initial)
-      publishManifest(fsys, base, dir, snapshot, priors, newFiles, Nil,
-        rewrite = priors.nonEmpty)
-    } else {
-      var tries = 0
-      var done = false
-      while (!done) {
-        val priors = retained(fsys, base)
-        requireFresh(priors, snapshot, dir)
-        val head = priors.lastOption
-        try {
-          publishManifest(fsys, base, dir, snapshot, priors,
-            head.map(_.files).getOrElse(Nil) ++ newFiles,
-            head.map(_.deleteFiles).getOrElse(Nil))
-          done = true
-        } catch {
-          case _: java.util.ConcurrentModificationException
-              if tries < MaxAppendCommitRetries => tries += 1
-        }
-      }
+      if (overwrite) Body(newFiles, Nil, rewrite = priors.nonEmpty)
+      else Body(head.map(_.files).getOrElse(Nil) ++ newFiles,
+        head.map(_.deleteFiles).getOrElse(Nil))
     }
   }
 
@@ -1083,9 +973,108 @@ object Manifest {
   private final class TrueConflictException(msg: String)
     extends java.util.ConcurrentModificationException(msg)
 
-  /** Bounded retries for the append-commit rebase — a pathological
-    * commit storm must eventually surface instead of spinning. */
+  /** Bounded retries for the rebase tiers — a pathological commit
+    * storm must eventually surface instead of spinning. */
   private[graft] val MaxAppendCommitRetries = 5
+
+  /** A commit's preamble state: the table and snapshot id it commits,
+    * and the ONE pre-landing `retained()` read its first attempt
+    * derives from. */
+  private[graft] final case class Landing(fsys: FileSystem, base: Path,
+      dir: String, snapshot: String, priors: Seq[ManifestData])
+
+  /** The preamble every commit runs before it lands anything: refuse an
+    * unsafe snapshot id, any `data-`/`deletes-`/`cdc-<snapshot>` dir
+    * already landed (when this commit `lands` its own), and a snapshot
+    * id a retained commit already used — from the read [[commit]]'s
+    * first attempt then reuses. */
+  private[graft] def landing(spark: SparkSession, dir: String,
+      snapshot: String, lands: Boolean = false): Landing = {
+    require(snapshot.matches("[A-Za-z0-9._-]+"), s"unsafe snapshot id: $snapshot")
+    val (fsys, base) = fs(spark, dir)
+    if (lands) Seq("data", "deletes", "cdc").foreach(d =>
+      require(!fsys.exists(new Path(base, s"$d-$snapshot")),
+        s"$d-$snapshot already landed under $dir"))
+    val priors = retained(fsys, base)
+    requireFresh(priors, snapshot, dir)
+    Landing(fsys, base, dir, snapshot, priors)
+  }
+
+  /** What one commit attempt publishes, derived from that attempt's
+    * read (see [[commit]]). */
+  private final case class Body(files: Seq[String], deleteFiles: Seq[String],
+      rewrite: Boolean = false, metaB64: Option[String] = None,
+      expectedSeq: Option[Long] = None, cdcFiles: Seq[String] = Nil,
+      cdcRecorded: Boolean = false)
+
+  /** THE commit loop — Delta's optimistic transaction: read the
+    * snapshot, derive the actions, check conflicts, CAS. Each attempt
+    * works from ONE parsed `retained()` read (the first reuses the
+    * landing's): `requireFresh`, then `derive`, which builds the
+    * manifest body and may throw [[TrueConflictException]], then the
+    * one seq-keyed publish. EVERYTHING an attempt derives — seq,
+    * conflict check, rebased carry, delete state — comes from that one
+    * read. Splitting them (rebase from one read, seq from another) is a
+    * TOCTOU: a commit landing between the two reads would be counted in
+    * the seq (the rename succeeds) while its files are missing from the
+    * stale carry — its rows silently vanish from the new head.
+    *
+    * `retry` arms COMMIT REBASE: only a plain CAS loss re-reads and
+    * derives again, up to the retry bound; a TrueConflictException is
+    * final. The rebasing tiers:
+    *
+    *  - PLAIN APPENDS (append, appendPartitioned, streaming append
+    *    epochs): new files live in their own data-<snapshot> dir,
+    *    DISJOINT from any concurrent commit by construction, so a lost
+    *    CAS is never a conflict — the carry-forward re-derives from the
+    *    winner's head (its files AND delete state).
+    *  - COW REWRITES with a declared base (predicate-scoped
+    *    DELETE/UPDATE/MERGE, `where`-scoped compaction): Delta's
+    *    FILE-LEVEL conflict check. The commit rebases iff the winner
+    *    left every file this rewrite TOUCHED in place and did not change
+    *    merge-on-read delete state — the carry is then "the winner's
+    *    head minus the touched files", which keeps the winner's appends
+    *    and its own rewrites of files this commit never read. Otherwise
+    *    a true conflict.
+    *  - MOR DELETES: position deletes are an ADDITIVE set keyed by
+    *    (file, row-index), so the rebase carries the winner's files and
+    *    delete state plus this commit's delete files — as long as every
+    *    TOUCHED file survives (a winner that rewrote or removed one
+    *    invalidates the positions: a true conflict).
+    *
+    * A rebased commit's predicate does not re-judge a concurrent
+    * append's rows (WriteSerializable, Delta's default).
+    *
+    * Without `retry` the commit is ONE attempt against the landing's
+    * read: blind overwrites, whole-table compaction, MOR UPDATE,
+    * RESTORE, metadata commits and streaming Complete epochs. They read
+    * or replace the whole table, so ANY commit since that read — during
+    * the landing or in the publish window — takes their seq and the
+    * CAS refuses with the retryable ConcurrentModificationException:
+    * the caller re-derives against the new head. `expectedSeq` pins a
+    * commit to a head its caller read even earlier.
+    *
+    * Test seam: `beforePublish` runs before each attempt's rename,
+    * after the manifest temp file is staged — the window a concurrent
+    * writer races into. Returns the committed seq. */
+  private def commit(l: Landing, retry: Boolean, beforePublish: () => Unit)(
+      derive: Seq[ManifestData] => Body): Long = {
+    var priors = l.priors
+    var tries = 0
+    var seq = -1L
+    while (seq < 0) {
+      requireFresh(priors, l.snapshot, l.dir)
+      try seq = publishManifest(l, priors, derive(priors), beforePublish)
+      catch {
+        case cme: java.util.ConcurrentModificationException
+            if retry && !cme.isInstanceOf[TrueConflictException] &&
+              tries < MaxAppendCommitRetries =>
+          tries += 1
+          priors = retained(l.fsys, l.base) // head moved: re-read, rebase
+      }
+    }
+    seq
+  }
 
   /** METADATA-ONLY commit: publish a new manifest that lists the head's
     * files and delete state BY REFERENCE — zero data movement, one KB
@@ -1100,17 +1089,14 @@ object Manifest {
     * from the new head). */
   private[graft] def commitMetadata(spark: SparkSession, dir: String,
       snapshot: String, metaB64: Option[String] = None,
-      expectedSeq: Option[Long] = None): Long = {
-    require(snapshot.matches("[A-Za-z0-9._-]+"), s"unsafe snapshot id: $snapshot")
-    val (fsys, base) = fs(spark, dir)
-    val priors = retained(fsys, base)
-    require(priors.nonEmpty, s"no committed snapshot under $dir")
-    requireFresh(priors, snapshot, dir)
-    val head = priors.last
-    // head-consistency vs expectedSeq is enforced inside
-    // publishManifest (shared by every expectedSeq caller)
-    publishManifest(fsys, base, dir, snapshot, priors, head.files,
-      head.deleteFiles, metaB64 = metaB64, expectedSeq = expectedSeq)
+      expectedSeq: Option[Long] = None,
+      beforePublish: () => Unit = () => ()): Long = {
+    val l = landing(spark, dir, snapshot)
+    val head = headOrThrow(l.priors.lastOption, dir)
+    commit(l, retry = false, beforePublish) { _ =>
+      Body(head.files, head.deleteFiles, metaB64 = metaB64,
+        expectedSeq = expectedSeq)
+    }
   }
 
   /** The newest DDL commit's embedded metadata payload, scanning
@@ -1139,15 +1125,12 @@ object Manifest {
     }.nextOption()
   }
 
-  /** The shared commit tail: stage the manifest JSON, run the test
-    * seam, publish with the one seq-keyed CAS rename. Returns the
-    * committed seq. */
-  private def publishManifest(fsys: FileSystem, base: Path, dir: String,
-      snapshot: String, priors: Seq[ManifestData], allFiles: Seq[String],
-      deleteFiles: Seq[String], beforePublish: () => Unit = () => (),
-      rewrite: Boolean = false, metaB64: Option[String] = None,
-      expectedSeq: Option[Long] = None,
-      cdcFiles: Seq[String] = Nil, cdcRecorded: Boolean = false): Long = {
+  /** The commit tail of one [[commit]] attempt: stage the manifest
+    * JSON, run the test seam, publish with the one seq-keyed CAS
+    * rename. Returns the committed seq. */
+  private def publishManifest(l: Landing, priors: Seq[ManifestData],
+      b: Body, beforePublish: () => Unit): Long = {
+    import l.{base, dir, fsys, snapshot}
     // expectedSeq turns the rename into a FULL head CAS: the caller
     // computed its state as of head expectedSeq-1, so ANY intervening
     // commit (data or DDL) makes the target name taken and the rename
@@ -1161,14 +1144,14 @@ object Manifest {
     // rename silently skipped an entry — the rename could WIN while
     // the manifest body is stale, dropping the missed commit's files.
     // Refuse with the retryable conflict instead.
-    expectedSeq.foreach { e =>
+    b.expectedSeq.foreach { e =>
       val h = priors.lastOption.map(_.seq).getOrElse(-1L)
       if (h != e - 1)
         throw new java.util.ConcurrentModificationException(
           s"commit for $dir expected head seq ${e - 1} but listed $h; " +
             "state must be re-derived")
     }
-    val seq = expectedSeq.getOrElse((priors.map(_.seq) :+ -1L).max + 1)
+    val seq = b.expectedSeq.getOrElse((priors.map(_.seq) :+ -1L).max + 1)
     // `rewrite: true` marks commits whose NEW files re-serve rows older
     // snapshots already contained (compaction, COW DML) — the analogue
     // of Delta's dataChange=false, which [[readChangesSince]] refuses to
@@ -1181,8 +1164,9 @@ object Manifest {
     // (Delta's rule that cdc actions supersede add/remove derivation) —
     // an empty recorded list is a real statement ("no row changed":
     // compaction, zorder)
-    val json = encode(ManifestData(snapshot, seq, allFiles, deleteFiles,
-      System.currentTimeMillis(), rewrite, metaB64, cdcFiles, cdcRecorded))
+    val json = encode(ManifestData(snapshot, seq, b.files, b.deleteFiles,
+      System.currentTimeMillis(), b.rewrite, b.metaB64, b.cdcFiles,
+      b.cdcRecorded))
     val tmp = new Path(base, s".manifest-$snapshot.tmp")
     val out = fsys.create(tmp, true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
@@ -1236,12 +1220,12 @@ object Manifest {
         // atomically server-side and raw object stores ride the
         // coordinator branch above, so the TOCTOU is confined to
         // local[*] — which is also exactly where every racer shares
-        // this JVM: one lock per (fs, table, seq) closes it.
+        // this JVM: one lock per (fs, table) closes it.
         // Cross-process local racing stays outside the contract (use
         // HDFS or register a CommitCoordinator).
         val dest = manifestPath(dir, seq)
         renameLocks.computeIfAbsent(
-          s"${fsys.getUri}#$dest", _ => new Object).synchronized {
+          s"${fsys.getUri}#$base", _ => new Object).synchronized {
           if (fsys.exists(dest) || !fsys.rename(tmp, dest)) {
             val taken = fsys.exists(dest)
             fsys.delete(tmp, false)
@@ -1258,11 +1242,12 @@ object Manifest {
     seq
   }
 
-  /** One lock object per manifest commit key — see the local-FS TOCTOU
-    * note at the rename above. Entries are a bare Object per (table,
-    * seq) ever committed by this JVM; never cleared (collapsing a lock
-    * mid-flight would reopen the race it exists to close). */
-  private val renameLocks =
+  /** One lock object per table — see the local-FS TOCTOU note at the
+    * rename above. Entries are a bare Object per (filesystem, table dir)
+    * this JVM ever committed to, so the map grows with the tables, not
+    * with the commits; never cleared (collapsing a lock mid-flight would
+    * reopen the race it exists to close). */
+  private[io] val renameLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** The DDL sidecar's declared schema when the table dir carries one
@@ -1580,7 +1565,7 @@ object Manifest {
     deleteRangeImpl(spark, dir, column, lo, hi, snapshot, () => ())
 
   /** Test seam variant of [[deleteRange]] — `beforePublish` opens the
-    * commit race window (see [[writeImpl]]'s COW rebase tier). */
+    * commit race window (see [[commit]]'s COW rebase tier). */
   private[graft] def deleteRangeImpl(spark: SparkSession, dir: String,
       column: String, lo: String, hi: String, snapshot: String,
       beforePublish: () => Unit): CowRewrite =
@@ -1667,7 +1652,8 @@ object Manifest {
   def compact(spark: SparkSession, dir: String, snapshot: String,
       targetFileBytes: Long, clusterBy: Seq[String] = Nil,
       where: Map[String, String] = Map.empty,
-      partitionBy: Option[Seq[String]] = None): CowRewrite = {
+      partitionBy: Option[Seq[String]] = None,
+      beforePublish: () => Unit = () => ()): CowRewrite = {
     require(targetFileBytes > 0,
       s"compact: targetFileBytes must be > 0, got $targetFileBytes")
     val (fsys, base) = fs(spark, dir)
@@ -1698,12 +1684,14 @@ object Manifest {
         .sortWithinPartitions(ordering: _*)
     }
     if (scoped)
-      writeImpl(laidOut, dir, snapshot, () => (), carriedExplicit = Some(keep),
-        partitionCols = partCols, deletesExplicit = Some(cur.deleteFiles),
-        rewrite = true, cowBase = Some(cur), cdcNoChange = true)
+      writeImpl(laidOut, dir, snapshot, beforePublish,
+        carriedExplicit = Some(keep), partitionCols = partCols,
+        deletesExplicit = Some(cur.deleteFiles), rewrite = true,
+        cowBase = Some(cur), cdcNoChange = true)
     else
-      writeImpl(laidOut, dir, snapshot, () => (), partitionCols = partCols,
-        rewrite = true, cdcNoChange = true, expectedSeq = Some(cur.seq + 1))
+      writeImpl(laidOut, dir, snapshot, beforePublish,
+        partitionCols = partCols, rewrite = true, cdcNoChange = true,
+        expectedSeq = Some(cur.seq + 1))
     CowRewrite(touch, keep, Some(snapshot))
   }
 
@@ -1721,25 +1709,27 @@ object Manifest {
     * re-made against the new head. Restoring the current head is a
     * no-op (returns None). Returns the new snapshot id. */
   def restore(spark: SparkSession, dir: String, snapshot: String,
-      metaFor: Long => Option[String] = _ => None): Option[String] = {
-    val (fsys, base) = fs(spark, dir)
-    val all = retained(fsys, base)
+      metaFor: Long => Option[String] = _ => None,
+      beforePublish: () => Unit = () => ()): Option[String] = {
+    val newSnap = s"restore-${System.currentTimeMillis()}-" +
+      java.util.UUID.randomUUID().toString.take(8)
+    val l = landing(spark, dir, newSnap)
+    val all = l.priors
     val target = all.find(_.snapshot == snapshot).getOrElse(
       throw new IllegalArgumentException(
         s"no retained snapshot '$snapshot' under $dir " +
           s"(retained: ${all.map(_.snapshot).mkString(", ")})"))
     if (all.last.snapshot == snapshot) return None
-    val newSnap = s"restore-${System.currentTimeMillis()}-" +
-      java.util.UUID.randomUUID().toString.take(8)
     // RESTORE rolls METADATA back with the data: the caller's payload
     // (schema history rewound to the target, keyed by THIS commit's
-    // seq) rides in the restore commit itself, and expectedSeq pins the
-    // head so the rolled-back meta can never publish against a state a
-    // concurrent commit has already moved (the documented loud-throw)
-    val seq = all.last.seq + 1
-    publishManifest(fsys, base, dir, newSnap, all,
-      target.files, target.deleteFiles, rewrite = true,
-      metaB64 = metaFor(seq), expectedSeq = Some(seq))
+    // seq) rides in the restore commit itself, and the single attempt
+    // pins the head so the rolled-back meta can never publish against a
+    // state a concurrent commit has already moved (the documented
+    // loud-throw)
+    commit(l, retry = false, beforePublish) { priors =>
+      Body(target.files, target.deleteFiles, rewrite = true,
+        metaB64 = metaFor(priors.last.seq + 1))
+    }
     Some(newSnap)
   }
 

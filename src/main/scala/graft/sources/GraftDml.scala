@@ -396,11 +396,12 @@ private[sources] object GraftDmlExec {
 
   /** Commit the rewritten rows + carried files as one rewrite-flagged
     * snapshot, preserving the touched files' hive layout. A
-    * predicate-scoped statement (DELETE/UPDATE) passes its pinned
-    * `base`, arming [[Manifest.writeImpl]]'s file-level conflict
-    * rebase: a concurrent commit that left the touched files alone
-    * does not fail the statement. MERGE passes None — it read the
-    * whole table, so every concurrent commit is a true conflict.
+    * predicate-scoped statement (DELETE/UPDATE, the file-pruned
+    * MERGE) passes its pinned `base`, arming the manifest commit's
+    * file-level conflict rebase: a concurrent commit that left the
+    * touched files alone does not fail the statement. The
+    * full-snapshot MERGE passes None — it read the whole table, so
+    * every concurrent commit is a true conflict.
     * `inserts`: the statement adds rows (a MERGE with an INSERT
     * action), so the touched bytes do not bound what lands. */
   def commitRewrite(spark: SparkSession, dir: String, rewritten: DataFrame,
@@ -505,7 +506,8 @@ case class GraftDeleteCommand(dir: String, pinned: String,
         if (!hits.isEmpty) {
           val snap = s"dml${System.currentTimeMillis()}-" +
             java.util.UUID.randomUUID().toString.take(8)
-          Manifest.deleteHitsMOR(spark, dir, snap, touch, hits,
+          Manifest.deleteHitsMOR(spark,
+            Manifest.landing(spark, dir, snap, lands = true), touch, hits,
             GraftDmlExec.beforePublishHook)
           spark.catalog.refreshByPath(dir)
         }
@@ -997,7 +999,7 @@ case class GraftMergeCommand(dir: String, pinned: String,
     * every touched file carries by reference. A daily upsert into a
     * 100 TB table then writes the upserted rows, not the touched
     * files. Commit, cdc, and conflict semantics are
-    * [[Manifest.updateHitsMOR]]'s (one expectedSeq-CAS'd commit). */
+    * [[Manifest.updateHitsMOR]]'s (one single-attempt commit). */
   private def applyActionsMor(spark: SparkSession, tgtMeta: DataFrame,
       src: DataFrame, attrs: Seq[AttributeReference],
       touch: Seq[String], keep: Seq[String]): Unit = {

@@ -1,9 +1,44 @@
 package graft.io
 
+import java.net.URI
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+
+/** A local filesystem under its own scheme that counts `open` calls on
+  * `manifest-<seq>.json` keys: the manifest parses an operation costs.
+  * Statuses are plain (no POSIX permissions), so Spark's listings never
+  * ask RawLocalFileSystem to load permissions for a non-file:// path. */
+class ManifestOpenCountingFS extends RawLocalFileSystem {
+  override def getScheme: String = "mcount"
+  override def getUri: URI = URI.create("mcount:///")
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (f.getName.matches("manifest-\\d+\\.json"))
+      ManifestOpenCountingFS.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+
+  private def plain(s: FileStatus): FileStatus =
+    new FileStatus(s.getLen, s.isDirectory, 1, s.getBlockSize,
+      s.getModificationTime, s.getPath)
+
+  override def listStatus(p: Path): Array[FileStatus] =
+    super.listStatus(p).map(plain)
+
+  override def getFileStatus(f: Path): FileStatus =
+    plain(super.getFileStatus(f))
+}
+
+object ManifestOpenCountingFS {
+  val opens = new AtomicLong
+}
 
 class ManifestSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.session
@@ -399,6 +434,144 @@ class ManifestSpec extends AnyFunSuite {
     }
     assert(Manifest.snapshots(spark, dir) == Seq("s1", "ap-winner"))
     assert(Manifest.read(spark, dir).count() == 20)
+  }
+
+  test("every commit parses each retained manifest once per attempt") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.mcount.impl", classOf[ManifestOpenCountingFS].getName)
+    conf.set("fs.mcount.impl.disable.cache", "true")
+    val dir = s"mcount:${tmpDir()}/tbl"
+    Manifest.write(spark.range(0, 100).toDF("id")
+      .repartitionByRange(2, col("id")), dir, "s0")
+    var n = 0
+    def deepen(to: Int): Unit =
+      while (Manifest.snapshots(spark, dir).size < to) {
+        n += 1
+        Manifest.append(Seq(1000L + n).toDF("id"), dir, s"s$n")
+      }
+    def opens(op: => Unit): Long = {
+      ManifestOpenCountingFS.opens.set(0)
+      op
+      ManifestOpenCountingFS.opens.get
+    }
+    // the three ops at depth d, d+1, d+2; each range hits live rows
+    def ops(tag: String, lo: Int): Seq[Long] = Seq(
+      opens(Manifest.append(Seq(2000L + lo).toDF("id"), dir, s"ap-$tag")),
+      opens(Manifest.deleteRange(spark, dir, "id", s"$lo", s"${lo + 4}",
+        s"cow-$tag")),
+      opens(Manifest.deleteRangeMOR(spark, dir, "id", s"${lo + 50}",
+        s"${lo + 54}", s"mor-$tag")))
+    deepen(10)
+    val shallow = ops("a", 0)
+    deepen(20)
+    val deep = ops("b", 5)
+    // ten more retained manifests cost ten more opens per op: one
+    // parse of each per commit. The depth-independent opens (the head
+    // read, the embedded-meta cache fill) cancel in the difference.
+    Seq("append", "deleteRange", "deleteRangeMOR").zipWithIndex.foreach {
+      case (op, i) =>
+        assert(deep(i) - shallow(i) == 10,
+          s"$op: ${shallow(i)} manifest opens at depth ${10 + i}, " +
+            s"${deep(i)} at depth ${20 + i}")
+    }
+    assert(Manifest.read(spark, dir).count() == 100 - 20 + n + 2)
+  }
+
+  test("the same-JVM rename lock is one entry per table, not per commit") {
+    val dir = tmpDir()
+    Manifest.write(Seq(0).toDF("v"), dir, "s0")
+    (1 until 20).foreach(i => Manifest.append(Seq(i).toDF("v"), dir, s"s$i"))
+    assert(Manifest.snapshots(spark, dir).size == 20)
+    assert(Manifest.renameLocks.keySet.asScala
+      .count(k => k.endsWith(s"#$dir") || k.contains(s"$dir/")) == 1)
+  }
+
+  test("race matrix: a streaming epoch append rebases onto a racing append") {
+    val dir = tmpDir()
+    Manifest.write((1 to 10).toDF("v"), dir, "base")
+    // the epoch's files land first (executor-side in a real stream)
+    (11 to 20).toDF("v").coalesce(1).write.parquet(s"$dir/data-e1")
+    val landed = new java.io.File(s"$dir/data-e1").list().toSeq
+      .filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
+      .map(f => s"data-e1/$f")
+    var raced = false
+    Manifest.commitLandedAppend(spark, dir, "e1", landed,
+      beforePublish = () => if (!raced) {
+        raced = true
+        Manifest.append((21 to 30).toDF("v"), dir, "ap-winner")
+      })
+    assert(Manifest.snapshots(spark, dir) == Seq("base", "ap-winner", "e1"))
+    assert(Manifest.read(spark, dir).as[Int].collect().sorted.toSeq == (1 to 30))
+  }
+
+  test("race matrix: a MOR UPDATE refuses a racing append") {
+    val dir = tmpDir()
+    Manifest.write(spark.range(0, 20).toDF("id")
+      .repartitionByRange(2, col("id")), dir, "base")
+    val cur = Manifest.head(spark, dir).get
+    val hits = Manifest.readFilesMetaApplyingDeletes(spark, dir, cur.files,
+      Nil).where("id < 5").localCheckpoint()
+    val post = hits.select((col("id") + 100).as("id"))
+    val cdc = post.withColumn(Manifest.CdfTypeCol, lit("update_postimage"))
+    intercept[java.util.ConcurrentModificationException] {
+      Manifest.updateHitsMOR(spark, dir, "upd", hits, post, cdc, Nil,
+        () => Manifest.append(Seq(50L).toDF("id"), dir, "ap-winner"))
+    }
+    assert(Manifest.snapshots(spark, dir) == Seq("base", "ap-winner"))
+    assert(Manifest.read(spark, dir).as[Long].collect().sorted.toSeq ==
+      (0L until 20L) :+ 50L)
+  }
+
+  test("race matrix: a whole-table compact refuses a racing append") {
+    val dir = tmpDir()
+    Manifest.write(spark.range(0, 20).toDF("id").repartition(4), dir, "base")
+    intercept[java.util.ConcurrentModificationException] {
+      Manifest.compact(spark, dir, "packed", Long.MaxValue,
+        beforePublish = () => Manifest.append(Seq(50L).toDF("id"), dir, "ap-winner"))
+    }
+    assert(Manifest.snapshots(spark, dir) == Seq("base", "ap-winner"))
+    assert(Manifest.read(spark, dir).as[Long].collect().sorted.toSeq ==
+      (0L until 20L) :+ 50L)
+  }
+
+  test("race matrix: a where-scoped compact rebases over an append to " +
+      "a disjoint partition") {
+    val dir = tmpDir()
+    Manifest.writePartitioned(spark.range(0, 20).selectExpr("id", "id % 2 AS p")
+      .repartition(4), dir, "base", Seq("p"))
+    var raced = false
+    val res = Manifest.compact(spark, dir, "packed", Long.MaxValue,
+      where = Map("p" -> "0"), beforePublish = () => if (!raced) {
+        raced = true
+        Manifest.appendPartitioned(Seq((100L, 1L)).toDF("id", "p"), dir,
+          "ap-winner", Seq("p"))
+      })
+    assert(res.committed.contains("packed"))
+    assert(Manifest.snapshots(spark, dir) == Seq("base", "ap-winner", "packed"))
+    assert(Manifest.read(spark, dir).select("id").as[Long].collect().sorted
+      .toSeq == (0L until 20L) :+ 100L)
+    // p=0 is one re-packed file; p=1 keeps its files and the winner's
+    val files = Manifest.currentFiles(spark, dir)
+    assert(files.count(_.contains("/p=0/")) == 1)
+    assert(files.exists(_.startsWith("data-ap-winner/p=1/")))
+  }
+
+  test("race matrix: RESTORE and a metadata commit refuse a racing append") {
+    val dir = tmpDir()
+    Manifest.write((1 to 10).toDF("v"), dir, "s1")
+    Manifest.append((11 to 20).toDF("v"), dir, "s2")
+    intercept[java.util.ConcurrentModificationException] {
+      Manifest.restore(spark, dir, "s1",
+        beforePublish = () => Manifest.append((21 to 30).toDF("v"), dir, "ap1"))
+    }
+    assert(Manifest.snapshots(spark, dir) == Seq("s1", "s2", "ap1"))
+    assert(Manifest.read(spark, dir).as[Int].collect().sorted.toSeq == (1 to 30))
+    intercept[java.util.ConcurrentModificationException] {
+      Manifest.commitMetadata(spark, dir, "meta1",
+        beforePublish = () => Manifest.append((31 to 40).toDF("v"), dir, "ap2"))
+    }
+    assert(Manifest.snapshots(spark, dir) == Seq("s1", "s2", "ap1", "ap2"))
+    assert(Manifest.read(spark, dir).as[Int].collect().sorted.toSeq == (1 to 40))
   }
 
   test("duplicate snapshot ids and never-committed reads are refused") {
