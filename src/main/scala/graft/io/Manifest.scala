@@ -198,6 +198,15 @@ object Manifest {
       })
       .sortBy(_._1).map(_._2)
 
+  /** The newest listed seq, -1 for none: one LIST, no manifest opened. */
+  private def listedHeadSeq(fsys: FileSystem, base: Path): Long =
+    listManifests(fsys, base).lastOption.fold(-1L)(st =>
+      st.getPath.getName match { case ManifestName(seq) => seq.toLong })
+
+  /** The seq of a read's head, -1 for an empty table. */
+  private def headSeq(priors: Seq[ManifestData]): Long =
+    priors.lastOption.fold(-1L)(_.seq)
+
   /** Has any manifest been published under `base`? (A dir with one is
     * a table to the catalog.) */
   private[graft] def hasManifest(fsys: FileSystem, base: Path): Boolean =
@@ -1049,17 +1058,24 @@ object Manifest {
     * read: blind overwrites, whole-table compaction, MOR UPDATE,
     * RESTORE, metadata commits and streaming Complete epochs. They read
     * or replace the whole table, so ANY commit since that read — during
-    * the landing or in the publish window — takes their seq and the
-    * CAS refuses with the retryable ConcurrentModificationException:
-    * the caller re-derives against the new head. `expectedSeq` pins a
-    * commit to a head its caller read even earlier.
+    * the landing or in the publish window — refuses them with the
+    * retryable ConcurrentModificationException: the caller re-derives
+    * against the new head. `expectedSeq` pins a commit to a head its
+    * caller read even earlier.
+    *
+    * A landing can take minutes, so its read may be stale: a rebasing
+    * tier whose read is no longer the listed head reads again before
+    * attempt 1, and [[publishManifest]] refuses any stale attempt.
     *
     * Test seam: `beforePublish` runs before each attempt's rename,
     * after the manifest temp file is staged — the window a concurrent
     * writer races into. Returns the committed seq. */
   private def commit(l: Landing, retry: Boolean, beforePublish: () => Unit)(
       derive: Seq[ManifestData] => Body): Long = {
-    var priors = l.priors
+    var priors =
+      if (retry && listedHeadSeq(l.fsys, l.base) > headSeq(l.priors))
+        retained(l.fsys, l.base) // a commit published while this one landed
+      else l.priors
     var tries = 0
     var seq = -1L
     while (seq < 0) {
@@ -1126,32 +1142,19 @@ object Manifest {
   }
 
   /** The commit tail of one [[commit]] attempt: stage the manifest
-    * JSON, run the test seam, publish with the one seq-keyed CAS
-    * rename. Returns the committed seq. */
+    * JSON, run the test seam, check the head, publish with the one
+    * seq-keyed CAS rename. Returns the committed seq. */
   private def publishManifest(l: Landing, priors: Seq[ManifestData],
       b: Body, beforePublish: () => Unit): Long = {
     import l.{base, dir, fsys, snapshot}
-    // expectedSeq turns the rename into a FULL head CAS: the caller
-    // computed its state as of head expectedSeq-1, so ANY intervening
-    // commit (data or DDL) makes the target name taken and the rename
-    // refuse — the caller must re-read and re-derive. Without it the
-    // seq is allocated fresh off the listing (append semantics).
-    //
-    // HEAD-CONSISTENCY guard (round 13): the published state (file
-    // list, delete state, meta) derives from `priors`, but the CAS
-    // target comes from the CALLER's earlier read. If the two disagree
-    // — a commit landed in between, or a readdir racing a concurrent
-    // rename silently skipped an entry — the rename could WIN while
-    // the manifest body is stale, dropping the missed commit's files.
-    // Refuse with the retryable conflict instead.
-    b.expectedSeq.foreach { e =>
-      val h = priors.lastOption.map(_.seq).getOrElse(-1L)
-      if (h != e - 1)
-        throw new java.util.ConcurrentModificationException(
-          s"commit for $dir expected head seq ${e - 1} but listed $h; " +
-            "state must be re-derived")
+    val seq = headSeq(priors) + 1
+    // expectedSeq pins the head the CALLER derived its state from
+    // before this read: any commit since (data or DDL) refuses it
+    b.expectedSeq.filter(_ != seq).foreach { e =>
+      throw new java.util.ConcurrentModificationException(
+        s"commit for $dir expected head seq ${e - 1} but listed " +
+          s"${seq - 1}; state must be re-derived")
     }
-    val seq = b.expectedSeq.getOrElse((priors.map(_.seq) :+ -1L).max + 1)
     // `rewrite: true` marks commits whose NEW files re-serve rows older
     // snapshots already contained (compaction, COW DML) — the analogue
     // of Delta's dataChange=false, which [[readChangesSince]] refuses to
@@ -1171,6 +1174,16 @@ object Manifest {
     val out = fsys.create(tmp, true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
     beforePublish()
+    def seqTaken() = new java.util.ConcurrentModificationException(
+      s"commit_seq $seq for $dir was taken by a concurrent writer; " +
+        s"snapshot $snapshot NOT committed (data-$snapshot left as orphan)")
+    // HEAD CHECK: the rename alone refuses a stale seq only while its
+    // key exists; once vacuum retired it, the commit would publish
+    // BELOW the head — acknowledged, yet never visible
+    if (listedHeadSeq(fsys, base) >= seq) {
+      fsys.delete(tmp, false)
+      throw seqTaken()
+    }
     CommitCoordinator.forScheme(fsys.getUri.getScheme) match {
       case Some(coord) =>
         // RAW-OBJECT-STORE path (no atomic no-overwrite rename): the
@@ -1229,10 +1242,7 @@ object Manifest {
           if (fsys.exists(dest) || !fsys.rename(tmp, dest)) {
             val taken = fsys.exists(dest)
             fsys.delete(tmp, false)
-            if (taken)
-              throw new java.util.ConcurrentModificationException(
-                s"commit_seq $seq for $dir was taken by a concurrent writer; " +
-                  s"snapshot $snapshot NOT committed (data-$snapshot left as orphan)")
+            if (taken) throw seqTaken()
             else
               throw new RuntimeException(
                 s"manifest commit rename failed for $dir @ $snapshot (seq $seq)")
@@ -1559,16 +1569,11 @@ object Manifest {
     * type in the SESSION time zone — the same cast SQL `DELETE … WHERE
     * ts BETWEEN '…' AND '…'` applies. One Catalyst predicate drives both
     * the split and the row filter ([[rangeSplit]]), so prune and
-    * predicate can never disagree. */
-  def deleteRange(spark: SparkSession, dir: String, column: String,
-      lo: String, hi: String, snapshot: String): CowRewrite =
-    deleteRangeImpl(spark, dir, column, lo, hi, snapshot, () => ())
-
-  /** Test seam variant of [[deleteRange]] — `beforePublish` opens the
+    * predicate can never disagree. Test seam: `beforePublish` opens the
     * commit race window (see [[commit]]'s COW rebase tier). */
-  private[graft] def deleteRangeImpl(spark: SparkSession, dir: String,
-      column: String, lo: String, hi: String, snapshot: String,
-      beforePublish: () => Unit): CowRewrite =
+  def deleteRange(spark: SparkSession, dir: String, column: String,
+      lo: String, hi: String, snapshot: String,
+      beforePublish: () => Unit = () => ()): CowRewrite =
     cowRewrite(spark, dir, column, lo, hi, snapshot, (df, inRange) =>
       // NULLs survive: NOT(null BETWEEN ...) is null, which a bare
       // filter would drop — exactly the wrong way to "delete"

@@ -1,7 +1,7 @@
 package graft.io
 
 import java.net.URI
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import scala.jdk.CollectionConverters._
 
@@ -12,16 +12,18 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase
 
 /** A local filesystem under its own scheme that counts `open` calls on
-  * `manifest-<seq>.json` keys: the manifest parses an operation costs.
+  * `manifest-<seq>.json` keys (the manifest parses an operation costs)
+  * and can run a hook inside a commit's landing window: once, when the
+  * committer lists the finished `data-<snapshot>` dir it just landed.
   * Statuses are plain (no POSIX permissions), so Spark's listings never
   * ask RawLocalFileSystem to load permissions for a non-file:// path. */
-class ManifestOpenCountingFS extends RawLocalFileSystem {
-  override def getScheme: String = "mcount"
-  override def getUri: URI = URI.create("mcount:///")
+class ManifestProbeFS extends RawLocalFileSystem {
+  override def getScheme: String = "mprobe"
+  override def getUri: URI = URI.create("mprobe:///")
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     if (f.getName.matches("manifest-\\d+\\.json"))
-      ManifestOpenCountingFS.opens.incrementAndGet()
+      ManifestProbeFS.opens.incrementAndGet()
     super.open(f, bufferSize)
   }
 
@@ -29,15 +31,25 @@ class ManifestOpenCountingFS extends RawLocalFileSystem {
     new FileStatus(s.getLen, s.isDirectory, 1, s.getBlockSize,
       s.getModificationTime, s.getPath)
 
-  override def listStatus(p: Path): Array[FileStatus] =
+  override def listStatus(p: Path): Array[FileStatus] = {
+    ManifestProbeFS.landed.get match {
+      case t @ (snap, hook) if p.getName == s"data-$snap" &&
+          exists(new Path(p, "_SUCCESS")) &&
+          ManifestProbeFS.landed.compareAndSet(t, null) =>
+        hook()
+      case _ =>
+    }
     super.listStatus(p).map(plain)
+  }
 
   override def getFileStatus(f: Path): FileStatus =
     plain(super.getFileStatus(f))
 }
 
-object ManifestOpenCountingFS {
+object ManifestProbeFS {
   val opens = new AtomicLong
+  /** (snapshot, hook): run `hook` once the snapshot's data has landed. */
+  val landed = new AtomicReference[(String, () => Unit)]
 }
 
 class ManifestSpec extends AnyFunSuite {
@@ -46,6 +58,14 @@ class ManifestSpec extends AnyFunSuite {
 
   private def tmpDir() =
     java.nio.file.Files.createTempDirectory("manifest").toString
+
+  /** A fresh table dir on [[ManifestProbeFS]]. */
+  private def probeDir(): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.mprobe.impl", classOf[ManifestProbeFS].getName)
+    conf.set("fs.mprobe.impl.disable.cache", "true")
+    s"mprobe:${tmpDir()}/tbl"
+  }
 
   test("write commits atomically: readers see old or new snapshot, never a mix") {
     val dir = tmpDir()
@@ -296,7 +316,7 @@ class ManifestSpec extends AnyFunSuite {
     // deletes [800,899] — different files on a range-clustered table,
     // so the loser rebases onto the winner's head and BOTH apply
     var raced = false
-    Manifest.deleteRangeImpl(spark, dir, "id", "100", "199", "cow-loser",
+    Manifest.deleteRange(spark, dir, "id", "100", "199", "cow-loser",
       () => {
         if (!raced) {
           raced = true
@@ -316,7 +336,7 @@ class ManifestSpec extends AnyFunSuite {
     Manifest.write(spark.range(0, 100).toDF("id")
       .repartitionByRange(2, col("id")), dir2, "base")
     var raced2 = false
-    Manifest.deleteRangeImpl(spark, dir2, "id", "0", "49", "cow2",
+    Manifest.deleteRange(spark, dir2, "id", "0", "49", "cow2",
       () => {
         if (!raced2) {
           raced2 = true
@@ -333,7 +353,7 @@ class ManifestSpec extends AnyFunSuite {
       .repartitionByRange(10, col("id")), dir, "base")
     var raced = false
     val ex = intercept[java.util.ConcurrentModificationException] {
-      Manifest.deleteRangeImpl(spark, dir, "id", "100", "199", "cow-loser",
+      Manifest.deleteRange(spark, dir, "id", "100", "199", "cow-loser",
         () => {
           if (!raced) {
             raced = true
@@ -352,7 +372,7 @@ class ManifestSpec extends AnyFunSuite {
       .repartitionByRange(10, col("id")), dir2, "base")
     var raced2 = false
     val ex2 = intercept[java.util.ConcurrentModificationException] {
-      Manifest.deleteRangeImpl(spark, dir2, "id", "100", "199", "cow2",
+      Manifest.deleteRange(spark, dir2, "id", "100", "199", "cow2",
         () => {
           if (!raced2) {
             raced2 = true
@@ -437,10 +457,7 @@ class ManifestSpec extends AnyFunSuite {
   }
 
   test("every commit parses each retained manifest once per attempt") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.mcount.impl", classOf[ManifestOpenCountingFS].getName)
-    conf.set("fs.mcount.impl.disable.cache", "true")
-    val dir = s"mcount:${tmpDir()}/tbl"
+    val dir = probeDir()
     Manifest.write(spark.range(0, 100).toDF("id")
       .repartitionByRange(2, col("id")), dir, "s0")
     var n = 0
@@ -450,9 +467,9 @@ class ManifestSpec extends AnyFunSuite {
         Manifest.append(Seq(1000L + n).toDF("id"), dir, s"s$n")
       }
     def opens(op: => Unit): Long = {
-      ManifestOpenCountingFS.opens.set(0)
+      ManifestProbeFS.opens.set(0)
       op
-      ManifestOpenCountingFS.opens.get
+      ManifestProbeFS.opens.get
     }
     // the three ops at depth d, d+1, d+2; each range hits live rows
     def ops(tag: String, lo: Int): Seq[Long] = Seq(
@@ -475,6 +492,59 @@ class ManifestSpec extends AnyFunSuite {
             s"${deep(i)} at depth ${20 + i}")
     }
     assert(Manifest.read(spark, dir).count() == 100 - 20 + n + 2)
+  }
+
+  test("commits and a vacuum during a landing: an append rebases, an " +
+      "overwrite refuses; neither publishes below the head") {
+    val dir = probeDir()
+    Manifest.write((1 to 10).toDF("v"), dir, "s1")
+    // while `snap` lands, two commits publish and vacuum retires every
+    // manifest but the head — the seq the landing's read implies is a
+    // free key again, so only the head check can refuse it
+    def raceLanding(snap: String, a: Int): Unit =
+      ManifestProbeFS.landed.set((snap, () => {
+        Manifest.append((a until a + 10).toDF("v"), dir, s"r$a")
+        Manifest.append((a + 10 until a + 20).toDF("v"), dir, s"r${a + 10}")
+        Manifest.vacuum(spark, dir, keepLast = 1)
+      }))
+    raceLanding("ap", 100)
+    Manifest.append((11 to 20).toDF("v"), dir, "ap")
+    assert(ManifestProbeFS.landed.get == null, "the landing hook never ran")
+    assert(Manifest.history(spark, dir).map(h => h.snapshot -> h.seq) ==
+      Seq("r110" -> 2L, "ap" -> 3L))
+    val afterAppend = (1 to 20) ++ (100 until 120)
+    assert(Manifest.read(spark, dir).as[Int].collect().sorted.toSeq ==
+      afterAppend)
+    // a blind overwrite publishes against its pre-landing head: the
+    // commits that landed meanwhile make it refuse, never vanish
+    raceLanding("ow", 200)
+    intercept[java.util.ConcurrentModificationException] {
+      Manifest.write((900 to 905).toDF("v"), dir, "ow")
+    }
+    assert(Manifest.snapshots(spark, dir) == Seq("r210"))
+    assert(Manifest.read(spark, dir).as[Int].collect().sorted.toSeq ==
+      afterAppend ++ (200 until 220))
+  }
+
+  test("a MOR delete refuses once a rewrite removed a touched file, even " +
+      "before its first attempt") {
+    val dir = tmpDir()
+    Manifest.write(spark.range(0, 20).toDF("id")
+      .repartitionByRange(2, col("id")), dir, "base")
+    // the SQL MOR DELETE's order: positions from the pinned head, then
+    // the commit — here a COW delete rewrites a touched file in between
+    val l = Manifest.landing(spark, dir, "mor", lands = true)
+    val touch = l.priors.last.files
+    val hits = Manifest.readFilesMetaApplyingDeletes(spark, dir, touch, Nil)
+      .where("id < 5").localCheckpoint()
+    Manifest.deleteRange(spark, dir, "id", "0", "2", "cow")
+    val ex = intercept[java.util.ConcurrentModificationException] {
+      Manifest.deleteHitsMOR(spark, l, touch, hits)
+    }
+    assert(ex.getMessage.contains("rewrote or removed"))
+    assert(Manifest.snapshots(spark, dir) == Seq("base", "cow"))
+    assert(Manifest.read(spark, dir).as[Long].collect().sorted.toSeq ==
+      (3L until 20L))
   }
 
   test("the same-JVM rename lock is one entry per table, not per commit") {
