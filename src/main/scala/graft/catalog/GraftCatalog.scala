@@ -136,7 +136,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       val p = identPath(ident)
       val dir = GraftTableMeta.read(fsys, p).flatMap(_.location)
         .getOrElse(p.toString)
-      Manifest.history(spark, dir).exists(_.seq.toString == version)
+      Manifest.listedSeqs(spark, dir).exists(_.toString == version)
     }
     loadTable(ident,
       if (numericSeq) Map("versionasof" -> version)
@@ -292,66 +292,49 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val p = identPath(ident)
     if (!isTable(p)) throw new NoSuchTableException(ident)
-    var tableDir: String = p.toString
-    var tries = 0
-    var done = false
-    // CAS loop (ADVICE r11/r12): on a table WITH commits, the change —
-    // meta payload INCLUDED — is serialized through one metadata
-    // manifest commit under the seq-keyed rename CAS every data commit
-    // uses, so two concurrent ALTERs (or an ALTER racing a write) can
-    // never silently drop a change: the loser's rename refuses and it
-    // re-reads state + head and retries.
-    // `location` is resolved once outside the loop: it names the table
-    // dir itself and is not ALTERable, so it cannot race.
+    // `location` names the table dir itself and is not ALTERable, so it
+    // cannot race
     val locDir = GraftTableMeta.read(fsys, p).flatMap(_.location)
-    while (!done) {
-      val dir = locDir.getOrElse(p.toString)
-      tableDir = dir
-      // ONE listing serves BOTH the head seq and the embedded metadata
-      // (round 13 — closes a real lost-update): two separate listings
-      // let a readdir racing a concurrent rename miss the newest DDL
-      // commit in the SECOND (state) listing only; the ALTER then
-      // computed from stale metadata yet still won the CAS (its head
-      // read WAS current), silently dropping the missed commit's
-      // change. From one listing the payload is always at least as new
-      // as the head the CAS is keyed on: payloads are cumulative, so
-      // missing an INTERMEDIATE manifest is harmless, and a listing
-      // that misses the true head refuses at the seq rename (or
-      // commitMetadata's head-consistency guard) and retries.
-      val hist = Manifest.history(spark, dir)
-      val headSeq = hist.lastOption.map(_.seq)
-      val meta0raw = hist.reverseIterator.flatMap(_.metaB64).nextOption()
+    val dir = locDir.getOrElse(p.toString)
+    val changesSchema = changes.exists {
+      case _: TableChange.AddColumn | _: TableChange.RenameColumn |
+           _: TableChange.DeleteColumn | _: TableChange.UpdateColumnType =>
+        true
+      case _ => false
+    }
+    val reserved = Set(TableCatalog.PROP_LOCATION, TableCatalog.PROP_PROVIDER,
+      TableCatalog.PROP_EXTERNAL, TableCatalog.PROP_OWNER,
+      TableCatalog.PROP_IS_MANAGED_LOCATION)
+    // the changes applied to the table as of retained history `priors`
+    // (empty: the table has no snapshot yet). The base meta is the
+    // newest embedded payload (payloads are cumulative), else the flat
+    // sidecar.
+    def evolve(priors: Seq[Manifest.ManifestData]): GraftTableMeta = {
+      val cur = priors.lastOption
+      val meta0raw = priors.reverseIterator.flatMap(_.metaB64).nextOption()
         .map(b => GraftTableMeta.fromB64(b).copy(location = locDir))
         .orElse(GraftTableMeta.read(fsys, p))
         .getOrElse(GraftTableMeta(None, Nil, None, Map.empty))
-      val changesSchema = changes.exists {
-        case _: TableChange.AddColumn | _: TableChange.RenameColumn |
-             _: TableChange.DeleteColumn | _: TableChange.UpdateColumnType =>
-          true
-        case _ => false
-      }
       // the pre-change effective schema: declared, else recovered from
-      // the current snapshot (an ALTER on a recovery-schema table
-      // freezes the recovered schema as the declared base contract,
-      // retroactive to every retained snapshot — entry at seq 0)
+      // `cur` (an ALTER on a recovery-schema table freezes the
+      // recovered schema as the declared base contract, retroactive to
+      // every retained snapshot — entry at seq 0)
       val meta0 =
         if (!changesSchema) meta0raw
         else {
           val pre = meta0raw.schema.getOrElse {
-            require(Manifest.head(spark, dir).nonEmpty,
-              s"graft catalog: ${ident} has neither a declared schema nor " +
-                "a committed snapshot to evolve")
-            StructType(Manifest.read(spark, dir).schema
-              .map(_.copy(nullable = true)))
+            val c0 = cur.filter(_.files.nonEmpty).getOrElse(
+              throw new IllegalArgumentException(
+                s"graft catalog: ${ident} has neither a declared schema " +
+                  "nor a committed snapshot to evolve"))
+            StructType(Manifest.readFilesApplyingDeletes(spark, dir,
+              c0.files, c0.deleteFiles).schema.map(_.copy(nullable = true)))
           }
           meta0raw.copy(schema = Some(pre),
             schemaHistory =
               if (meta0raw.schemaHistory.nonEmpty) meta0raw.schemaHistory
               else Seq(0L -> pre))
         }
-      val reserved = Set(TableCatalog.PROP_LOCATION, TableCatalog.PROP_PROVIDER,
-        TableCatalog.PROP_EXTERNAL, TableCatalog.PROP_OWNER,
-        TableCatalog.PROP_IS_MANAGED_LOCATION)
       val meta1 = changes.foldLeft(meta0) { (m, ch) =>
         ch match {
           case add: TableChange.AddColumn =>
@@ -507,11 +490,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                 require(!m.properties.contains(key),
                   s"graft catalog: constraint '${c.name}' already exists")
                 // validate EXISTING rows (SQL semantics: TRUE and
-                // UNKNOWN pass, FALSE violates); the scan reads through
-                // the full resolution path (declared schema, mapping,
-                // MOR state)
-                if (Manifest.head(spark, dir).nonEmpty) {
-                  val bad = spark.read.format("graft").load(dir)
+                // UNKNOWN pass, FALSE violates); the scan reads the
+                // attempt's head under the declared schema (mapping and
+                // MOR deletes applied)
+                cur.filter(_.files.nonEmpty).foreach { c0 =>
+                  val bad = Manifest.readFilesApplyingDeletes(spark, dir,
+                    c0.files, c0.deleteFiles, meta0.schema.map(s =>
+                      StructType(s.map(_.copy(nullable = true)))))
                     .where(s"($sql) IS FALSE").limit(1).count()
                   require(bad == 0,
                     s"graft catalog: cannot add CHECK constraint " +
@@ -554,52 +539,39 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                 "COLUMN TYPE, SET/UNSET TBLPROPERTIES)")
         }
       }
-      if (headSeq.isEmpty) {
-        // no snapshot exists, so there is no seq space to CAS on and no
-        // per-version schema to distinguish: the base entry is replaced
-        val meta2 =
-          if (changesSchema)
-            meta1.copy(schemaHistory = Seq(0L -> meta1.schema.get))
-          else meta1
-        writeSidecars(p, meta0raw.location, meta2)
-        done = true
-      } else {
-        val snap = s"alter-${System.currentTimeMillis()}-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        try {
-          // the commit point: a same-files metadata commit CARRYING the
-          // new meta (Delta's metaData-in-a-commit), CAS'd on the head
-          // seq this loop's state read saw. ADVICE r12: writing the
-          // sidecar AFTER a bare commit lost updates — two ALTERs could
-          // both compute from the same pre-state and the later flat
-          // write dropped the other's change. Embedding the payload in
-          // the seq-keyed rename makes state+commit ONE atomic publish:
-          // any intervening commit (DDL or data) takes expectedSeq and
-          // this rename refuses, forcing a re-read + re-derive.
-          val expected = headSeq.get + 1
-          val meta2 =
-            if (changesSchema)
-              meta1.copy(schemaHistory =
-                meta0.schemaHistory :+ (expected -> meta1.schema.get))
-            else meta1
-          Manifest.commitMetadata(spark, dir, snap,
-            metaB64 = Some(GraftTableMeta.toB64(meta2.copy(location = None))),
-            expectedSeq = Some(expected))
-          // flat sidecars are now a pure CACHE (read() prefers the
-          // embedded payload) — losing or stale-overwriting them is
-          // harmless
-          writeSidecars(p, meta0raw.location, meta2)
-          done = true
-        } catch {
-          case _: java.util.ConcurrentModificationException
-              if tries < Manifest.MaxAppendCommitRetries =>
-            tries += 1 // lost the seq CAS: re-read sidecar + head, retry
-        }
+      if (!changesSchema) meta1
+      else meta1.copy(schemaHistory = cur match {
+        // no snapshot: no per-version schema to distinguish, so the
+        // base entry is replaced
+        case None => Seq(0L -> meta1.schema.get)
+        // keyed by the seq the metadata commit publishes under
+        case Some(c0) => meta0.schemaHistory :+ (c0.seq + 1 -> meta1.schema.get)
+      })
+    }
+    if (Manifest.listedSeqs(spark, dir).isEmpty)
+      // no snapshot, so no seq space to commit under: the flat sidecar
+      // is the whole change
+      writeSidecars(p, locDir, evolve(Nil))
+    else {
+      // the commit point: a same-files metadata commit CARRYING the new
+      // meta (Delta's metaData-in-a-commit), derived from each commit
+      // attempt's read — base meta, CHECK validation over its head,
+      // schema-history key from its seq. A lost CAS re-derives, so two
+      // racing ALTERs (or an ALTER racing a write) can never silently
+      // drop a change.
+      var won: GraftTableMeta = null
+      Manifest.commitMetadata(spark, dir, s"alter-${System.currentTimeMillis()}-" +
+          java.util.UUID.randomUUID().toString.take(8)) { priors =>
+        won = evolve(priors)
+        Some(GraftTableMeta.toB64(won.copy(location = None)))
       }
+      // flat sidecars are a pure CACHE (read() prefers the embedded
+      // payload) — losing or stale-overwriting them is harmless
+      writeSidecars(p, locDir, won)
     }
     // resolved relations are snapshot-AND-schema pinned: invalidate so
     // the next statement sees the evolved contract
-    spark.catalog.refreshByPath(tableDir)
+    spark.catalog.refreshByPath(dir)
     loadTable(ident)
   }
 

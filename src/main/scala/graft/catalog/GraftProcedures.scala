@@ -258,24 +258,17 @@ private[catalog] object GraftProcedures {
         require(bySnap.isDefined != byVer.isDefined,
           "graft catalog: CALL restore needs exactly one of " +
             "snapshot => '<id>' or version => <commit_seq>")
-        val target = bySnap.getOrElse {
-          val v = byVer.get
-          Manifest.history(spark, dir).find(_.seq == v).map(_.snapshot)
-            .getOrElse(throw new IllegalArgumentException(
-              s"graft catalog: no retained commit_seq $v under $dir"))
-        }
         // RESTORE rolls back METADATA with the data (Delta semantics):
         // the rolled-back schema rides IN the restore commit as its
         // embedded meta payload, keyed by that commit's own seq — one
         // atomic publish, so a concurrent ALTER either precedes the
         // restore (and is rolled back with it) or makes its CAS refuse
         val tname = args.getUTF8String(0).toString
-        val tSeq = Manifest.history(spark, dir)
-          .find(_.snapshot == target).map(_.seq)
         var restoredMeta: Option[GraftTableMeta] = None
-        val newSnap = Manifest.restore(spark, dir, target,
-          metaFor = newSeq => tSeq.flatMap { ts =>
-            restoredMeta = cat.restoredMetaFor(tname, ts, newSeq)
+        val (target, newSnap) = Manifest.restoreTo(spark, dir,
+          bySnap.toLeft(byVer.get),
+          metaFor = (targetSeq, newSeq) => {
+            restoredMeta = cat.restoredMetaFor(tname, targetSeq, newSeq)
             restoredMeta.map(m =>
               GraftTableMeta.toB64(m.copy(location = None)))
           })

@@ -126,15 +126,13 @@ class GraftStreamingWrite(dir: String, declared: StructType,
     val files = messages.collect {
       case m: GraftStreamFileCommit => m.files
     }.flatten.toSeq.sorted
-    // replay of an already-committed epoch (restart, retry): no-op
-    if (Manifest.isCommitted(spark, dir, snap)) {
+    // replay of an already-committed epoch (restart, retry) is a no-op;
+    // otherwise a crashed previous attempt may have promoted files but
+    // not committed, and the snapshot id is free again once they're gone
+    if (!Manifest.prepareReplay(spark, dir, snap) || files.isEmpty) {
       fsys.delete(epochDir, true)
       return
     }
-    if (files.isEmpty) { fsys.delete(epochDir, true); return }
-    // a crashed previous attempt may have promoted files but not
-    // committed: the snapshot id is free again only once they're gone
-    Manifest.abandonOrphan(spark, dir, snap)
     val dataDir = new Path(s"${dir.stripSuffix("/")}/data-$snap")
     files.foreach { rel =>
       val from = new Path(epochDir, rel)

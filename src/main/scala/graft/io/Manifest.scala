@@ -185,23 +185,29 @@ object Manifest {
 
   private val ManifestName = """manifest-(\d+)\.json""".r
 
-  /** THE manifest listing: the `manifest-<seq>.json` keys under `base`,
-    * oldest → newest by the seq in the key name (the commit protocol
+  /** THE manifest listing: the `manifest-<seq>.json` keys under `base`
+    * with the seq each key names, oldest → newest (the commit protocol
     * keys every manifest by its seq). One LIST of KB-sized keys, zero
     * content reads. */
-  private def listManifests(fsys: FileSystem, base: Path): Seq[FileStatus] =
+  private def listManifests(fsys: FileSystem, base: Path): Seq[(Long, FileStatus)] =
     if (!fsys.exists(base)) Nil
     else fsys.listStatus(base).toSeq
       .flatMap(st => st.getPath.getName match {
         case ManifestName(seq) => seq.toLongOption.map(_ -> st)
         case _ => None
       })
-      .sortBy(_._1).map(_._2)
+      .sortBy(_._1)
+
+  /** The listed commit seqs, oldest → newest: one LIST, no manifest
+    * opened. */
+  private[graft] def listedSeqs(spark: SparkSession, dir: String): Seq[Long] = {
+    val (fsys, base) = fs(spark, dir)
+    listManifests(fsys, base).map(_._1)
+  }
 
   /** The newest listed seq, -1 for none: one LIST, no manifest opened. */
   private def listedHeadSeq(fsys: FileSystem, base: Path): Long =
-    listManifests(fsys, base).lastOption.fold(-1L)(st =>
-      st.getPath.getName match { case ManifestName(seq) => seq.toLong })
+    listManifests(fsys, base).lastOption.fold(-1L)(_._1)
 
   /** The seq of a read's head, -1 for an empty table. */
   private def headSeq(priors: Seq[ManifestData]): Long =
@@ -214,7 +220,7 @@ object Manifest {
 
   /** All retained manifests, oldest → newest commit order. */
   private def retained(fsys: FileSystem, base: Path): Seq[ManifestData] =
-    listManifests(fsys, base).flatMap(st => parse(fsys, st.getPath))
+    listManifests(fsys, base).flatMap(m => parse(fsys, m._2.getPath))
 
   /** The CURRENT snapshot's manifest — the newest parseable one — or
     * None if the table never committed: one LIST and, normally, one
@@ -222,7 +228,7 @@ object Manifest {
   private[graft] def head(spark: SparkSession, dir: String): Option[ManifestData] = {
     val (fsys, base) = fs(spark, dir)
     listManifests(fsys, base).reverseIterator
-      .flatMap(st => parse(fsys, st.getPath)).nextOption()
+      .flatMap(m => parse(fsys, m._2.getPath)).nextOption()
   }
 
   /** `head`, or the "no committed snapshot" refusal. */
@@ -623,29 +629,21 @@ object Manifest {
     writeImpl(df, dir, snapshot, beforePublish, carryForward = true,
       partitionCols = partitionCols)
 
-  /** Is `snapshot` a retained, committed snapshot of this table? */
-  def isCommitted(spark: SparkSession, dir: String, snapshot: String): Boolean = {
+  /** The replay dedupe of an at-least-once writer (a streaming epoch or
+    * foreachBatch) that commits under a deterministic snapshot id, from
+    * ONE `retained()` read: false when `snapshot` is already committed
+    * (the replay is a no-op); otherwise true, after deleting the
+    * `data-`/`deletes-`/`cdc-<snapshot>` dirs a crashed attempt landed
+    * inside the land→publish window, so the SAME id can land again.
+    * Never touches a committed snapshot's data. */
+  def prepareReplay(spark: SparkSession, dir: String, snapshot: String): Boolean = {
     val (fsys, base) = fs(spark, dir)
-    retained(fsys, base).exists(_.snapshot == snapshot)
-  }
-
-  /** Delete the landed-but-never-committed `data-<snapshot>` dir of a
-    * crashed attempt so the SAME snapshot id can be retried — the replay
-    * path of an at-least-once writer (a streaming foreachBatch) that
-    * died inside the land→publish window. Refuses to touch a COMMITTED
-    * snapshot's data. Returns true iff an orphan was removed. */
-  def abandonOrphan(spark: SparkSession, dir: String, snapshot: String): Boolean = {
-    val (fsys, base) = fs(spark, dir)
-    if (retained(fsys, base).exists(_.snapshot == snapshot)) false
-    else {
-      val d = new Path(base, s"data-$snapshot")
-      val dd = new Path(base, s"deletes-$snapshot")
-      val dc = new Path(base, s"cdc-$snapshot")
-      val gotData = fsys.exists(d) && fsys.delete(d, true)
-      val gotDels = fsys.exists(dd) && fsys.delete(dd, true)
-      if (fsys.exists(dc)) fsys.delete(dc, true)
-      gotData || gotDels
+    val fresh = !retained(fsys, base).exists(_.snapshot == snapshot)
+    if (fresh) Seq("data", "deletes", "cdc").foreach { d =>
+      val p = new Path(base, s"$d-$snapshot")
+      if (fsys.exists(p)) fsys.delete(p, true)
     }
+    fresh
   }
 
   /** Land a CHANGE-DATA frame (table columns + `_change_type`) under
@@ -857,14 +855,7 @@ object Manifest {
       cowBase: Option[ManifestData] = None,
       cdc: Option[DataFrame] = None,
       cdcNoChange: Boolean = false,
-      expectedSeq: Option[Long] = None,
       landingBytes: Option[Long] = None): Unit = {
-    // expectedSeq pins a single-attempt whole-state commit (compaction)
-    // to the head its state was computed from — see publishManifest's
-    // head-consistency guard. The retrying tiers re-derive state per
-    // attempt, so pinning them would just spin.
-    require(expectedSeq.isEmpty || (cowBase.isEmpty && !carryForward),
-      "expectedSeq is for single-attempt commits only")
     val spark = df.sparkSession
     val l = landing(spark, dir, snapshot, lands = true)
     val dataDir = new Path(l.base, s"data-$snapshot")
@@ -892,43 +883,47 @@ object Manifest {
     // the rebase tier is keyed by the DECLARED base, not the rewrite
     // flag: a zero-touch MERGE (inserts only, rewrite=false) rebases
     // like an append — its touched set is empty, so the conflict check
-    // passes trivially and the carry re-derives from the new head
+    // passes trivially and the carry re-derives from the new head. A
+    // base without a carry list (whole-table compaction) is one attempt
+    // pinned to that base.
     val cowRebase = cowBase.isDefined && carriedExplicit.isDefined
     commit(l, retry = plainAppend || cowRebase, beforePublish) { priors =>
       val head = priors.lastOption
-      val carried: Seq[String] =
-        if (cowRebase) {
-          val bse = cowBase.get
-          val keep = carriedExplicit.get
-          val h = head.getOrElse(bse)
-          if (h.seq == bse.seq && h.snapshot == bse.snapshot) keep
-          else {
-            // head moved since the rewrite was computed: file-level
-            // conflict check + rebase against THIS attempt's read
-            val touched = bse.files.toSet -- keep
-            if (h.deleteFiles.sorted != bse.deleteFiles.sorted)
-              throw new TrueConflictException(
-                s"commit '$snapshot' for $dir lost its race to a commit " +
-                  "that changed merge-on-read delete state; the rewrite " +
-                  "was computed without it - re-run the operation")
-            val gone = touched.filterNot(h.files.toSet)
-            if (gone.nonEmpty)
-              throw new TrueConflictException(
-                s"commit '$snapshot' for $dir lost its race to a commit " +
-                  s"that rewrote or removed file(s) this rewrite also " +
-                  s"touched (${gone.take(3).mkString(", ")}) - re-run " +
-                  "the operation")
-            h.files.filterNot(touched)
-          }
-        } else carriedExplicit.getOrElse(
+      val moved = cowBase.filterNot(b =>
+        head.forall(h => h.seq == b.seq && h.snapshot == b.snapshot))
+      val carried: Seq[String] = moved match {
+        case Some(bse) if !cowRebase =>
+          throw new java.util.ConcurrentModificationException(
+            s"commit for $dir expected head seq ${bse.seq} but listed " +
+              s"${headSeq(priors)}; state must be re-derived")
+        case Some(bse) =>
+          // head moved since the rewrite was computed: file-level
+          // conflict check + rebase against THIS attempt's read
+          val h = head.get
+          val touched = bse.files.toSet -- carriedExplicit.get
+          if (h.deleteFiles.sorted != bse.deleteFiles.sorted)
+            throw new TrueConflictException(
+              s"commit '$snapshot' for $dir lost its race to a commit " +
+                "that changed merge-on-read delete state; the rewrite " +
+                "was computed without it - re-run the operation")
+          val gone = touched.filterNot(h.files.toSet)
+          if (gone.nonEmpty)
+            throw new TrueConflictException(
+              s"commit '$snapshot' for $dir lost its race to a commit " +
+                s"that rewrote or removed file(s) this rewrite also " +
+                s"touched (${gone.take(3).mkString(", ")}) - re-run " +
+                "the operation")
+          h.files.filterNot(touched)
+        case None => carriedExplicit.getOrElse(
           if (carryForward) head.map(_.files).getOrElse(Nil) else Nil)
+      }
       // delete files: a rewrite (COW DML, compact, overwrite) resets MOR
       // state for the files it replaces; append carries it forward —
       // appended files can't be targeted by pre-existing deletes and the
       // carried data files keep theirs
       val deletes = deletesExplicit.getOrElse(
         if (carryForward) head.map(_.deleteFiles).getOrElse(Nil) else Nil)
-      Body(carried ++ files, deletes, rewrite, expectedSeq = expectedSeq,
+      Body(carried ++ files, deletes, rewrite,
         cdcFiles = cdcLanded, cdcRecorded = cdc.isDefined || cdcNoChange)
     }
   }
@@ -984,7 +979,7 @@ object Manifest {
 
   /** Bounded retries for the rebase tiers — a pathological commit
     * storm must eventually surface instead of spinning. */
-  private[graft] val MaxAppendCommitRetries = 5
+  private val MaxAppendCommitRetries = 5
 
   /** A commit's preamble state: the table and snapshot id it commits,
     * and the ONE pre-landing `retained()` read its first attempt
@@ -1013,8 +1008,7 @@ object Manifest {
     * read (see [[commit]]). */
   private final case class Body(files: Seq[String], deleteFiles: Seq[String],
       rewrite: Boolean = false, metaB64: Option[String] = None,
-      expectedSeq: Option[Long] = None, cdcFiles: Seq[String] = Nil,
-      cdcRecorded: Boolean = false)
+      cdcFiles: Seq[String] = Nil, cdcRecorded: Boolean = false)
 
   /** THE commit loop — Delta's optimistic transaction: read the
     * snapshot, derive the actions, check conflicts, CAS. Each attempt
@@ -1050,18 +1044,28 @@ object Manifest {
     *    delete state plus this commit's delete files — as long as every
     *    TOUCHED file survives (a winner that rewrote or removed one
     *    invalidates the positions: a true conflict).
+    *  - METADATA COMMITS (ALTER TABLE): `derive` computes the whole
+    *    change — base meta, schema history, CHECK validation — from the
+    *    attempt's read, so every attempt is a full re-derivation.
     *
     * A rebased commit's predicate does not re-judge a concurrent
-    * append's rows (WriteSerializable, Delta's default).
+    * append's rows (WriteSerializable, Delta's default). Its data was
+    * derived under the landing read's metadata, though — CHECK
+    * constraints gated, schema mapped — so an attempt whose read holds
+    * a DDL commit (a manifest carrying `meta_b64`) newer than the
+    * landing read is a true conflict: Delta's metadata-changed
+    * conflict. Only `rederivesMeta` commits (metadata commits) are
+    * exempt.
     *
     * Without `retry` the commit is ONE attempt against the landing's
     * read: blind overwrites, whole-table compaction, MOR UPDATE,
-    * RESTORE, metadata commits and streaming Complete epochs. They read
-    * or replace the whole table, so ANY commit since that read — during
-    * the landing or in the publish window — refuses them with the
-    * retryable ConcurrentModificationException: the caller re-derives
-    * against the new head. `expectedSeq` pins a commit to a head its
-    * caller read even earlier.
+    * RESTORE and streaming Complete epochs. They read or replace the
+    * whole table, so ANY commit since that read — during the landing or
+    * in the publish window — refuses them with the retryable
+    * ConcurrentModificationException: the caller re-derives against the
+    * new head. A whole-table compaction read its head even before the
+    * landing; its `derive` refuses unless the attempt's head is still
+    * that base.
     *
     * A landing can take minutes, so its read may be stale: a rebasing
     * tier whose read is no longer the listed head reads again before
@@ -1070,7 +1074,8 @@ object Manifest {
     * Test seam: `beforePublish` runs before each attempt's rename,
     * after the manifest temp file is staged — the window a concurrent
     * writer races into. Returns the committed seq. */
-  private def commit(l: Landing, retry: Boolean, beforePublish: () => Unit)(
+  private def commit(l: Landing, retry: Boolean, beforePublish: () => Unit,
+      rederivesMeta: Boolean = false)(
       derive: Seq[ManifestData] => Body): Long = {
     var priors =
       if (retry && listedHeadSeq(l.fsys, l.base) > headSeq(l.priors))
@@ -1080,6 +1085,15 @@ object Manifest {
     var seq = -1L
     while (seq < 0) {
       requireFresh(priors, l.snapshot, l.dir)
+      if (!rederivesMeta)
+        priors.find(m => m.seq > headSeq(l.priors) && m.metaB64.isDefined)
+          .foreach { m =>
+            throw new TrueConflictException(
+              s"commit '${l.snapshot}' for ${l.dir} lost its race to " +
+                s"metadata commit '${m.snapshot}' (seq ${m.seq}); its " +
+                "data was derived under the table metadata before it - " +
+                "re-run the operation")
+          }
       try seq = publishManifest(l, priors, derive(priors), beforePublish)
       catch {
         case cme: java.util.ConcurrentModificationException
@@ -1094,26 +1108,24 @@ object Manifest {
 
   /** METADATA-ONLY commit: publish a new manifest that lists the head's
     * files and delete state BY REFERENCE — zero data movement, one KB
-    * write. This is the ALTER TABLE serialization point: the seq-keyed
-    * CAS rename makes concurrent schema changes (or a schema change
-    * racing a write) collide loudly instead of silently interleaving,
-    * and the returned seq keys the sidecar's schema-history entry (the
-    * graft analogue of Delta's metaData action in its own commit). Not
-    * flagged `rewrite`: the file set is unchanged, so streams and
-    * incremental readers serve an empty delta and keep going. ONE
-    * attempt — the caller owns the retry (it must re-derive the change
-    * from the new head). */
+    * write. This is the ALTER TABLE serialization point: `metaFor`
+    * derives the embedded metadata payload (Delta's metaData action in
+    * its own commit) from each attempt's retained read, and the commit
+    * loop re-derives it on a lost CAS, so concurrent schema changes (or
+    * a schema change racing a write) serialize instead of silently
+    * interleaving. The payload's schema-history entry is keyed by the
+    * seq it publishes under: the read's head seq + 1. Not flagged
+    * `rewrite`: the file set is unchanged, so streams and incremental
+    * readers serve an empty delta and keep going. Returns the committed
+    * seq. */
   private[graft] def commitMetadata(spark: SparkSession, dir: String,
-      snapshot: String, metaB64: Option[String] = None,
-      expectedSeq: Option[Long] = None,
-      beforePublish: () => Unit = () => ()): Long = {
-    val l = landing(spark, dir, snapshot)
-    val head = headOrThrow(l.priors.lastOption, dir)
-    commit(l, retry = false, beforePublish) { _ =>
-      Body(head.files, head.deleteFiles, metaB64 = metaB64,
-        expectedSeq = expectedSeq)
+      snapshot: String, beforePublish: () => Unit = () => ())(
+      metaFor: Seq[ManifestData] => Option[String]): Long =
+    commit(landing(spark, dir, snapshot), retry = true, beforePublish,
+        rederivesMeta = true) { priors =>
+      val head = headOrThrow(priors.lastOption, dir)
+      Body(head.files, head.deleteFiles, metaB64 = metaFor(priors))
     }
-  }
 
   /** The newest DDL commit's embedded metadata payload, scanning
     * manifests newest-first by filename seq and stopping at the first
@@ -1134,7 +1146,7 @@ object Manifest {
   private[graft] def newestEmbeddedMetaB64(fsys: FileSystem,
       base: Path): Option[String] = {
     if (metaB64Cache.size > 65536) metaB64Cache.clear()
-    listManifests(fsys, base).reverseIterator.flatMap { st =>
+    listManifests(fsys, base).reverseIterator.flatMap { case (_, st) =>
       val key = s"${st.getPath}#${st.getLen}#${st.getModificationTime}"
       metaB64Cache.computeIfAbsent(key,
         _ => parse(fsys, st.getPath).flatMap(_.metaB64))
@@ -1148,13 +1160,6 @@ object Manifest {
       b: Body, beforePublish: () => Unit): Long = {
     import l.{base, dir, fsys, snapshot}
     val seq = headSeq(priors) + 1
-    // expectedSeq pins the head the CALLER derived its state from
-    // before this read: any commit since (data or DDL) refuses it
-    b.expectedSeq.filter(_ != seq).foreach { e =>
-      throw new java.util.ConcurrentModificationException(
-        s"commit for $dir expected head seq ${e - 1} but listed " +
-          s"${seq - 1}; state must be re-derived")
-    }
     // `rewrite: true` marks commits whose NEW files re-serve rows older
     // snapshots already contained (compaction, COW DML) — the analogue
     // of Delta's dataChange=false, which [[readChangesSince]] refuses to
@@ -1688,15 +1693,12 @@ object Manifest {
       case (true, true) => df.repartitionByRange(n, ordering: _*)
         .sortWithinPartitions(ordering: _*)
     }
-    if (scoped)
-      writeImpl(laidOut, dir, snapshot, beforePublish,
-        carriedExplicit = Some(keep), partitionCols = partCols,
-        deletesExplicit = Some(cur.deleteFiles), rewrite = true,
-        cowBase = Some(cur), cdcNoChange = true)
-    else
-      writeImpl(laidOut, dir, snapshot, beforePublish,
-        partitionCols = partCols, rewrite = true, cdcNoChange = true,
-        expectedSeq = Some(cur.seq + 1))
+    // a scoped rewrite declares its carry and rebases; a whole-table
+    // one carries nothing and is pinned to `cur`
+    writeImpl(laidOut, dir, snapshot, beforePublish,
+      carriedExplicit = Option.when(scoped)(keep), partitionCols = partCols,
+      deletesExplicit = Option.when(scoped)(cur.deleteFiles), rewrite = true,
+      cowBase = Some(cur), cdcNoChange = true)
     CowRewrite(touch, keep, Some(snapshot))
   }
 
@@ -1714,28 +1716,40 @@ object Manifest {
     * re-made against the new head. Restoring the current head is a
     * no-op (returns None). Returns the new snapshot id. */
   def restore(spark: SparkSession, dir: String, snapshot: String,
-      metaFor: Long => Option[String] = _ => None,
-      beforePublish: () => Unit = () => ()): Option[String] = {
+      beforePublish: () => Unit = () => ()): Option[String] =
+    restoreTo(spark, dir, Left(snapshot), beforePublish = beforePublish)._2
+
+  /** [[restore]] to `target` — a snapshot id (Left) or a commit seq
+    * (Right) — resolved from the commit's one landing read. RESTORE
+    * rolls METADATA back with the data: `metaFor(targetSeq, newSeq)`
+    * gives the payload (schema history rewound to the target, keyed by
+    * THIS commit's seq) that rides in the restore commit itself, and
+    * the single attempt pins the head, so the rolled-back meta can
+    * never publish against a state a concurrent commit has already
+    * moved. Returns the target's snapshot id and the new snapshot id
+    * (None for a no-op). */
+  private[graft] def restoreTo(spark: SparkSession, dir: String,
+      target: Either[String, Long],
+      metaFor: (Long, Long) => Option[String] = (_, _) => None,
+      beforePublish: () => Unit = () => ()): (String, Option[String]) = {
     val newSnap = s"restore-${System.currentTimeMillis()}-" +
       java.util.UUID.randomUUID().toString.take(8)
     val l = landing(spark, dir, newSnap)
     val all = l.priors
-    val target = all.find(_.snapshot == snapshot).getOrElse(
-      throw new IllegalArgumentException(
-        s"no retained snapshot '$snapshot' under $dir " +
-          s"(retained: ${all.map(_.snapshot).mkString(", ")})"))
-    if (all.last.snapshot == snapshot) return None
-    // RESTORE rolls METADATA back with the data: the caller's payload
-    // (schema history rewound to the target, keyed by THIS commit's
-    // seq) rides in the restore commit itself, and the single attempt
-    // pins the head so the rolled-back meta can never publish against a
-    // state a concurrent commit has already moved (the documented
-    // loud-throw)
+    val t = target.fold(
+      snapshot => all.find(_.snapshot == snapshot).getOrElse(
+        throw new IllegalArgumentException(
+          s"no retained snapshot '$snapshot' under $dir " +
+            s"(retained: ${all.map(_.snapshot).mkString(", ")})")),
+      seq => all.find(_.seq == seq).getOrElse(
+        throw new IllegalArgumentException(
+          s"graft catalog: no retained commit_seq $seq under $dir")))
+    if (all.last.seq == t.seq) return (t.snapshot, None)
     commit(l, retry = false, beforePublish) { priors =>
-      Body(target.files, target.deleteFiles, rewrite = true,
-        metaB64 = metaFor(priors.last.seq + 1))
+      Body(t.files, t.deleteFiles, rewrite = true,
+        metaB64 = metaFor(t.seq, priors.last.seq + 1))
     }
-    Some(newSnap)
+    (t.snapshot, Some(newSnap))
   }
 
   /** Retention: keep the `keepLast` newest retained manifests (the

@@ -29,11 +29,12 @@ import graft.io.Manifest
  *    re-packed rows (or skipping deletions) is how streams corrupt
  *    downstream state.
  *  - **Sink** ([[GraftSink]]): each micro-batch lands as ONE manifest
- *    commit named `stream-q<queryId8>-b<batchId>` — `isCommitted`
- *    dedupe plus orphan-abandon turn the engine's at-least-once batch
- *    delivery into EXACTLY-ONCE table state (the same protocol
- *    `streaming/LandIngest` proves), and the append-commit rebase
- *    means a concurrent maintenance job cannot abort the stream.
+ *    commit named `stream-q<queryId8>-b<batchId>` — the
+ *    `prepareReplay` dedupe (skip committed, remove orphans) turns the
+ *    engine's at-least-once batch delivery into EXACTLY-ONCE table
+ *    state (the same protocol `streaming/LandIngest` proves), and the
+ *    append-commit rebase means a concurrent maintenance job cannot
+ *    abort the stream.
  *    The dedupe key is scoped PER QUERY (the streaming query id, which
  *    is stable across restarts of the same checkpoint but fresh for a
  *    re-baselined or second query) — Delta's sink keys its transaction
@@ -516,8 +517,7 @@ class GraftSink(spark: SparkSession, dir: String,
     // exactly-once out of at-least-once delivery: a replayed batch that
     // already committed is a no-op; a crashed attempt's orphan data dir
     // is removed so the same snapshot id can land again
-    if (Manifest.isCommitted(spark, dir, snap)) return
-    Manifest.abandonOrphan(spark, dir, snap)
+    if (!Manifest.prepareReplay(spark, dir, snap)) return
     // re-wrap the incremental batch as a PLAIN frame before running our
     // own write action on it (ForeachBatchSink's own move)
     val batch = Bridge.internalFrame(data.sparkSession,

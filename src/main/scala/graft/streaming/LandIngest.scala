@@ -84,10 +84,10 @@ object LandIngest {
    * EXACTLY-ONCE promotion out of at-least-once `foreachBatch`, by
    * construction over the commit protocol:
    *  - a replayed batchId whose snapshot is COMMITTED is skipped
-   *    ([[graft.io.Manifest.isCommitted]] — the dedupe);
+   *    ([[graft.io.Manifest.prepareReplay]] — the dedupe);
    *  - a replay after a crash INSIDE the land→publish window (curated
    *    data landed, manifest never renamed) finds the uncommitted orphan
-   *    data dir, removes it ([[graft.io.Manifest.abandonOrphan]]), and
+   *    data dir, removes it (the same `prepareReplay` read), and
    *    re-lands + commits — no duplicate, no loss, because the orphan
    *    was never part of any manifest's file list;
    *  - the manifest rename itself is the single commit point, so there
@@ -107,7 +107,7 @@ object LandIngest {
     * warning, README.md:655-657). The compaction is an ordinary
     * manifest commit: readers resolve the pre- or post-compaction
     * snapshot, never a half state, and the SAME exactly-once guards as
-    * the batch commits (isCommitted dedupe + orphan abandon) make a
+    * the batch commits (the `prepareReplay` dedupe) make a
     * replayed maintenance batch idempotent. The commit is one
     * [[graft.io.Manifest.compact]] call in the drain's `partitionCols`
     * layout: a partitioned table keeps its hive tree (one file per
@@ -154,8 +154,7 @@ object LandIngest {
             throw new IllegalStateException(
               s"batch $batchId failed validation: $n rows < $minRows (reference gate)")
           val snapshot = s"batch-$batchId"
-          if (n > 0 && !Manifest.isCommitted(spark, curatedDir, snapshot)) {
-            Manifest.abandonOrphan(spark, curatedDir, snapshot)
+          if (n > 0 && Manifest.prepareReplay(spark, curatedDir, snapshot)) {
             // partitioned cadence: each micro-batch appends its own
             // `col=value/` tree, so the curated table stays
             // partition-prunable across the whole streaming history
@@ -175,8 +174,7 @@ object LandIngest {
               val small = sizes.count(_ < p.smallFileBytes)
               if (files.size > p.maxFiles || small > p.maxSmallFiles) {
                 val snap = s"maint-$batchId"
-                if (!Manifest.isCommitted(spark, curatedDir, snap)) {
-                  Manifest.abandonOrphan(spark, curatedDir, snap)
+                if (Manifest.prepareReplay(spark, curatedDir, snap)) {
                   Manifest.compact(spark, curatedDir, snap, p.targetFileBytes,
                     clusterBy = p.clusterCols, partitionBy = Some(partitionCols))
                 }

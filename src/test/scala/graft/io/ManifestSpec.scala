@@ -471,27 +471,49 @@ class ManifestSpec extends AnyFunSuite {
       op
       ManifestProbeFS.opens.get
     }
-    // the three ops at depth d, d+1, d+2; each range hits live rows
+    // the six ops at depth d … d+5; each range hits live rows. The
+    // metadata commit keeps the head's files, so restoring the version
+    // before it leaves the rows as they were
     def ops(tag: String, lo: Int): Seq[Long] = Seq(
       opens(Manifest.append(Seq(2000L + lo).toDF("id"), dir, s"ap-$tag")),
       opens(Manifest.deleteRange(spark, dir, "id", s"$lo", s"${lo + 4}",
         s"cow-$tag")),
       opens(Manifest.deleteRangeMOR(spark, dir, "id", s"${lo + 50}",
-        s"${lo + 54}", s"mor-$tag")))
+        s"${lo + 54}", s"mor-$tag")),
+      opens(Manifest.commitMetadata(spark, dir, s"meta-$tag")(_ => None)),
+      opens(Manifest.restoreTo(spark, dir,
+        Right(Manifest.head(spark, dir).get.seq - 1))),
+      opens(replayEpoch(s"ep-$tag", 3000L + lo)))
+    // a replayed streaming epoch: a crashed attempt's orphan, the
+    // dedupe, the re-promoted files, the commit
+    def replayEpoch(snap: String, id: Long): Unit = {
+      Seq(id).toDF("id").write.parquet(s"$dir/data-$snap")
+      assert(Manifest.prepareReplay(spark, dir, snap))
+      Seq(id).toDF("id").coalesce(1).write.parquet(s"$dir/data-$snap")
+      val fs = new Path(s"$dir/data-$snap")
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Manifest.commitLandedAppend(spark, dir, snap,
+        fs.listStatus(new Path(s"$dir/data-$snap")).toSeq.map(_.getPath.getName)
+          .filter(_.endsWith(".parquet")).map(f => s"data-$snap/$f"))
+    }
     deepen(10)
     val shallow = ops("a", 0)
     deepen(20)
     val deep = ops("b", 5)
-    // ten more retained manifests cost ten more opens per op: one
-    // parse of each per commit. The depth-independent opens (the head
-    // read, the embedded-meta cache fill) cancel in the difference.
-    Seq("append", "deleteRange", "deleteRangeMOR").zipWithIndex.foreach {
-      case (op, i) =>
-        assert(deep(i) - shallow(i) == 10,
+    // ten more retained manifests cost ten more opens per parse: one
+    // parse of each per commit, two for the epoch (its dedupe and its
+    // commit). The depth-independent opens (the head reads, the
+    // embedded-meta cache fill) cancel in the difference.
+    Seq("append" -> 10, "deleteRange" -> 10, "deleteRangeMOR" -> 10,
+        "commitMetadata" -> 10, "restore by version" -> 10,
+        "replayed epoch" -> 20).zipWithIndex.foreach {
+      case ((op, more), i) =>
+        assert(deep(i) - shallow(i) == more,
           s"$op: ${shallow(i)} manifest opens at depth ${10 + i}, " +
             s"${deep(i)} at depth ${20 + i}")
     }
-    assert(Manifest.read(spark, dir).count() == 100 - 20 + n + 2)
+    assert(!Manifest.prepareReplay(spark, dir, "ep-b"))
+    assert(Manifest.read(spark, dir).count() == 100 - 20 + n + 4)
   }
 
   test("commits and a vacuum during a landing: an append rebases, an " +
@@ -626,7 +648,7 @@ class ManifestSpec extends AnyFunSuite {
     assert(files.exists(_.startsWith("data-ap-winner/p=1/")))
   }
 
-  test("race matrix: RESTORE and a metadata commit refuse a racing append") {
+  test("race matrix: RESTORE refuses a racing append") {
     val dir = tmpDir()
     Manifest.write((1 to 10).toDF("v"), dir, "s1")
     Manifest.append((11 to 20).toDF("v"), dir, "s2")
@@ -636,12 +658,54 @@ class ManifestSpec extends AnyFunSuite {
     }
     assert(Manifest.snapshots(spark, dir) == Seq("s1", "s2", "ap1"))
     assert(Manifest.read(spark, dir).as[Int].collect().sorted.toSeq == (1 to 30))
-    intercept[java.util.ConcurrentModificationException] {
-      Manifest.commitMetadata(spark, dir, "meta1",
-        beforePublish = () => Manifest.append((31 to 40).toDF("v"), dir, "ap2"))
+  }
+
+  test("race matrix: a metadata commit re-derives over a racing append") {
+    val dir = tmpDir()
+    Manifest.write((1 to 10).toDF("v"), dir, "s1")
+    Manifest.append((11 to 20).toDF("v"), dir, "s2")
+    var raced = false
+    var heads = Seq.empty[String]
+    Manifest.commitMetadata(spark, dir, "meta1", beforePublish = () =>
+      if (!raced) {
+        raced = true
+        Manifest.append((31 to 40).toDF("v"), dir, "ap2")
+      }) { priors =>
+      heads :+= priors.last.snapshot
+      None
     }
-    assert(Manifest.snapshots(spark, dir) == Seq("s1", "s2", "ap1", "ap2"))
-    assert(Manifest.read(spark, dir).as[Int].collect().sorted.toSeq == (1 to 40))
+    assert(heads == Seq("s2", "ap2"), "derive runs once per attempt")
+    assert(Manifest.snapshots(spark, dir) == Seq("s1", "s2", "ap2", "meta1"))
+    assert(Manifest.read(spark, dir).as[Int].collect().sorted.toSeq ==
+      (1 to 20) ++ (31 to 40))
+  }
+
+  test("a data commit refuses to rebase over a metadata commit it never read") {
+    val wh = tmpDir()
+    spark.conf.set("spark.sql.catalog.mcat", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.mcat.warehouse", wh)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS mcat.db")
+    spark.sql("CREATE TABLE mcat.db.chk (v INT) USING graft")
+    spark.sql("INSERT INTO mcat.db.chk VALUES (1)")
+    val dir = s"$wh/db/chk"
+    // the append's constraint gate ran before the ALTER committed, so a
+    // rebase would publish a row the new constraint forbids
+    var raced = false
+    val ex = intercept[java.util.ConcurrentModificationException] {
+      Manifest.appendImpl(Seq(-5).toDF("v"), dir, "ap", () => if (!raced) {
+        raced = true
+        spark.sql("ALTER TABLE mcat.db.chk ADD CONSTRAINT pos CHECK (v > 0)")
+      })
+    }
+    assert(ex.getMessage.contains("metadata commit"), ex.getMessage)
+    assert(!Manifest.snapshots(spark, dir).contains("ap"))
+    assert(Manifest.checkConstraints(spark, dir).map(_._1) == Seq("pos"))
+    // re-run, the append reads the constraint
+    intercept[IllegalStateException] {
+      Manifest.append(Seq(-7).toDF("v"), dir, "ap2")
+    }
+    Manifest.append(Seq(7).toDF("v"), dir, "ap3")
+    assert(Manifest.read(spark, dir).as[Int].collect().sorted.toSeq == Seq(1, 7))
   }
 
   test("duplicate snapshot ids and never-committed reads are refused") {
