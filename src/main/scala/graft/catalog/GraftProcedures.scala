@@ -136,9 +136,8 @@ private[catalog] object GraftProcedures {
       s"graft catalog: no files match where_partition " +
         s"${where.map { case (k, v) => s"$k=$v" }.mkString(",")}")
     spark.catalog.refreshByPath(dir)
-    val files = Manifest.history(spark, dir).find(_.snapshot == snap).get
-      .files.size.toLong
-    result(CompactSchema, UTF8String.fromString(snap), files)
+    result(CompactSchema, UTF8String.fromString(snap),
+      res.committedFiles.toLong)
   }
 
   def all(cat: GraftCatalog): Map[String, UnboundProcedure] = Map(

@@ -20,8 +20,9 @@ import graft.io.Manifest
  *
  * The first argument is a table NAME (resolved through the V2 catalog
  * — must load as a graft table) or a PATH (anything containing '/');
- * the second is the baseline snapshot (exclusive; `'start'` = the full
- * retained history); the optional third bounds the span (inclusive).
+ * the second is the baseline snapshot (exclusive; `'start'` = the
+ * oldest retained snapshot's rows as inserts, then every later
+ * change); the optional third bounds the span (inclusive).
  * Returns the table's columns plus `_change_type` / `_commit_version`
  * / `_commit_timestamp`, exactly as `.option("readChangeFeed", …)` —
  * same reader, same refusals (unrecorded change commits name

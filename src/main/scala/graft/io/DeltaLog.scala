@@ -341,12 +341,13 @@ object DeltaLog {
       schemaOf(m).contains(Manifest.ColumnMapping.Key)
 
     val written = Seq.newBuilder[Long]
-    ms.zipWithIndex.foreach { case (m, i) =>
+    Manifest.steps(ms).foreach { st =>
+      val m = st.m
       val dest = commitPath(ld, m.seq)
       if (!fsys.exists(dest)) {
         val dv = dvStateOf(m)
         val lines =
-          if (i == 0)
+          if (st.prev.isEmpty)
             // oldest retained version: full state (version 0's shape; a
             // vacuumed-past-0 table additionally gets a checkpoint below)
             Seq(commitInfoLine(tsOf(m), "WRITE"),
@@ -356,17 +357,15 @@ object DeltaLog {
                 mappingMaxId)) ++
               addLinesOf(m.files, dv)
           else {
-            val prevM = ms(i - 1)
+            val prevM = st.prev.get
             val prevDv = dvStateOf(prevM)
-            val prev = prevM.files
-            val removed = prev.filterNot(m.files.toSet)
-            val added = m.files.filterNot(prev.toSet)
+            val removed = st.removed
             // a carried file whose DELETE STATE changed re-commits as
             // remove + add with the new descriptor (the protocol's own
             // DV-update shape; the reader's last-wins window keeps the
             // re-add)
-            val redv = m.files.filter(f => prev.contains(f) &&
-              dv.get(f) != prevDv.get(f))
+            val redv = m.files.filterNot(st.added.toSet)
+              .filter(f => dv.get(f) != prevDv.get(f))
             val op = if (removed.isEmpty && redv.isEmpty) "APPEND" else "WRITE"
             // schema evolution: the commit that changed the snapshot
             // schema carries a fresh metaData action (the protocol's
@@ -393,23 +392,18 @@ object DeltaLog {
             // row changed" without deriving from the re-packed
             // add/remove actions. Unrecorded history keeps the diff.
             val cdc: Seq[String] =
-              if (!changeData) Nil
-              else {
-                val delChanged =
-                  m.deleteFiles.sorted != prevM.deleteFiles.sorted
-                if (removed.isEmpty && !delChanged) Nil
-                else if (m.cdcRecorded && m.cdcFiles.nonEmpty)
-                  m.cdcFiles.map(f => cdcLine(f,
-                    fsys.getFileStatus(new Path(base, f)).getLen))
-                else if (m.cdcRecorded)
-                  writeEmptyChangeData(spark, fsys, base, m.seq,
-                    Manifest.readAt(spark, dir, m.snapshot).schema)
-                    .map { case (p, sz) => cdcLine(p, sz) }
-                else writeChangeData(spark, fsys, base, m.seq,
-                  Manifest.readAt(spark, dir, m.snapshot),
-                  Manifest.readAt(spark, dir, prevM.snapshot))
+              if (!changeData || st.additive) Nil
+              else if (m.cdcRecorded && m.cdcFiles.nonEmpty)
+                m.cdcFiles.map(f => cdcLine(f,
+                  fsys.getFileStatus(new Path(base, f)).getLen))
+              else if (m.cdcRecorded)
+                writeEmptyChangeData(spark, fsys, base, m.seq,
+                  Manifest.readAt(spark, dir, m.snapshot).schema)
                   .map { case (p, sz) => cdcLine(p, sz) }
-              }
+              else writeChangeData(spark, fsys, base, m.seq,
+                Manifest.readAt(spark, dir, m.snapshot),
+                Manifest.readAt(spark, dir, prevM.snapshot))
+                .map { case (p, sz) => cdcLine(p, sz) }
             Seq(commitInfoLine(tsOf(m), op)) ++
               (if (dv.nonEmpty) Seq(dvProtocolLine(changeData, mapped(m)))
               else if (mapped(m) && !mapped(prevM))
@@ -419,7 +413,7 @@ object DeltaLog {
               metaChange ++ cdc ++
               (removed ++ redv).map(f =>
                 removeLine(f, now, prevDv.get(f).map(_.json))) ++
-              addLinesOf(added ++ redv, dv)
+              addLinesOf(st.added ++ redv, dv)
           }
         writeLines(fsys, dest, lines)
         written += m.seq

@@ -714,7 +714,8 @@ object IcebergExport {
       }.toMap
     }
     def tsOf(m: Manifest.ManifestData): Long = tsBySeq(m.seq)
-    val snapshots = JArray(ms.toList.map { m =>
+    val snapshots = JArray(Manifest.steps(ms).toList.map { st =>
+      val m = st.m
       JObject(
         "snapshot-id" -> JInt(m.seq),
         "sequence-number" -> JInt(m.seq),
@@ -727,11 +728,7 @@ object IcebergExport {
         // anything that removed/re-packed files or changed delete
         // state exports as overwrite
         "summary" -> JObject("operation" -> JString(
-          if (ms.headOption.contains(m) || {
-            val prevM = ms(ms.indexOf(m) - 1)
-            !m.rewrite && prevM.files.toSet.subsetOf(m.files.toSet) &&
-              m.deleteFiles.sorted == prevM.deleteFiles.sorted
-          }) "append" else "overwrite")),
+          if (st.prev.isEmpty || st.isAppend) "append" else "overwrite")),
         "schema-id" -> JInt(snapSchemaId(m.seq)))
     })
     val metadata = JObject(

@@ -855,7 +855,7 @@ object Manifest {
       cowBase: Option[ManifestData] = None,
       cdc: Option[DataFrame] = None,
       cdcNoChange: Boolean = false,
-      landingBytes: Option[Long] = None): Unit = {
+      landingBytes: Option[Long] = None): ManifestData = {
     val spark = df.sparkSession
     val l = landing(spark, dir, snapshot, lands = true)
     val dataDir = new Path(l.base, s"data-$snapshot")
@@ -1073,17 +1073,17 @@ object Manifest {
     *
     * Test seam: `beforePublish` runs before each attempt's rename,
     * after the manifest temp file is staged — the window a concurrent
-    * writer races into. Returns the committed seq. */
+    * writer races into. Returns the published manifest. */
   private def commit(l: Landing, retry: Boolean, beforePublish: () => Unit,
       rederivesMeta: Boolean = false)(
-      derive: Seq[ManifestData] => Body): Long = {
+      derive: Seq[ManifestData] => Body): ManifestData = {
     var priors =
       if (retry && listedHeadSeq(l.fsys, l.base) > headSeq(l.priors))
         retained(l.fsys, l.base) // a commit published while this one landed
       else l.priors
     var tries = 0
-    var seq = -1L
-    while (seq < 0) {
+    var published: Option[ManifestData] = None
+    while (published.isEmpty) {
       requireFresh(priors, l.snapshot, l.dir)
       if (!rederivesMeta)
         priors.find(m => m.seq > headSeq(l.priors) && m.metaB64.isDefined)
@@ -1094,7 +1094,7 @@ object Manifest {
                 "data was derived under the table metadata before it - " +
                 "re-run the operation")
           }
-      try seq = publishManifest(l, priors, derive(priors), beforePublish)
+      try published = Some(publishManifest(l, priors, derive(priors), beforePublish))
       catch {
         case cme: java.util.ConcurrentModificationException
             if retry && !cme.isInstanceOf[TrueConflictException] &&
@@ -1103,7 +1103,7 @@ object Manifest {
           priors = retained(l.fsys, l.base) // head moved: re-read, rebase
       }
     }
-    seq
+    published.get
   }
 
   /** METADATA-ONLY commit: publish a new manifest that lists the head's
@@ -1125,7 +1125,7 @@ object Manifest {
         rederivesMeta = true) { priors =>
       val head = headOrThrow(priors.lastOption, dir)
       Body(head.files, head.deleteFiles, metaB64 = metaFor(priors))
-    }
+    }.seq
 
   /** The newest DDL commit's embedded metadata payload, scanning
     * manifests newest-first by filename seq and stopping at the first
@@ -1155,9 +1155,9 @@ object Manifest {
 
   /** The commit tail of one [[commit]] attempt: stage the manifest
     * JSON, run the test seam, check the head, publish with the one
-    * seq-keyed CAS rename. Returns the committed seq. */
+    * seq-keyed CAS rename. Returns the published manifest. */
   private def publishManifest(l: Landing, priors: Seq[ManifestData],
-      b: Body, beforePublish: () => Unit): Long = {
+      b: Body, beforePublish: () => Unit): ManifestData = {
     import l.{base, dir, fsys, snapshot}
     val seq = headSeq(priors) + 1
     // `rewrite: true` marks commits whose NEW files re-serve rows older
@@ -1172,9 +1172,10 @@ object Manifest {
     // (Delta's rule that cdc actions supersede add/remove derivation) —
     // an empty recorded list is a real statement ("no row changed":
     // compaction, zorder)
-    val json = encode(ManifestData(snapshot, seq, b.files, b.deleteFiles,
+    val published = ManifestData(snapshot, seq, b.files, b.deleteFiles,
       System.currentTimeMillis(), b.rewrite, b.metaB64, b.cdcFiles,
-      b.cdcRecorded))
+      b.cdcRecorded)
+    val json = encode(published)
     val tmp = new Path(base, s".manifest-$snapshot.tmp")
     val out = fsys.create(tmp, true)
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
@@ -1254,7 +1255,7 @@ object Manifest {
           }
         }
     }
-    seq
+    published
   }
 
   /** One lock object per table — see the local-FS TOCTOU note at the
@@ -1326,15 +1327,85 @@ object Manifest {
   def readChangesSince(spark: SparkSession, dir: String,
       since: String): Option[DataFrame] = {
     val (fsys, base) = fs(spark, dir)
-    val all = retained(fsys, base)
-    val baseline = all.find(_.snapshot == since).getOrElse(
-      throw new IllegalArgumentException(
-        s"no retained snapshot '$since' under $dir"))
-    val current = all.lastOption.get
-    refuseNonAppendSpan(all, baseline, since, dir)
-    val newFiles = current.files.filterNot(baseline.files.toSet)
+    val (_, newFiles) = appendedSince(retained(fsys, base), since, dir,
+      s"no retained snapshot '$since' under $dir")
     if (newFiles.isEmpty) None
     else Some(readFiles(spark, dir, newFiles, declaredSchema(spark, dir)))
+  }
+
+  /** THE change-span rule — every incremental face ([[appendedSince]],
+    * [[changeFeed]], the streaming source, the Delta and Iceberg
+    * exports) judges a commit with it: what commit `m` did to `prev`,
+    * the retained commit before it (None for the oldest retained one,
+    * judged as landing on an empty table): the data files it added and
+    * removed, and whether it changed merge-on-read delete state. `m`
+    * carries its own change record (`rewrite`, `cdcRecorded`,
+    * `cdcFiles`). */
+  private[graft] final case class Step(prev: Option[ManifestData],
+      m: ManifestData) {
+    private def prevFiles = prev.fold(Seq.empty[String])(_.files)
+    lazy val added: Seq[String] = m.files.filterNot(prevFiles.toSet)
+    lazy val removed: Seq[String] = prevFiles.filterNot(m.files.toSet)
+    lazy val deletesChanged: Boolean =
+      prev.exists(_.deleteFiles.sorted != m.deleteFiles.sorted)
+    /** Nothing removed, delete state unchanged: the commit only added
+      * files (or none). */
+    def additive: Boolean = removed.isEmpty && !deletesChanged
+    /** An additive commit that re-packs no old rows: its added files
+      * ARE its change — the append-only faces serve them as new rows. */
+    def isAppend: Boolean = !m.rewrite && additive
+  }
+
+  /** The [[Step]] of every commit in `ms` (consecutive retained
+    * commits, oldest → newest), each against the commit before it. */
+  private[graft] def steps(ms: Seq[ManifestData]): Seq[Step] =
+    ms.zip(None +: ms.map(Some(_))).map { case (m, p) => Step(p, m) }
+
+  /** Each of `steps` (a contiguous window) with the added files the
+    * window serves: all of them, except that the first `startServed`
+    * of the first step went to an earlier window and only the first
+    * `endServed` of the last belong to this one (-1 = none / whole) —
+    * how a stream splits a plain append on file boundaries. */
+  private[graft] def windowed(steps: Seq[Step], startServed: Long = -1L,
+      endServed: Long = -1L): Seq[(Step, Seq[String])] =
+    steps.zipWithIndex.map { case (st, i) =>
+      val upto =
+        if (i == steps.size - 1 && endServed >= 0) endServed.toInt
+        else st.added.size
+      st -> st.added.slice(if (i == 0) startServed.max(0L).toInt else 0, upto)
+    }
+
+  /** The incremental-read span, shared by [[readChangesSince]] and the
+    * `.option("changesSince", …)` relation: find the baseline `since`
+    * in `all` (else refuse with `missing`), require every later commit
+    * to be append-only, and return the head with the files it adds over
+    * the baseline. Two refusal classes — rewrite commits
+    * (compaction/COW DML re-pack pre-existing rows as "new" files), and
+    * merge-on-read DELETE commits (not rewrite-flagged, but they change
+    * position-delete state — possibly against files appended INSIDE the
+    * span, so the bare file diff would re-serve rows the span itself
+    * deleted). A blind overwrite passes: the diff never re-serves rows
+    * the baseline held, because a file lives only in the snapshots that
+    * list it. */
+  private[graft] def appendedSince(all: Seq[ManifestData], since: String,
+      dir: String, missing: => String): (ManifestData, Seq[String]) = {
+    val baseline = all.find(_.snapshot == since).getOrElse(
+      throw new IllegalArgumentException(missing))
+    val span = steps(all).filter(_.m.seq > baseline.seq)
+    span.find(_.m.rewrite).foreach(st =>
+      throw new IllegalStateException(
+        s"cannot serve changes since '$since' under $dir: commit " +
+          s"'${st.m.snapshot}' (seq ${st.m.seq}) is a rewrite (compaction/COW " +
+          "DML) whose files re-pack pre-existing rows - re-baseline on a " +
+          "snapshot at or after it"))
+    span.find(_.deletesChanged).foreach(st =>
+      throw new IllegalStateException(
+        s"cannot serve changes since '$since' under $dir: commit " +
+          s"'${st.m.snapshot}' (seq ${st.m.seq}) changed merge-on-read delete " +
+          "state, so the appended-file diff would serve rows the span " +
+          "deleted - compact, then re-baseline on a snapshot at or " +
+          "after it"))
+    (all.last, Step(Some(baseline), all.last).added)
   }
 
   // ---- change data feed (round 13) --------------------------------------
@@ -1345,12 +1416,28 @@ object Manifest {
   private[graft] val CdfVersionCol = "_commit_version"
   private[graft] val CdfTimestampCol = "_commit_timestamp"
 
+  /** The change-feed schema: `table`'s columns, then `_change_type`,
+    * `_commit_version` and `_commit_timestamp`. */
+  private[graft] def cdfSchema(
+      table: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(table.fields ++ Seq(
+      StructField(CdfTypeCol, StringType, nullable = true),
+      StructField(CdfVersionCol, LongType, nullable = false),
+      StructField(CdfTimestampCol, TimestampType, nullable = true)))
+  }
+
   /** ROW-LEVEL change feed: every change committed AFTER retained
-    * snapshot `since` (exclusive; `"start"` = the full retained
-    * history) up to `until` (inclusive; default head), typed by
-    * `_change_type` ∈ {insert, delete, update_preimage,
+    * snapshot `since` (exclusive) up to `until` (inclusive; default
+    * head), typed by `_change_type` ∈ {insert, delete, update_preimage,
     * update_postimage} and stamped with `_commit_version` (the commit
-    * seq) and `_commit_timestamp`. This is the face that serves what
+    * seq) and `_commit_timestamp`. `"start"` serves the OLDEST RETAINED
+    * snapshot's live rows (its position deletes applied) as `insert`,
+    * stamped with that commit's version, then the changes of every
+    * later commit — on a never-vacuumed table, the whole history; after
+    * a vacuum, the state the retained history starts from (Delta's
+    * streaming-CDF start rule). This is the face that serves what
     * [[readChangesSince]] refuses: DML commits record their row-level
     * change as `cdc-<snapshot>/` parquet at commit time (COW
     * DELETE/UPDATE/MERGE, MOR deletes — changed rows, never the table),
@@ -1371,8 +1458,8 @@ object Manifest {
     val (fsys, base) = fs(spark, dir)
     val all = retained(fsys, base)
     require(all.nonEmpty, s"no committed snapshot under $dir")
-    val baseline: ManifestData =
-      if (since == "start") ManifestData("start", all.head.seq - 1, Nil)
+    val baseline =
+      if (since == "start") all.head
       else all.find(_.snapshot == since).getOrElse(
         throw new IllegalArgumentException(
           s"no retained snapshot '$since' under $dir " +
@@ -1383,42 +1470,54 @@ object Manifest {
     require(endM.seq >= baseline.seq,
       s"change-feed end '${endM.snapshot}' (seq ${endM.seq}) precedes " +
         s"baseline '$since' (seq ${baseline.seq}) under $dir")
-    val span = all.filter(m => m.seq > baseline.seq && m.seq <= endM.seq)
-    val declared = declaredSchemaAt(spark, dir, endM.seq)
-    val schema = declared.getOrElse(
+    val schema = declaredSchemaAt(spark, dir, endM.seq).getOrElse(
       readFiles(spark, dir, endM.files).schema)
-    val ctSchema = org.apache.spark.sql.types.StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField(CdfTypeCol,
-        org.apache.spark.sql.types.StringType, nullable = true))
+    changeFeed(spark, dir, schema, Option.when(since == "start")(baseline),
+      steps(all).filter(st => st.m.seq > baseline.seq && st.m.seq <= endM.seq)) {
+      st => throw new IllegalStateException(
+        s"cannot serve the change feed since '$since' under $dir: " +
+          s"commit '${st.m.snapshot}' (seq ${st.m.seq}) changed rows without " +
+          "a recorded change-data record (an overwrite, a restore, or " +
+          "history predating CDF recording) - re-baseline on a " +
+          "snapshot at or after it")
+    }
+  }
+
+  /** THE change-feed slicer, shared by [[readChangeFeed]] and the
+    * streaming source's change-feed batches: one frame under
+    * `cdfSchema(table)` holding `initial`'s live rows as `insert`
+    * (a snapshot served whole), then each step's change — its recorded
+    * change record when it has one (served whole), the `insert`s of its
+    * added files ([[windowed]] by `startServed`/`endServed`) when it is
+    * a plain append, else `unrecorded(step)`, which throws to refuse or
+    * returns to serve nothing. Every row is stamped with its commit's
+    * `_commit_version` / `_commit_timestamp`. */
+  private[graft] def changeFeed(spark: SparkSession, dir: String,
+      table: org.apache.spark.sql.types.StructType,
+      initial: Option[ManifestData], steps: Seq[Step],
+      startServed: Long = -1L, endServed: Long = -1L)(
+      unrecorded: Step => Unit): DataFrame = {
+    val full = cdfSchema(table)
+    // the recorded change records carry the table columns + `_change_type`
+    val recorded = org.apache.spark.sql.types.StructType(full.fields.dropRight(2))
+    def inserts(df: DataFrame) = df.withColumn(CdfTypeCol, F.lit("insert"))
     def stamped(df: DataFrame, m: ManifestData): DataFrame =
       df.withColumn(CdfVersionCol, F.lit(m.seq))
         .withColumn(CdfTimestampCol, F.timestamp_millis(F.lit(m.committedAt)))
-    val slices = (baseline +: span).sliding(2).toSeq.flatMap {
-      case Seq(prev, m) =>
-        val removed = !prev.files.forall(m.files.toSet)
-        val morChanged = m.deleteFiles.sorted != prev.deleteFiles.sorted
+    val first = initial.filter(_.files.nonEmpty).map(m => stamped(inserts(
+      readFilesApplyingDeletes(spark, dir, m.files, m.deleteFiles, Some(table))), m))
+    val slices = first.toSeq ++
+      windowed(steps, startServed, endServed).flatMap { case (st, added) =>
+        val m = st.m
         if (m.cdcRecorded) {
           if (m.cdcFiles.isEmpty) None
-          else Some(stamped(
-            readFiles(spark, dir, m.cdcFiles, Some(ctSchema)), m))
-        } else if (!m.rewrite && !removed && !morChanged) {
-          val added = m.files.filterNot(prev.files.toSet)
-          if (added.isEmpty) None // metadata-only commit
-          else Some(stamped(readFiles(spark, dir, added, Some(schema))
-            .withColumn(CdfTypeCol, F.lit("insert")), m))
-        } else throw new IllegalStateException(
-          s"cannot serve the change feed since '$since' under $dir: " +
-            s"commit '${m.snapshot}' (seq ${m.seq}) changed rows without " +
-            "a recorded change-data record (an overwrite, a restore, or " +
-            "history predating CDF recording) - re-baseline on a " +
-            "snapshot at or after it")
-      case _ => None // empty span
-    }
-    val full = org.apache.spark.sql.types.StructType(ctSchema.fields ++ Seq(
-      org.apache.spark.sql.types.StructField(CdfVersionCol,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(CdfTimestampCol,
-        org.apache.spark.sql.types.TimestampType, nullable = true)))
+          else Some(stamped(readFiles(spark, dir, m.cdcFiles, Some(recorded)), m))
+        } else if (st.isAppend) {
+          // nothing added: a metadata-only commit
+          Option.when(added.nonEmpty)(
+            stamped(inserts(readFiles(spark, dir, added, Some(table))), m))
+        } else { unrecorded(st); None }
+      }
     if (slices.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
@@ -1426,36 +1525,6 @@ object Manifest {
       // one column order for every slice — union is positional-safe
       .map(df => df.select(full.fieldNames.map(n => F.col(s"`$n`")).toSeq: _*))
       .reduce(_.unionByName(_))
-  }
-
-  /** The incremental-read span guard, shared by [[readChangesSince]]
-    * and the `.option("changesSince", …)` relation: every commit after
-    * the baseline must be a pure APPEND. Two refusal classes — rewrite
-    * commits (compaction/COW DML re-pack pre-existing rows as "new"
-    * files), and merge-on-read DELETE commits (ADVICE r12: not
-    * rewrite-flagged, but they change position-delete state — possibly
-    * against files appended INSIDE the span, so the bare file diff
-    * would re-serve rows the span itself deleted). Mirrors the stream
-    * face's morChanged check (GraftStreaming). */
-  private[graft] def refuseNonAppendSpan(all: Seq[ManifestData],
-      baseline: ManifestData, since: String, dir: String): Unit = {
-    val span = all.filter(_.seq > baseline.seq)
-    span.find(_.rewrite).foreach(m =>
-      throw new IllegalStateException(
-        s"cannot serve changes since '$since' under $dir: commit " +
-          s"'${m.snapshot}' (seq ${m.seq}) is a rewrite (compaction/COW " +
-          "DML) whose files re-pack pre-existing rows - re-baseline on a " +
-          "snapshot at or after it"))
-    (baseline +: span).sliding(2).foreach {
-      case Seq(prev, m) if m.deleteFiles.sorted != prev.deleteFiles.sorted =>
-        throw new IllegalStateException(
-          s"cannot serve changes since '$since' under $dir: commit " +
-            s"'${m.snapshot}' (seq ${m.seq}) changed merge-on-read delete " +
-            "state, so the appended-file diff would serve rows the span " +
-            "deleted - compact, then re-baseline on a snapshot at or " +
-            "after it")
-      case _ => ()
-    }
   }
 
   /** Time travel: read a RETAINED snapshot exactly as committed.
@@ -1510,11 +1579,12 @@ object Manifest {
   }
 
   /** Result of a copy-on-write [[deleteRange]]/[[updateRange]]/[[compact]]
-    * commit: which files were rewritten vs carried untouched, and the new
+    * commit: which files were rewritten vs carried untouched, the new
     * snapshot's id (None = the prune proved NO file could match — the
-    * table is untouched, no commit). */
+    * table is untouched, no commit), and the file count of the snapshot
+    * the winning attempt published (0 without a commit). */
   final case class CowRewrite(rewritten: Seq[String], carried: Seq[String],
-      committed: Option[String])
+      committed: Option[String], committedFiles: Int)
 
   /** The shared copy-on-write core: the range split ([[rangeSplit]])
     * divides the current snapshot into files that MAY hold a row with
@@ -1532,7 +1602,7 @@ object Manifest {
     require(cur.files.nonEmpty, s"no committed snapshot under $dir")
     val (touch, keep, inRange) =
       rangeSplit(spark, dir, cur.files, column, lo, hi)
-    if (touch.isEmpty) return CowRewrite(Nil, keep, None)
+    if (touch.isEmpty) return CowRewrite(Nil, keep, None, 0)
     // basePath read: a partitioned file's hive columns come back as real
     // columns, and partitionBy on the rewrite puts them back into paths
     // — the snapshot's layout survives the DML. Existing POSITION
@@ -1543,11 +1613,11 @@ object Manifest {
     val partCols = partitionValuesOf(touch.head).map(_._1)
     val df = readFilesApplyingDeletes(spark, dir, touch, cur.deleteFiles,
       declaredSchema(spark, dir))
-    writeImpl(rewrite(df, inRange), dir, snapshot, beforePublish,
-      carriedExplicit = Some(keep), partitionCols = partCols,
+    val published = writeImpl(rewrite(df, inRange), dir, snapshot,
+      beforePublish, carriedExplicit = Some(keep), partitionCols = partCols,
       deletesExplicit = Some(cur.deleteFiles), rewrite = true,
       cowBase = Some(cur), cdc = cdcOf(df, inRange))
-    CowRewrite(touch, keep, Some(snapshot))
+    CowRewrite(touch, keep, Some(snapshot), published.files.size)
   }
 
   /** Copy-on-write DELETE of rows with `column` ∈ [lo, hi] — the
@@ -1671,7 +1741,7 @@ object Manifest {
     val scoped = where.nonEmpty
     require(scoped || cur.files.nonEmpty, s"no committed snapshot under $dir")
     val (touch, keep) = cur.files.partition(inPartitions(where))
-    if (touch.isEmpty) return CowRewrite(Nil, keep, None)
+    if (touch.isEmpty) return CowRewrite(Nil, keep, None, 0)
     val partCols = partitionBy.getOrElse(
       graft.sources.GraftSource.uniformPartitionCols(touch).getOrElse(Nil))
     require(!scoped || partCols.nonEmpty,
@@ -1695,11 +1765,11 @@ object Manifest {
     }
     // a scoped rewrite declares its carry and rebases; a whole-table
     // one carries nothing and is pinned to `cur`
-    writeImpl(laidOut, dir, snapshot, beforePublish,
+    val published = writeImpl(laidOut, dir, snapshot, beforePublish,
       carriedExplicit = Option.when(scoped)(keep), partitionCols = partCols,
       deletesExplicit = Option.when(scoped)(cur.deleteFiles), rewrite = true,
       cowBase = Some(cur), cdcNoChange = true)
-    CowRewrite(touch, keep, Some(snapshot))
+    CowRewrite(touch, keep, Some(snapshot), published.files.size)
   }
 
   /** RESTORE (Delta's `RESTORE TABLE … TO VERSION AS OF`): make a

@@ -75,18 +75,6 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
       .getOrElse("path", throw new IllegalArgumentException(
         "graft: .load(<manifest table dir>) / .option(\"path\", …) is required"))
 
-  /** The streaming CDF schema: the table's columns plus the three
-    * `_change_type`/`_commit_version`/`_commit_timestamp` metadata
-    * columns. */
-  private def cdfSchema(table: StructType): StructType =
-    StructType(table.fields ++ Seq(
-      org.apache.spark.sql.types.StructField(Manifest.CdfTypeCol,
-        org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField(Manifest.CdfVersionCol,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(Manifest.CdfTimestampCol,
-        org.apache.spark.sql.types.TimestampType, nullable = true)))
-
   private def wantsCdf(parameters: Map[String, String]): Boolean =
     parameters.map { case (k, v) => k.toLowerCase(Locale.ROOT) -> v }
       .get("readchangefeed").exists(_.toBoolean)
@@ -97,7 +85,8 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
     val dir = pathOf(parameters)
     val table = schema.getOrElse(
       Manifest.read(sqlContext.sparkSession, dir).schema)
-    (shortName(), if (wantsCdf(parameters)) cdfSchema(table) else table)
+    (shortName(),
+      if (wantsCdf(parameters)) Manifest.cdfSchema(table) else table)
   }
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
@@ -126,7 +115,7 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
     val cdf = wantsCdf(parameters)
     val table = schema.getOrElse(Manifest.read(spark, dir).schema)
     new GraftStreamSource(spark, dir,
-      if (cdf) cdfSchema(table) else table,
+      if (cdf) Manifest.cdfSchema(table) else table,
       skipChangeCommits = opts.get("skipchangecommits").exists(_.toBoolean),
       maxCommitsPerTrigger = posInt("maxcommitspertrigger", "maxCommitsPerTrigger"),
       maxFilesPerTrigger = posInt("maxfilespertrigger", "maxFilesPerTrigger"),
@@ -235,7 +224,8 @@ object GraftSource {
     // by `_change_type` — the face that serves what the plain
     // changesSince diff refuses (DML commits record their change as
     // cdc files at commit time; see [[Manifest.readChangeFeed]]).
-    // Default baseline is "start" (the full retained history).
+    // Default baseline is "start": the oldest retained snapshot's rows
+    // as inserts, then every later commit's changes.
     if (opts.get("readchangefeed").exists(_.toBoolean)) {
       require(!Seq("versionasof", "snapshotasof", "timestampasof")
           .exists(opts.contains),
@@ -321,18 +311,11 @@ object GraftSource {
       since: String, opts: Map[String, String]): BaseRelation = {
     val hist = Manifest.history(spark, dir)
     require(hist.nonEmpty, s"graft: no committed snapshot under $dir")
-    val baseline = hist.find(_.snapshot == since).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft: no retained snapshot '$since' under $dir " +
-          s"(retained: ${hist.map(_.snapshot).mkString(", ")})"))
-    val current = hist.last
-    // append-only span guard, SHARED with readChangesSince: refuses
-    // both rewrite commits and merge-on-read delete-state changes
-    // (ADVICE r12 — a MOR DELETE is not rewrite-flagged yet can target
-    // files appended inside the span, so the bare file diff would
-    // serve position-deleted rows as live changes)
-    Manifest.refuseNonAppendSpan(hist, baseline, since, dir)
-    val newFiles = current.files.filterNot(baseline.files.toSet)
+    // the span rule SHARED with readChangesSince: refuses rewrite
+    // commits and merge-on-read delete-state changes
+    val (current, newFiles) = Manifest.appendedSince(hist, since, dir,
+      s"graft: no retained snapshot '$since' under $dir " +
+        s"(retained: ${hist.map(_.snapshot).mkString(", ")})")
     val declared = Manifest.declaredSchemaAt(spark, dir, current.seq)
     if (newFiles.isEmpty) {
       val schema = declared.getOrElse(
@@ -499,10 +482,11 @@ class GraftFileIndex(spark: SparkSession, dir: String,
 /**
  * The correctness-first relation for snapshots the vectorized relation
  * cannot serve directly: merge-on-read position deletes (the anti-join
- * must apply inside the scan) and mixed flat/partitioned histories.
- * Column pruning pushes, and — [[PrunedFilteredScan]] — the planner's
- * filter conjunction is translated back to `Column` predicates and
- * planted INSIDE the library frame, under the delete anti-join, so
+ * must apply inside the scan) and mixed flat/partitioned histories — a
+ * [[GraftFrameRelation]] over the library's delete-applied read.
+ * Column pruning pushes, and the planner's filter conjunction is
+ * translated back to `Column` predicates and planted INSIDE the
+ * library frame, under the delete anti-join, so
  * Catalyst pushes it all the way into the inner parquet scans: hive
  * partition directories prune at file-listing time and row groups skip
  * on footer bounds, exactly as on the fast path. (Filtering the DATA
@@ -521,16 +505,13 @@ class GraftFileIndex(spark: SparkSession, dir: String,
 class GraftMorRelation(spark: SparkSession, dir: String,
     m: Manifest.ManifestData,
     declaredSchema: Option[StructType] = None)
-    extends BaseRelation with PrunedFilteredScan
+    // the EXPLICIT file list, not readAt(snapshot): `m` may be a
+    // file-restricted view of the snapshot (the changesSince delta) —
+    // for a full snapshot the two are identical
+    extends GraftFrameRelation(spark, () =>
+      Manifest.readFilesApplyingDeletes(spark, dir, m.files, m.deleteFiles,
+        declaredSchema.orElse(Manifest.declaredSchemaAt(spark, dir, m.seq))))
     with InsertableRelation {
-  override def sqlContext: SQLContext = spark.sqlContext
-  // the EXPLICIT file list, not readAt(snapshot): `m` may be a
-  // file-restricted view of the snapshot (the changesSince delta) —
-  // for a full snapshot the two are identical
-  private lazy val frame: DataFrame =
-    Manifest.readFilesApplyingDeletes(spark, dir, m.files, m.deleteFiles,
-      declaredSchema.orElse(Manifest.declaredSchemaAt(spark, dir, m.seq)))
-  override lazy val schema: StructType = frame.schema
   /** The manifest table root / pinned snapshot — the SQL DML rewrite's
     * coordinates (same contract as [[GraftFileIndex]]). */
   private[graft] def tableDir: String = dir
@@ -546,21 +527,6 @@ class GraftMorRelation(spark: SparkSession, dir: String,
   private[graft] def optimizedPlan
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     frame.queryExecution.optimizedPlan
-  // every filter re-evaluates above the scan (sound by construction);
-  // pushing a translated copy into the frame is a pure pruning win
-  override def unhandledFilters(filters: Array[SourceFilter]): Array[SourceFilter] =
-    filters
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[SourceFilter]): RDD[Row] = {
-    val filtered = GraftFilterTranslate.conjunction(filters) match {
-      case Some(cond) => frame.where(cond)
-      case None => frame
-    }
-    val pruned =
-      if (requiredColumns.isEmpty) filtered.select()
-      else filtered.select(requiredColumns.toSeq.map(frame.col): _*)
-    pruned.rdd
-  }
   /** SQL INSERT keeps the snapshot's own hive layout (ADVICE r9: a
     * Nil here landed FLAT files into a partitioned MOR table,
     * permanently demoting it to mixed-layout reads and killing
@@ -573,19 +539,21 @@ class GraftMorRelation(spark: SparkSession, dir: String,
 }
 
 /**
- * A relation over a COMPUTED library frame (the change feed): same
- * pushdown contract as [[GraftMorRelation]] — every planner filter is
- * translated back into the frame (partition dirs prune at listing
- * time, row groups skip on footer bounds) AND declared unhandled, so
- * Spark re-verifies row-level above the scan. Lazy: the frame (and its
- * span validation) materializes on first planning, not at
- * relation-resolution time.
+ * A relation over a COMPUTED library frame (the change feed, a
+ * [[GraftMorRelation]]'s snapshot read) — THE pushdown relation:
+ * column pruning pushes, and every planner filter is translated back
+ * into the frame (partition dirs prune at listing time, row groups skip
+ * on footer bounds) AND declared unhandled, so Spark re-verifies
+ * row-level above the scan. Lazy: the frame (and its span validation)
+ * materializes on first planning, not at relation-resolution time.
  */
 private[graft] class GraftFrameRelation(spark: SparkSession,
     frameF: () => DataFrame) extends BaseRelation with PrunedFilteredScan {
   override def sqlContext: SQLContext = spark.sqlContext
-  private lazy val frame: DataFrame = frameF()
+  protected lazy val frame: DataFrame = frameF()
   override lazy val schema: StructType = frame.schema
+  // every filter re-evaluates above the scan (sound by construction);
+  // pushing a translated copy into the frame is a pure pruning win
   override def unhandledFilters(filters: Array[SourceFilter]): Array[SourceFilter] =
     filters
   override def buildScan(requiredColumns: Array[String],

@@ -27,7 +27,13 @@ import graft.io.Manifest
  *    file removal, or a merge-on-read delete inside the window fails
  *    LOUDLY telling the operator to re-baseline — silently re-serving
  *    re-packed rows (or skipping deletions) is how streams corrupt
- *    downstream state.
+ *    downstream state. With `readChangeFeed` the stream follows the
+ *    batch feed's `"start"` rule (Delta's streaming CDF): the initial
+ *    batch serves that starting snapshot's live rows as `insert`,
+ *    stamped with its commit, and every later window is the batch
+ *    feed's own slice of the commits in it ([[Manifest.changeFeed]]).
+ *    Every face judges a commit against its predecessor through the
+ *    one classifier, [[Manifest.Step]].
  *  - **Sink** ([[GraftSink]]): each micro-batch lands as ONE manifest
  *    commit named `stream-q<queryId8>-b<batchId>` — the
  *    `prepareReplay` dedupe (skip committed, remove orphans) turns the
@@ -149,19 +155,13 @@ class GraftStreamSource(spark: SparkSession, dir: String,
       new org.apache.hadoop.fs.Path(base, f)).getLen).sum
   }
 
-  /** Is `m` a CHANGE commit relative to `prev` (rewrite, file removal,
-    * or merge-on-read delete-state change)? Change commits never split:
-    * they are skipped or refused WHOLE. */
-  private def isChange(prev: Option[Manifest.ManifestData],
-      m: Manifest.ManifestData): Boolean =
-    m.rewrite ||
-      prev.exists(p => !p.files.forall(m.files.toSet)) ||
-      prev.exists(p => m.deleteFiles.sorted != p.deleteFiles.sorted) ||
-      // CDF mode: a commit with a recorded change record serves that
-      // record WHOLE (it cannot be sliced by added-file prefix), so
-      // admission must never split it — e.g. an insert-only MERGE is
-      // file-wise a plain append but carries cdc
-      (readChangeFeed && m.cdcFiles.nonEmpty)
+  /** Can `st` split on file boundaries? Only a commit served from its
+    * added files can: a plain append — in change-feed mode, one without
+    * a recorded change record (an insert-only MERGE is file-wise a plain
+    * append but carries a record, served WHOLE). Every other commit is
+    * a change commit: skipped, refused or served WHOLE. */
+  private def splits(st: Manifest.Step): Boolean =
+    st.isAppend && !(readChangeFeed && st.m.cdcRecorded)
 
   /** Walk the backlog, admitting until a cap would be exceeded —
     * always at least ONE FILE of progress (round 12; previously one
@@ -172,7 +172,6 @@ class GraftStreamSource(spark: SparkSession, dir: String,
     * vacuumed seqs never starve the window. */
   private def admit(hist: Seq[Manifest.ManifestData], baseSeq: Long,
       baseServed: Long): (Long, Long) = {
-    var prevM = hist.filter(_.seq < baseSeq).lastOption
     var commits = 0
     var files = 0L
     var bytes = 0L
@@ -181,21 +180,20 @@ class GraftStreamSource(spark: SparkSession, dir: String,
     var progressed = false
     val splitCaps = maxFilesPerTrigger.isDefined || maxBytesPerTrigger.isDefined
     var stop = false
-    val it = hist.filter(_.seq >= baseSeq).iterator
+    // from the base commit on, unless it was already fully served
+    val it = Manifest.steps(hist).iterator.filter(st =>
+      st.m.seq > baseSeq || (st.m.seq == baseSeq && baseServed >= 0))
     while (!stop && it.hasNext) {
-      val m = it.next()
+      val st = it.next()
+      val m = st.m
       val isBase = m.seq == baseSeq
-      if (isBase && baseServed < 0) {
-        prevM = Some(m) // base commit already fully served
-      } else if (commits > 0 &&
+      if (commits > 0 &&
           maxCommitsPerTrigger.exists(c => commits + 1 > c)) {
         stop = true
       } else {
-        val prevFiles = prevM.map(_.files.toSet).getOrElse(Set.empty[String])
-        val addedAll = m.files.filterNot(prevFiles)
         val already = if (isBase) baseServed else 0L
-        val pending = addedAll.drop(already.toInt)
-        if (isChange(prevM, m) || !splitCaps) {
+        val pending = st.added.drop(already.toInt)
+        if (!splits(st) || !splitCaps) {
           // whole-commit admission (change commits never split)
           val addedBytes =
             if (maxBytesPerTrigger.isDefined && pending.nonEmpty)
@@ -212,7 +210,6 @@ class GraftStreamSource(spark: SparkSession, dir: String,
             endSeq = m.seq
             endServed = -1L
             progressed = true
-            prevM = Some(m)
           }
         } else {
           // plain commit under a file/byte cap: file-boundary admission
@@ -235,10 +232,9 @@ class GraftStreamSource(spark: SparkSession, dir: String,
           }
           if (k > already.max(0L) || pending.isEmpty) {
             endSeq = m.seq
-            if (k >= addedAll.size) {
+            if (k >= st.added.size) {
               endServed = -1L
               commits += 1
-              prevM = Some(m)
             } else {
               endServed = k
               stop = true // mid-commit: nothing later can be served
@@ -301,49 +297,65 @@ class GraftStreamSource(spark: SparkSession, dir: String,
       throw new IllegalStateException(
         s"graft stream: offset $e is no longer retained under $dir " +
           "(vacuum outran the stream checkpoint) - re-baseline the stream"))
-    if (readChangeFeed) return getBatchCdf(start, e, ek, hist, endM)
+    // the window (start, end] as steps, led by the start commit when it
+    // was only partially served (`s#sk`: its first sk added files went
+    // to an earlier batch); None = the initial batch, always a COMPLETE
+    // commit — admission never splits it
+    val window = start.map { s0 =>
+      val (s, sk) = stateOf(s0)
+      if (!hist.exists(_.seq == s))
+        throw new IllegalStateException(
+          s"graft stream: checkpointed offset $s is no longer retained " +
+            s"under $dir (vacuum outran the stream checkpoint) - " +
+            "re-baseline the stream")
+      val steps = Manifest.steps(hist).filter(st =>
+        (st.m.seq > s && st.m.seq <= e) || (st.m.seq == s && sk >= 0))
+      steps.lastOption.filter(_ => ek >= 0).foreach(st =>
+        require(splits(st), s"graft stream: partial offset $e#$ek lands on a " +
+          (if (readChangeFeed && st.m.cdcRecorded) "recorded-cdc" else "change") +
+          s" commit '${st.m.snapshot}' (admission bug)"))
+      (steps, sk)
+    }
+    require(window.nonEmpty || ek < 0, s"graft stream: initial offset " +
+      s"$e#$ek cannot be intra-commit (admission bug)")
     // the STREAM's declared schema drives every scan (user-specified
     // schema, no footer inference): files predating an ALTER TABLE ADD
     // COLUMN null-fill inside the reader, and a later evolution cannot
     // widen the frame mid-flight — the fixed-schema stream contract
-    val hint = Some(StructType(schema.map(_.copy(nullable = true))))
-    val batch: DataFrame = start match {
+    val cdfCols =
+      Seq(Manifest.CdfTypeCol, Manifest.CdfVersionCol, Manifest.CdfTimestampCol)
+    val table = StructType(schema
+      .filterNot(f => readChangeFeed && cdfCols.contains(f.name))
+      .map(_.copy(nullable = true)))
+    val batch: DataFrame = window match {
+      // CHANGE-FEED micro-batches (Delta's streaming CDF): the initial
+      // batch is the start snapshot as `insert` rows, each later window
+      // goes through the batch feed's one slicer. A commit that changed
+      // rows WITHOUT a record (overwrite, restore, pre-CDF history)
+      // keeps the refuse/skip contract.
+      case _ if readChangeFeed =>
+        val (steps, sk) = window.getOrElse((Nil, -1L))
+        Manifest.changeFeed(spark, dir, table, Option.when(window.isEmpty)(endM),
+          steps, sk, ek) { st =>
+          if (!skipChangeCommits)
+            throw new UnsupportedOperationException(
+              s"graft stream: commit '${st.m.snapshot}' (seq ${st.m.seq}) under " +
+                s"$dir changed rows without a recorded change-data record " +
+                "(an overwrite, a restore, or history predating CDF " +
+                "recording) - re-baseline the stream, or set " +
+                "skipChangeCommits=true to skip it")
+        }
       case None =>
         // initial load: the full snapshot state at the first offset
-        // (always a COMPLETE commit — admission never splits it)
-        require(ek < 0, s"graft stream: initial offset $e#$ek cannot be " +
-          "intra-commit (admission bug)")
-        Manifest.readAt(spark, dir, endM.snapshot, hint)
-      case Some(s0) =>
-        val (s, sk) = stateOf(s0)
-        val startM = hist.find(_.seq == s).getOrElse(
-          throw new IllegalStateException(
-            s"graft stream: checkpointed offset $s is no longer retained " +
-              s"under $dir (vacuum outran the stream checkpoint) - " +
-              "re-baseline the stream"))
-        var served = Vector.empty[String]
-        // remainder of a PARTIALLY-served start commit: its added files
-        // past the checkpointed count (bounded by the end count when
-        // start and end split the same commit)
-        if (sk >= 0) {
-          val before = hist.filter(_.seq < s).lastOption
-            .map(_.files.toSet).getOrElse(Set.empty[String])
-          val addedAll = startM.files.filterNot(before)
-          val upto = if (s == e && ek >= 0) ek else addedAll.size.toLong
-          served ++= addedAll.slice(sk.toInt, upto.toInt)
-        }
-        // walk the window COMMIT BY COMMIT: each step either serves the
-        // commit's added files (ALL of them, or the end offset's prefix
-        // when the window ends mid-commit), skips a change commit
-        // (option set), or fails loudly naming the offending commit
-        var prev = startM
-        hist.filter(m => m.seq > s && m.seq <= e).foreach { m =>
-          val removed = !prev.files.forall(m.files.toSet)
-          val morChanged = m.deleteFiles.sorted != prev.deleteFiles.sorted
-          if (m.rewrite || removed || morChanged) {
-            require(!(m.seq == e && ek >= 0),
-              s"graft stream: partial offset $e#$ek lands on a change " +
-                s"commit '${m.snapshot}' (admission bug)")
+        Manifest.readAt(spark, dir, endM.snapshot, Some(table))
+      case Some((steps, sk)) =>
+        // each step serves its added files (ALL of them, or the window's
+        // share of a split commit), skips a change commit (option set),
+        // or fails loudly naming the offending commit
+        val served = Manifest.windowed(steps, sk, ek).flatMap {
+          case (st, added) if st.isAppend => added
+          case (st, _) =>
+            val m = st.m
             if (!skipChangeCommits) {
               if (m.rewrite) throw new UnsupportedOperationException(
                 s"graft stream: commit '${m.snapshot}' (seq ${m.seq}) under " +
@@ -351,7 +363,7 @@ class GraftStreamSource(spark: SparkSession, dir: String,
                   "re-pack rows the stream already served; re-baseline the " +
                   "stream, or set skipChangeCommits=true to stream on " +
                   "through maintenance")
-              else if (removed) throw new UnsupportedOperationException(
+              else if (st.removed.nonEmpty) throw new UnsupportedOperationException(
                 s"graft stream: commit '${m.snapshot}' (seq ${m.seq}) under " +
                   s"$dir removed data files - an append-only stream cannot " +
                   "represent removals; re-baseline the stream, or set " +
@@ -363,121 +375,18 @@ class GraftStreamSource(spark: SparkSession, dir: String,
                   "stream, or set skipChangeCommits=true to skip change " +
                   "commits")
             }
-            // skipChangeCommits: serve NOTHING from a change commit
-          } else {
-            val added = m.files.filterNot(prev.files.toSet)
-            served ++=
-              (if (m.seq == e && ek >= 0) added.take(ek.toInt) else added)
-          }
-          prev = m
+            Nil // skipChangeCommits: serve NOTHING from a change commit
         }
         if (served.isEmpty)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        else Manifest.readFiles(spark, dir, served, hint)
+        else Manifest.readFiles(spark, dir, served, Some(table))
     }
     // pin the stream's declared schema (a later schema-evolution commit
     // must not widen the frame mid-flight), then mark the plan
     // streaming — the V1 Source contract
     val aligned = batch.select(schema.fieldNames.map(n =>
       org.apache.spark.sql.functions.col(s"`$n`")).toSeq: _*)
-    Bridge.internalFrame(spark, aligned.queryExecution.toRdd, schema,
-      isStreaming = true)
-  }
-
-  /** CHANGE-FEED micro-batches (round 13,
-    * `.option("readChangeFeed", "true")` — Delta's streaming CDF): the
-    * initial batch is the start snapshot as `insert` rows; each later
-    * commit serves its RECORDED change record (DML commits — served
-    * whole, never split), derives `insert` rows from its added files
-    * (plain appends — still splittable under the admission caps), or
-    * serves nothing (metadata-only commits, maintenance rewrites with a
-    * recorded empty record). A commit that changed rows WITHOUT a
-    * record (overwrite, restore, pre-CDF history) keeps the existing
-    * refuse/skip contract. Every row is stamped with
-    * `_change_type` / `_commit_version` / `_commit_timestamp`. */
-  private def getBatchCdf(start: Option[V1Offset], e: Long, ek: Long,
-      hist: Seq[Manifest.ManifestData],
-      endM: Manifest.ManifestData): DataFrame = {
-    import org.apache.spark.sql.{functions => F}
-    val cdfCols =
-      Seq(Manifest.CdfTypeCol, Manifest.CdfVersionCol, Manifest.CdfTimestampCol)
-    val tableSchema = StructType(
-      schema.filterNot(f => cdfCols.contains(f.name)).map(_.copy(nullable = true)))
-    val hint = Some(tableSchema)
-    val ctHint = Some(StructType(tableSchema.fields :+
-      org.apache.spark.sql.types.StructField(Manifest.CdfTypeCol,
-        org.apache.spark.sql.types.StringType, nullable = true)))
-    def stamped(df: DataFrame, m: Manifest.ManifestData): DataFrame =
-      df.withColumn(Manifest.CdfVersionCol, F.lit(m.seq))
-        .withColumn(Manifest.CdfTimestampCol,
-          F.timestamp_millis(F.lit(m.committedAt)))
-    val slices: Seq[DataFrame] = start match {
-      case None =>
-        require(ek < 0, s"graft stream: initial offset $e#$ek cannot be " +
-          "intra-commit (admission bug)")
-        Seq(stamped(Manifest.readAt(spark, dir, endM.snapshot, hint)
-          .withColumn(Manifest.CdfTypeCol, F.lit("insert")), endM))
-      case Some(s0) =>
-        val (s, sk) = stateOf(s0)
-        val startM = hist.find(_.seq == s).getOrElse(
-          throw new IllegalStateException(
-            s"graft stream: checkpointed offset $s is no longer retained " +
-              s"under $dir (vacuum outran the stream checkpoint) - " +
-              "re-baseline the stream"))
-        val out = Vector.newBuilder[DataFrame]
-        // remainder of a partially-served start commit (a split plain
-        // append — recorded-cdc commits never split)
-        if (sk >= 0) {
-          val before = hist.filter(_.seq < s).lastOption
-            .map(_.files.toSet).getOrElse(Set.empty[String])
-          val addedAll = startM.files.filterNot(before)
-          val upto = if (s == e && ek >= 0) ek else addedAll.size.toLong
-          val rest = addedAll.slice(sk.toInt, upto.toInt)
-          if (rest.nonEmpty)
-            out += stamped(Manifest.readFiles(spark, dir, rest, hint)
-              .withColumn(Manifest.CdfTypeCol, F.lit("insert")), startM)
-        }
-        var prev = startM
-        hist.filter(m => m.seq > s && m.seq <= e).foreach { m =>
-          val removed = !prev.files.forall(m.files.toSet)
-          val morChanged = m.deleteFiles.sorted != prev.deleteFiles.sorted
-          if (m.cdcRecorded) {
-            require(!(m.seq == e && ek >= 0),
-              s"graft stream: partial offset $e#$ek lands on a " +
-                s"recorded-cdc commit '${m.snapshot}' (admission bug)")
-            if (m.cdcFiles.nonEmpty)
-              out += stamped(
-                Manifest.readFiles(spark, dir, m.cdcFiles, ctHint), m)
-          } else if (!m.rewrite && !removed && !morChanged) {
-            val added = m.files.filterNot(prev.files.toSet)
-            val take =
-              if (m.seq == e && ek >= 0) added.take(ek.toInt) else added
-            if (take.nonEmpty)
-              out += stamped(Manifest.readFiles(spark, dir, take, hint)
-                .withColumn(Manifest.CdfTypeCol, F.lit("insert")), m)
-          } else if (!skipChangeCommits) {
-            throw new UnsupportedOperationException(
-              s"graft stream: commit '${m.snapshot}' (seq ${m.seq}) under " +
-                s"$dir changed rows without a recorded change-data record " +
-                "(an overwrite, a restore, or history predating CDF " +
-                "recording) - re-baseline the stream, or set " +
-                "skipChangeCommits=true to skip it")
-          } // skipChangeCommits: serve NOTHING from an unrecorded change
-          prev = m
-        }
-        out.result()
-    }
-    val batch =
-      if (slices.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else slices
-        .map(df => df.select(schema.fieldNames.map(n =>
-          F.col(s"`$n`")).toSeq: _*))
-        .reduce(_.unionByName(_))
-    val aligned = batch.select(schema.fieldNames.map(n =>
-      F.col(s"`$n`")).toSeq: _*)
     Bridge.internalFrame(spark, aligned.queryExecution.toRdd, schema,
       isStreaming = true)
   }

@@ -187,11 +187,16 @@ object LandIngest {
           // manifest ahead; the next batch's (incremental, idempotent)
           // export catches the log up — derived state, not a second
           // commit point.
-          if (exportDeltaLog && Manifest.snapshots(spark, curatedDir).nonEmpty) {
+          lazy val committed = {
+            val p = new org.apache.hadoop.fs.Path(curatedDir)
+            Manifest.hasManifest(
+              p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+          }
+          if (exportDeltaLog && committed) {
             graft.io.DeltaLog.exportLog(spark, curatedDir)
             ()
           }
-          if (exportIceberg && Manifest.snapshots(spark, curatedDir).nonEmpty) {
+          if (exportIceberg && committed) {
             graft.io.IcebergExport.exportTable(spark, curatedDir)
             ()
           }

@@ -178,6 +178,9 @@ class GraftCdfSpec extends AnyFunSuite {
     // the retained span still serves; a dropped baseline refuses loudly
     assert(byType(cdf(dir, since = dml2)) == Map("insert" -> 10L))
     intercept[IllegalArgumentException](cdf(dir, since = "base").count())
+    // "start" serves the oldest retained snapshot's live rows as
+    // inserts, then the later commits' changes
+    assert(byType(cdf(dir, since = "start")) == Map("insert" -> 50L))
   }
 
   test("streaming: the change feed drains as typed micro-batches") {
@@ -186,15 +189,25 @@ class GraftCdfSpec extends AnyFunSuite {
     Manifest.write(
       spark.range(0, 20).toDF("id").withColumn("v", $"id" * 10),
       dir, "base")
-    def drain(): DataFrame = {
+    // every non-initial micro-batch row, per stream: uncapped, and a
+    // second stream draining one added file per trigger beside it
+    val later = Seq.fill(2)(new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.Row]())
+    val ckptCapped = tmpDir() + "/ckpt1"
+    def drain(capped: Boolean = false): DataFrame = {
       val got = new java.util.concurrent.ConcurrentLinkedQueue[
         org.apache.spark.sql.Row]()
-      spark.readStream.format("graft")
-        .option("readChangeFeed", "true").load(dir)
+      val reader = spark.readStream.format("graft")
+        .option("readChangeFeed", "true")
+      if (capped) reader.option("maxFilesPerTrigger", "1")
+      reader.load(dir)
         .writeStream
-        .foreachBatch((b: DataFrame, _: Long) =>
-          b.collect().foreach(got.add))
-        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          val rows = b.collect()
+          rows.foreach(got.add)
+          if (id > 0) rows.foreach(later(if (capped) 1 else 0).add)
+        }
+        .option("checkpointLocation", if (capped) ckptCapped else ckpt)
         .trigger(Trigger.AvailableNow())
         .start().awaitTermination()
       val rows = got.toArray(Array.empty[org.apache.spark.sql.Row])
@@ -205,9 +218,12 @@ class GraftCdfSpec extends AnyFunSuite {
     }
     // initial batch: the start snapshot as inserts
     assert(byType(drain()) == Map("insert" -> 20L))
-    // an append and a DML both flow as changes
+    drain(capped = true)
+    // an append (three files, so the capped stream splits it) and a DML
+    // both flow as changes
     Manifest.append(
-      spark.range(20, 30).toDF("id").withColumn("v", $"id" * 10),
+      spark.range(20, 30).toDF("id").withColumn("v", $"id" * 10)
+        .repartition(3),
       dir, "more")
     spark.read.format("graft").load(dir).createOrReplaceTempView("cdf_s_t")
     spark.sql("UPDATE cdf_s_t SET v = 0 WHERE id < 3")
@@ -220,6 +236,16 @@ class GraftCdfSpec extends AnyFunSuite {
     assert(m2.select("_commit_version").distinct().count() == 2)
     // a restart with nothing new serves nothing (offsets checkpointed)
     assert(drain().count() == 0)
+    // the streams' non-initial batches ARE the batch feed since the
+    // start snapshot, split or not
+    drain(capped = true)
+    def sorted(rows: Iterable[org.apache.spark.sql.Row]) =
+      rows.map(_.toSeq.mkString("|")).toSeq.sorted
+    val expected = sorted(
+      Manifest.readChangeFeed(spark, dir, "base").collect())
+    assert(expected.size == 16)
+    later.foreach(q => assert(sorted(q.toArray(
+      Array.empty[org.apache.spark.sql.Row])) == expected))
   }
 
   test("streaming: an unrecorded change commit refuses; skipChangeCommits skips") {

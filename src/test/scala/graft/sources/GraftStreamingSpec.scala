@@ -116,11 +116,18 @@ class GraftStreamingSpec extends AnyFunSuite {
     // initial batch = the full starting snapshot
     drain()
     assert(Manifest.read(spark, out).as[Int].collect().sorted.toSeq == (1 to 100))
+    val outBase = Manifest.snapshots(spark, out).last
     // append two commits; the restarted stream serves ONLY the new rows
     Manifest.append((101 to 130).toDF("v"), table, "s1")
     Manifest.append((131 to 140).toDF("v"), table, "s2")
     drain()
     assert(Manifest.read(spark, out).as[Int].collect().sorted.toSeq == (1 to 140))
+    // over the append-only span the stream served exactly the rows the
+    // incremental read serves
+    def changes(dir: String, since: String) =
+      Manifest.readChangesSince(spark, dir, since).get
+        .as[Int].collect().sorted.toSeq
+    assert(changes(out, outBase) == changes(table, "s0"))
     // no new commits: no batch, no sink commit
     val nBefore = Manifest.snapshots(spark, out).size
     drain()
